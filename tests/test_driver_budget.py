@@ -1,0 +1,133 @@
+"""Driver-side budget of the iterative checks and the session defaults.
+
+A checkpoint or a fixpoint count is taken only where its result can change
+the loop's control flow (flags.iterate_flags): one iteration takes
+neither, the last permitted round stays lazy, and early stop still
+returns the flags the eager per-round loop returned.
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.errors import ArithmeticException
+from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
+
+from titanlib_spark.operators import buddy_check, sct
+
+# the reference's 10-station Cartesian line (tests/buddy_check_test.py)
+BUDDY_VALUES = [0, 0, 0, 0, 0, 0, 0, 0, 0.1, 1]
+BUDDY_KW = dict(
+    radius=10000.0,
+    num_min=1,
+    threshold=1.0,
+    max_elev_diff=200.0,
+    elev_gradient=-0.0065,
+    min_std=0.01,
+    coord_type="cartesian",
+)
+
+
+# the reference's 3-station SCT case (tests/sct_test.py:52-60)
+SCT_KW = dict(
+    num_min=3,
+    num_max=10,
+    inner_radius=10000.0,
+    outer_radius=10000.0,
+    num_iterations=1,
+    num_min_prof=0,
+    min_elev_diff=100.0,
+    min_horizontal_scale=10000.0,
+    vertical_scale=200.0,
+    pos=2.0,
+    neg=2.0,
+    eps2=0.5,
+)
+
+
+def line_points(spark, values):
+    n = len(values)
+    rows = [(i, 0.0, 100.0 * i / (n - 1), 0.0, float(v)) for i, v in enumerate(values)]
+    return spark.createDataFrame(
+        rows, "id long, lat double, lon double, elev double, value double"
+    )
+
+
+def flags_of(df):
+    return [r.flags for r in df.select("id", "flags").orderBy("id").collect()]
+
+
+@pytest.fixture
+def count_calls(monkeypatch):
+    calls = []
+    orig = DataFrame.count
+
+    def counted(self):
+        calls.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "count", counted)
+    return calls
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _golden_sct_frame(spark):
+    lons = [10.0, 10.01, 10.02]
+    rows = [(i, 60.0, lons[i], 0.0, v) for i, v in enumerate([0.0, 1.0, 100.0])]
+    return spark.createDataFrame(
+        rows, "id long, lat double, lon double, elev double, value double"
+    )
+
+
+def test_sct_single_iteration_takes_no_checkpoint_or_count(spark, count_calls):
+    df = _golden_sct_frame(spark)
+    before = _persistent_rdd_ids(spark)
+    out = sct(df, **SCT_KW)
+    flags = {r.id: r.flags for r in out.collect()}
+    assert flags == {0: 0, 1: 0, 2: 1}
+    assert count_calls == []
+    assert _persistent_rdd_ids(spark) == before
+
+
+def test_buddy_two_iterations_counts_twice(spark, count_calls):
+    out = buddy_check(line_points(spark, BUDDY_VALUES), num_iterations=2, **BUDDY_KW)
+    assert len(count_calls) == 2  # pre-loop total + between the two rounds
+    assert flags_of(out) == [0] * 8 + [1, 1]
+
+
+@pytest.mark.parametrize(
+    "values, want, n_counts",
+    [
+        # round 3 still runs (lazily): no early stop within 3 rounds
+        (BUDDY_VALUES, [0] * 8 + [1, 1], 3),
+        # round 2 flags nothing new: early stop before round 3
+        ([0] * 9 + [1], [0] * 9 + [1], 3),
+    ],
+)
+def test_buddy_three_iterations_early_stop(spark, count_calls, values, want, n_counts):
+    out = buddy_check(line_points(spark, values), num_iterations=3, **BUDDY_KW)
+    assert flags_of(out) == want
+    assert len(count_calls) == n_counts
+
+
+def test_sct_three_iterations_early_stop(spark, count_calls):
+    kw = dict(SCT_KW, num_iterations=3)
+    rows = {r.id: r for r in sct(_golden_sct_frame(spark), **kw).collect()}
+    assert {i: r.flags for i, r in rows.items()} == {0: 0, 1: 0, 2: 1}
+    # round 2 sees two unflagged points (< num_min): nothing new, stop;
+    # its verdicts (no neighborhood evaluated) are what is returned
+    assert all(r.prob_gross_error is None for r in rows.values())
+    assert len(count_calls) == 3
+
+
+def test_session_debugging_off_and_ansi_errors_keep_their_class(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    with pytest.raises(ArithmeticException) as exc:
+        spark.range(1).select((F.col("id") + 1) / F.col("id")).collect()
+    assert exc.value.getCondition() == "DIVIDE_BY_ZERO"

@@ -163,6 +163,14 @@ def test_checkpoint_resume(spark, tmp_path):
     assert s1["parts_completed"] == 8
     assert s1["n_docs"] == 600
     assert completed_parts(spark, out) == set(range(8))
+    progress = spark.read.parquet(f"{out}/_progress")
+    assert dict(progress.dtypes) == {
+        "part_id": "int", "n_docs": "bigint", "n_keep": "bigint",
+        "n_drop": "bigint", "n_scrubbed": "bigint", "run_id": "string",
+        "config_json": "string", "completed_ts": "timestamp", "wall_s": "double",
+    }
+    assert progress.where(F.col("run_id") == s1["run_id"]).count() == 8
+    assert progress.agg(F.sum("n_docs")).first()[0] == 600
     # second run: everything already done -> no work
     s2 = run_partitioned(spark, pages, out, n_parts=8, cfg=cfg)
     assert s2["parts_skipped"] == 8

@@ -17,6 +17,8 @@ touches rows whose current flag is 0).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -53,4 +55,38 @@ def apply_check_flags(
 def ensure_flags(df: DataFrame, flag_col: str = FLAG_COL) -> DataFrame:
     if flag_col not in df.columns:
         df = df.withColumn(flag_col, F.lit(GOOD))
+    return df
+
+
+def iterate_flags(
+    df: DataFrame,
+    one_round: Callable[[DataFrame], DataFrame],
+    num_iterations: int,
+    flag_col: str = FLAG_COL,
+) -> DataFrame:
+    """Driver-side fixpoint loop of the iterative checks: apply
+    `one_round` (flags snapshot in, flags out) up to `num_iterations`
+    times, stopping early when a round flags nothing new (reference
+    src/buddy_check.cpp:161-176, src/sct.cpp:294-299).
+
+    A checkpoint (flags snapshot) and a count (fixpoint test) are taken
+    only BETWEEN rounds, where their result can change control flow: a
+    single iteration takes neither, and the last permitted round returns
+    its plan lazily (rules 26 and 32). The checkpoints are lazy, so the
+    count that follows materializes each one in the same job."""
+    n = int(num_iterations)
+    if n > 1:
+        df = df.localCheckpoint(eager=False)
+        prev_bad = df.where(F.col(flag_col) != GOOD).count()
+    for i in range(n):
+        new_df = one_round(df)
+        if i == n - 1:
+            return new_df
+        new_df = new_df.localCheckpoint(eager=False)
+        n_bad = new_df.where(F.col(flag_col) != GOOD).count()
+        df.unpersist()  # rule 17: dead checkpoint blocks squeeze exec memory
+        df = new_df
+        if n_bad == prev_bad:
+            break
+        prev_bad = n_bad
     return df

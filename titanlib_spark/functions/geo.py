@@ -117,6 +117,25 @@ def _cell_cols(x: Column, y: Column, z: Column, cell_size: float) -> list[Column
     ]
 
 
+_OFFSETS = [
+    (dx, dy, dz) for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dz in (-1, 0, 1)
+]
+
+
+def cell_offsets(half: bool = False) -> Column:
+    """Array of (dx, dy, dz) structs: the 27 cells adjacent to a grid cell
+    (itself included), or with `half` only (0,0,0) plus the 13
+    lexicographically positive offsets (one of +o/-o per pair, for
+    symmetric pair generation). Built as one SQL literal — one py4j call
+    where a tree of F.struct(F.lit(...)) costs ~100."""
+    offs = [(0, 0, 0)] + [o for o in _OFFSETS if o > (0, 0, 0)] if half else _OFFSETS
+    return F.expr(
+        "array("
+        + ", ".join(f"named_struct('dx', {dx}, 'dy', {dy}, 'dz', {dz})" for dx, dy, dz in offs)
+        + ")"
+    )
+
+
 def neighbor_pairs(
     df: DataFrame,
     radius,
@@ -256,19 +275,6 @@ def undirected_neighbor_pairs(
         *_cell_cols(F.col("x"), F.col("y"), F.col("z"), cell_size),
     )
 
-    half_offsets = [(0, 0, 0)] + [
-        (dx, dy, dz)
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-        for dz in (-1, 0, 1)
-        if (dx, dy, dz) > (0, 0, 0)
-    ]
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dz).alias("dz"))
-            for dx, dy, dz in half_offsets
-        ]
-    )
     left = (
         pts.select(
             F.col(id_col).alias("_ida"),
@@ -279,7 +285,7 @@ def undirected_neighbor_pairs(
             *[F.col(c).alias(f"_pa_{c}") for c in carry_cols],
             *_cell_cols(F.col("x"), F.col("y"), F.col("z"), cell_size),
         )
-        .withColumn("_o", F.explode(offsets))
+        .withColumn("_o", F.explode(cell_offsets(half=True)))
         .select(
             "_ida", "_ax", "_ay", "_az", "_ra",
             *[f"_pa_{c}" for c in carry_cols],
@@ -358,16 +364,6 @@ def _asym_radius_pairs(
     to its 27 adjacent cells and is expected to be SMALL (a deficit set) —
     the caller broadcasts it so the corpus never shuffles. Coincident
     points (dist == 0) are excluded, mirroring neighbor_pairs."""
-    offsets = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dz).alias("dz")
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-            for dz in (-1, 0, 1)
-        ]
-    )
     q = (
         queries.select(
             F.col(id_col),
@@ -376,7 +372,7 @@ def _asym_radius_pairs(
             F.col("z").alias("_qz"),
             *_cell_cols(F.col("x"), F.col("y"), F.col("z"), radius),
         )
-        .withColumn("_o", F.explode(offsets))
+        .withColumn("_o", F.explode(cell_offsets()))
         .select(
             id_col, "_qx", "_qy", "_qz",
             (F.col("_cx") + F.col("_o.dx")).alias("_cx"),

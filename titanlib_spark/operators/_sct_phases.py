@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from titanlib_spark.flags import BAD, GOOD
+from titanlib_spark.functions.geo import cell_offsets
 
 NA_STATE = -999  # reference: flags start at -999 = not checked
 
@@ -108,16 +109,8 @@ def three_phase_driver(
             .select("_cx", "_cy", "_cz")
             .distinct()
         )
-        offsets = F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dz).alias("dz"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-                for dz in (-1, 0, 1)
-            ]
-        )
         replicated = (
-            cell.withColumn("_o", F.explode(offsets))
+            cell.withColumn("_o", F.explode(cell_offsets()))
             .withColumn(
                 "_score",
                 (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0) & (F.col("_o.dz") == 0),

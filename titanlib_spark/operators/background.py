@@ -50,15 +50,18 @@ def _nelder_mead(f, x0: np.ndarray, max_iter: int = 100, size_tol: float = 1e-2)
         pts.append(p)
     simplex = np.array(pts)
     fvals = np.array([f(p) for p in simplex])
+    # means as np.add.reduce / count: np.mean's own arithmetic
+    # (bit-identical) without its per-call wrapper cost
     for _ in range(max_iter):
         order = np.argsort(fvals)
         simplex, fvals = simplex[order], fvals[order]
         # size: average distance from centroid (gsl's size measure analogue)
-        centroid_all = simplex.mean(axis=0)
-        size = np.mean(np.sqrt(((simplex - centroid_all) ** 2).sum(axis=1)))
+        centroid_all = np.add.reduce(simplex) / (n + 1)
+        d = simplex - centroid_all
+        size = np.add.reduce(np.sqrt(np.add.reduce(d * d, axis=1))) / (n + 1)
         if size < size_tol:
             break
-        c = simplex[:-1].mean(axis=0)
+        c = np.add.reduce(simplex[:-1]) / n
         xr = c + (c - simplex[-1])
         fr = f(xr)
         if fr < fvals[0]:
@@ -100,7 +103,9 @@ def _full_profile(elevs, t0, gamma, a, h0, h1i):
 
 
 def _rms_objective(pred: np.ndarray, values: np.ndarray) -> float:
-    value = np.sqrt(np.mean((pred - values) ** 2))
+    # paid per simplex point: np.mean's arithmetic, not its wrapper cost
+    d = pred - values
+    value = np.sqrt(np.add.reduce(d * d) / d.size)
     return float(np.log(max(value, 1e-6)))
 
 

@@ -15,8 +15,9 @@ iteration flags nothing new (src/buddy_check.cpp:161-176).
 Spark plan per iteration: one grid-join shuffle + one groupBy(id)
 aggregation (map-side partial agg), then a left join of the per-id stats
 back onto the frame — all JVM-side expressions, no Python. The fixpoint
-loop is driver-side control flow with localCheckpoint() per round to cut
-lineage (a handful of rounds in practice thanks to early stop).
+loop is driver-side control flow (flags.iterate_flags): a checkpoint
+snapshots the flags and a count tests the fixpoint only between rounds
+(a handful of rounds in practice thanks to early stop).
 """
 
 from __future__ import annotations
@@ -24,7 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from titanlib_spark.flags import BAD, GOOD, apply_check_flags, ensure_flags
+from titanlib_spark.flags import (
+    BAD,
+    GOOD,
+    apply_check_flags,
+    ensure_flags,
+    iterate_flags,
+)
 from titanlib_spark.functions.geo import undirected_neighbor_pairs
 from titanlib_spark.operators.range_check import is_invalid_value
 
@@ -325,16 +332,7 @@ def buddy_check(
         df, F.when(is_invalid_value(F.col(value_col)), BAD).otherwise(GOOD), flag_col
     )
 
-    # iterating needs a flags snapshot per round (checkpoint) and a
-    # fixpoint count; a single iteration needs neither — the one-pass plan
-    # stays lazy (the input scan is recomputed by the stats branch, far
-    # cheaper than two eager checkpoints + two count jobs, rule 26), and
-    # the un-checkpointed stats side keeps its AQE size estimate
-    iterate = int(num_iterations) > 1
-    if iterate:
-        df = df.localCheckpoint(eager=True)
-        prev_bad = df.where(F.col(flag_col) != GOOD).count()
-    for _ in range(int(num_iterations)):
+    def one_round(df: DataFrame) -> DataFrame:
         unflagged = df.where(F.col(flag_col) == GOOD)
         stats, join_on = _buddy_stats(
             unflagged,
@@ -375,19 +373,11 @@ def buddy_check(
         )
         if obs_to_check is not None:
             verdict = verdict & (F.col(obs_to_check) == 1)
-        new_df = apply_check_flags(
+        return apply_check_flags(
             joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
         ).drop("_n_buddies", "_buddy_mean", "_buddy_var")
 
-        if not iterate:
-            df = new_df
-            break
-        new_df = new_df.localCheckpoint(eager=True)
-        # one count per round: carry the previous total
-        n_bad = new_df.where(F.col(flag_col) != GOOD).count()
-        df.unpersist()  # rule 17: dead checkpoint blocks squeeze exec memory
-        df = new_df
-        if n_bad == prev_bad:
-            break  # early stop (src/buddy_check.cpp:161-176)
-        prev_bad = n_bad
-    return df
+    # a single pass stays lazy: the input scan is recomputed by the stats
+    # branch, far cheaper than a checkpoint + count job (rule 26), and the
+    # un-checkpointed stats side keeps its AQE size estimate
+    return iterate_flags(df, one_round, num_iterations, flag_col)

@@ -19,7 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from titanlib_spark.flags import BAD, GOOD, apply_check_flags, ensure_flags
+from titanlib_spark.flags import (
+    BAD,
+    GOOD,
+    apply_check_flags,
+    ensure_flags,
+    iterate_flags,
+)
 from titanlib_spark.operators.buddy_check import _buddy_event_stats
 from titanlib_spark.operators.range_check import is_invalid_value
 
@@ -58,13 +64,7 @@ def buddy_event_check(
     )
     use_elev = elev_col is not None and max_elev_diff > 0
 
-    # single-iteration fast path: no flags snapshot / fixpoint count
-    # needed (see buddy_check — rule 26)
-    iterate = int(num_iterations) > 1
-    if iterate:
-        df = df.localCheckpoint(eager=True)
-        prev_bad = df.where(F.col(flag_col) != GOOD).count()
-    for _ in range(int(num_iterations)):
+    def one_round(df: DataFrame) -> DataFrame:
         unflagged = df.where(F.col(flag_col) == GOOD)
         stats, join_on = _buddy_event_stats(
             unflagged, radius, id_col, lat_col, lon_col, value_col,
@@ -93,19 +93,8 @@ def buddy_event_check(
         )
         if obs_to_check is not None:
             verdict = verdict & (F.col(obs_to_check) == 1)
-        new_df = apply_check_flags(
+        return apply_check_flags(
             joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
         ).drop("_n_buddies", "_n_event")
 
-        if not iterate:
-            df = new_df
-            break
-        new_df = new_df.localCheckpoint(eager=True)
-        # one count per round: carry the previous total
-        n_bad = new_df.where(F.col(flag_col) != GOOD).count()
-        df.unpersist()  # rule 17: dead checkpoint blocks squeeze exec memory
-        df = new_df
-        if n_bad == prev_bad:
-            break
-        prev_bad = n_bad
-    return df
+    return iterate_flags(df, one_round, num_iterations, flag_col)

@@ -36,7 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from titanlib_spark.flags import BAD, GOOD, apply_check_flags, ensure_flags
+from titanlib_spark.flags import (
+    BAD,
+    GOOD,
+    apply_check_flags,
+    ensure_flags,
+    iterate_flags,
+)
 from titanlib_spark.operators.range_check import is_invalid_value
 
 
@@ -66,13 +72,7 @@ def fgt(
     )
     sb = F.col(sigma_b) if isinstance(sigma_b, str) else F.lit(float(sigma_b))
 
-    # single-iteration fast path: no flags snapshot / fixpoint count
-    # needed (see buddy_check — rule 26)
-    iterate = int(num_iterations) > 1
-    if iterate:
-        df = df.localCheckpoint(eager=True)
-        prev_bad = df.where(F.col(flag_col) != GOOD).count()
-    for _ in range(int(num_iterations)):
+    def one_round(df: DataFrame) -> DataFrame:
         good = df.where(F.col(flag_col) == GOOD)
         dev = F.abs(F.col(value_col) - F.col(bg_col))
         # sigma_b = 0 (per-row background uncertainty): dev/0 would abort
@@ -163,23 +163,13 @@ def fgt(
             F.col(id_col), F.lit(1).alias("_fgt_bad")
         )
         new_df = df.join(flagged_ids, on=id_col, how="left")
-        new_df = apply_check_flags(
+        return apply_check_flags(
             new_df,
             F.when(F.col("_fgt_bad") == 1, BAD).otherwise(GOOD),
             flag_col,
         ).drop("_fgt_bad")
-        if not iterate:
-            df = new_df
-            break
-        new_df = new_df.localCheckpoint(eager=True)
-        # one count per round: carry the previous total
-        n_bad = new_df.where(F.col(flag_col) != GOOD).count()
-        df.unpersist()  # rule 17: dead checkpoint blocks squeeze exec memory
-        df = new_df
-        if n_bad == prev_bad:
-            break
-        prev_bad = n_bad
-    return df
+
+    return iterate_flags(df, one_round, num_iterations, flag_col)
 
 
 def fgt_spatial(

@@ -5,8 +5,8 @@ cluster: Spark owns data movement (grid partitioning with halo exchange),
 numpy owns the per-neighborhood optimal-interpolation (OI) algebra inside
 an Arrow-batched ``applyInPandas``.
 
-Plan per iteration (driver-side loop, early stop when nothing new is
-flagged — src/sct.cpp:294-299):
+Plan per iteration (driver-side loop, flags.iterate_flags: early stop
+when nothing new is flagged — src/sct.cpp:294-299):
 
 1. keep unflagged points; bucket into ECEF grid cells of side
    ``outer_radius``;
@@ -48,8 +48,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from titanlib_spark.flags import BAD, GOOD, apply_check_flags, ensure_flags
-from titanlib_spark.functions.geo import EARTH_RADIUS, with_ecef
+from titanlib_spark.flags import (
+    BAD,
+    GOOD,
+    apply_check_flags,
+    ensure_flags,
+    iterate_flags,
+)
+from titanlib_spark.functions.geo import cell_offsets, with_ecef
 from titanlib_spark.operators._neighbors import CellNeighborhood
 from titanlib_spark.operators.background import exact_quantile, vertical_profile_np
 from titanlib_spark.operators.range_check import is_invalid_value
@@ -66,6 +72,22 @@ def _geodetic_dist_matrix(lats: np.ndarray, lons: np.ndarray) -> np.ndarray:
     )
     np.clip(ratio, -1.0, 1.0, out=ratio)
     return np.arccos(ratio) * 6.378137e6
+
+
+def _dh_rows(disth: np.ndarray) -> np.ndarray:
+    """Per-row 10th percentile of the off-diagonal distances (Dh is their
+    mean). One ``np.quantile(axis=1)`` over the off-diagonal matrix takes
+    the same order statistics and lerp as a per-row call, so it is
+    bit-identical to the per-row loop. A single point (no off-diagonal:
+    NaN) or a non-finite distance keeps the per-row ``exact_quantile``
+    semantics, which drop non-finite values per row."""
+    s_box = disth.shape[0]
+    if s_box > 1 and np.isfinite(disth).all():
+        off = disth[~np.eye(s_box, dtype=bool)].reshape(s_box, s_box - 1)
+        return np.quantile(off, 0.10, axis=1)
+    return np.array(
+        [exact_quantile(0.10, np.delete(disth[i], i)) for i in range(s_box)]
+    )
 
 
 def _sct_kernel(
@@ -146,13 +168,8 @@ def _sct_kernel(
 
         disth = _geodetic_dist_matrix(lats[sel], lons[sel])
         distz = np.abs(e_box[:, None] - e_box[None, :])
-        # per-row 10th percentile of off-diagonal distances
         s_box = sel.size
-        dh_rows = np.empty(s_box)
-        for i in range(s_box):
-            row = np.delete(disth[i], i)
-            dh_rows[i] = exact_quantile(0.10, row)
-        dh_mean = max(float(np.mean(dh_rows)), float(min_horizontal_scale))
+        dh_mean = max(float(np.mean(_dh_rows(disth))), float(min_horizontal_scale))
 
         S = np.exp(
             -0.5 * (disth / dh_mean) ** 2 - 0.5 * (distz / vertical_scale) ** 2
@@ -240,12 +257,26 @@ def sct(
         {s[1] for s in (pos_s, neg_s, eps2_s) if s[0] == "col"}
     )
 
-    df = df.localCheckpoint(eager=True)
-    prev_bad = df.where(F.col(flag_col) != GOOD).count()
-    for _ in range(int(num_iterations)):
-        unflagged = df.where(F.col(flag_col) == GOOD)
-        pts = with_ecef(unflagged, lat_col, lon_col)
-        cs = float(outer_radius)
+    cs = float(outer_radius)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _sct_kernel(
+            pdf,
+            num_min,
+            num_max,
+            inner_radius,
+            outer_radius,
+            num_min_prof,
+            min_elev_diff,
+            min_horizontal_scale,
+            vertical_scale,
+            pos_s,
+            neg_s,
+            eps2_s,
+        )
+
+    def one_round(df: DataFrame) -> DataFrame:
+        pts = with_ecef(df.where(F.col(flag_col) == GOOD), lat_col, lon_col)
         base = pts.select(
             F.col(id_col).alias("_sid"),
             F.col(lat_col).cast("double").alias("_slat"),
@@ -265,16 +296,8 @@ def sct(
             F.floor(F.col("z") / cs).cast("int").alias("_cz"),
             *[F.col(c).cast("double").alias(c) for c in band_cols],
         )
-        offsets = F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dz).alias("dz"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-                for dz in (-1, 0, 1)
-            ]
-        )
         replicated = (
-            base.withColumn("_o", F.explode(offsets))
+            base.withColumn("_o", F.explode(cell_offsets()))
             .withColumn("_score", (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0) & (F.col("_o.dz") == 0))
             .select(
                 "_sid",
@@ -293,23 +316,6 @@ def sct(
                 (F.col("_cz") + F.col("_o.dz")).alias("_cz"),
             )
         )
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _sct_kernel(
-                pdf,
-                num_min,
-                num_max,
-                inner_radius,
-                outer_radius,
-                num_min_prof,
-                min_elev_diff,
-                min_horizontal_scale,
-                vertical_scale,
-                pos_s,
-                neg_s,
-                eps2_s,
-            )
-
         verdicts = replicated.groupBy("_cx", "_cy", "_cz").applyInPandas(
             kernel, schema="_sid long, _sct_flag int, prob_gross_error double"
         )
@@ -318,20 +324,12 @@ def sct(
             F.col("_sct_flag"),
             F.col("prob_gross_error").alias("_pog_new"),
         )
-
         joined = df.drop("prob_gross_error").join(verdicts, on=id_col, how="left")
-        new_df = apply_check_flags(
+        return apply_check_flags(
             joined,
             F.when(F.col("_sct_flag") == BAD, BAD).otherwise(GOOD),
             flag_col,
         ).withColumnRenamed("_pog_new", "prob_gross_error").drop("_sct_flag")
-        new_df = new_df.localCheckpoint(eager=True)
 
-        # one count per round: carry the previous total (src/sct.cpp:294-299)
-        n_bad = new_df.where(F.col(flag_col) != GOOD).count()
-        df.unpersist()  # rule 17: dead checkpoint blocks squeeze exec memory
-        df = new_df
-        if n_bad == prev_bad:
-            break
-        prev_bad = n_bad
-    return df.withColumn("rep", F.lit(0.0))  # src/sct.cpp:91-92: never written
+    out = iterate_flags(df, one_round, num_iterations, flag_col)
+    return out.withColumn("rep", F.lit(0.0))  # src/sct.cpp:91-92: never written

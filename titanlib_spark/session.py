@@ -81,7 +81,10 @@ def get_spark(
     Defaults: AQE on (runtime coalesce + skew-join split), Arrow on
     (all pandas-UDF stages are Arrow-batched), UTC session timezone
     (oracle comparability), shuffle partitions sized to the core count
-    rather than the 200 default.
+    rather than the 200 default, and PySpark's per-call origin capture
+    off (rule 41): every ``F.*``/Column call otherwise pays ~10
+    extra py4j round trips to record its Python call site, which error
+    query contexts then lose.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -105,6 +108,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

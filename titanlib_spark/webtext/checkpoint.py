@@ -32,6 +32,7 @@ import time
 import uuid
 from dataclasses import asdict
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -104,22 +105,26 @@ def run_partitioned(
     written = spark.read.format(output_format).load(f"{out_dir.rstrip('/')}/pages_qc")
     if done:
         written = written.where(~F.col(PART_COL).isin(*done))
-    metrics = (
-        written.groupBy(PART_COL)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_drop"),
-            F.sum(F.col("scrub_changed").cast("long")).alias("n_scrubbed"),
+    per_part = written.groupBy(PART_COL).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.col("keep").cast("long")).alias("n_keep"),
+        F.sum((~F.col("keep")).cast("long")).alias("n_drop"),
+        F.sum(F.col("scrub_changed").cast("long")).alias("n_scrubbed"),
+    )
+    # aggregate once: the progress rows are built from the collected
+    # counts. They go back through Arrow (driver-side); createDataFrame
+    # of a row list would start a Python worker (~300 MB peak RSS)
+    mrows = per_part.collect()
+    progress = (
+        spark.createDataFrame(
+            pd.DataFrame(mrows, columns=per_part.columns), per_part.schema
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("config_json", F.lit(json.dumps(asdict(cfg), sort_keys=True)))
         .withColumn("completed_ts", F.current_timestamp())
         .withColumn("wall_s", F.lit(round(time.time() - t0, 3)))
     )
-    metrics.write.mode("append").parquet(_progress_path(out_dir))
-
-    mrows = metrics.collect()
+    progress.write.mode("append").parquet(_progress_path(out_dir))
     return {
         "run_id": run_id,
         "parts_completed": len(mrows),
