@@ -1,16 +1,22 @@
 """Rehearse the driver's correctness gate: run every queries() entry on
 Spark at sf0.01 and the matching oracle_sql() on DuckDB; compare row count,
-column names, and order-insensitive values (rounded doubles)."""
+column names, and order-insensitive values (rounded doubles). Each OK line
+carries a digest of the sorted normalized rows, so two checkouts can be
+compared result for result.
+
+Run: python scripts/oracle_check.py [names...]"""
 
 from __future__ import annotations
 
+import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 from titanlib_spark.session import get_spark
@@ -91,7 +97,8 @@ def main(only=None):
                     print(f"  spark: {a}\n  duck : {b}")
                 ok = False
         if ok:
-            print(f"OK   {name}: {len(srows)} rows ({time.time()-t0:.1f}s)")
+            digest = hashlib.sha256("\n".join(s_n).encode()).hexdigest()[:12]
+            print(f"OK   {name}: {len(srows)} rows {digest} ({time.time()-t0:.1f}s)")
         else:
             failures.append(name)
     print("\n== SUMMARY ==")

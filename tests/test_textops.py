@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from titanlib_spark.textops.dedup import (
-    char_shingles,
     estimated_jaccard,
     exact_dedup,
     hamming64,
@@ -148,16 +147,35 @@ def test_cosine_topk_kernel_bit_identical_to_column_fold(spark):
             ), (vid, want, got)
 
 
-def test_lsh_pair_gen_shapes_identical(spark):
-    """pair_gen="explode" (nested-explode enumeration over sorted
-    collect_list buckets) must emit the BYTE-IDENTICAL candidate set of
-    the default a×b self-join, in both hash modes, including ties and
-    the max_bucket cap boundary (r06 optimization; the oracle replays
-    the join semantics, so any divergence is a correctness bug)."""
+def _brute_force_candidates(sigs, bands, max_bucket):
+    """Every pair (a < b) sharing a band slice, over the buckets holding
+    at most max_bucket docs."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    buckets = defaultdict(set)
+    for doc_id, sig in sigs.items():
+        r = len(sig) // bands
+        for b in range(bands):
+            buckets[(b, tuple(sig[b * r : (b + 1) * r]))].add(doc_id)
+    return {
+        pair
+        for ids in buckets.values()
+        if len(ids) <= max_bucket
+        for pair in combinations(sorted(ids), 2)
+    }
+
+
+def test_lsh_candidates_match_brute_force(spark):
+    """The nested-explode pair generation over sorted collect_list
+    buckets emits exactly the pairs a brute-force scan of the collected
+    signatures finds, for word-3 and char-5 signatures, including ties
+    and the max_bucket cap boundary."""
     from titanlib_spark.textops.dedup import (
+        _signature_rows,
         minhash_lsh_candidates,
         minhash_signatures,
-        word_ngram_minhash_udf,
+        word_grams,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta " * 4
@@ -167,33 +185,23 @@ def test_lsh_pair_gen_shapes_identical(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string").cache()
     docs.count()
 
-    for mode in ("md5", "xxhash64"):
-        if mode == "md5":
-            udf = word_ngram_minhash_udf(3, 64).asNondeterministic()
-            sigs = docs.select(
-                F.col("doc_id"), udf(F.col("text")).alias("minhash")
-            ).where(F.col("minhash").isNotNull())
+    for kind in ("word3", "char5"):
+        if kind == "word3":
+            sigs = _signature_rows(docs, "doc_id", "text", word_grams(3), 64, "minhash")
         else:
             sigs = minhash_signatures(
-                docs, "text", 64, 5, id_col="doc_id", hash_fn=mode,
-                signatures_only=True,
+                docs, "text", 64, 5, id_col="doc_id", signatures_only=True
             )
         sigs = sigs.localCheckpoint(eager=True)
         # max_bucket=4 exercises the cap: the 12-doc near-dup family
-        # overflows some buckets, which must drop identically both ways
-        sets = {
-            pg: set(
-                map(
-                    tuple,
-                    minhash_lsh_candidates(
-                        sigs, "doc_id", "minhash", 16, 4, hash_fn=mode,
-                        pair_gen=pg,
-                    ).collect(),
-                )
-            )
-            for pg in ("join", "explode")
-        }
-        assert sets["join"] == sets["explode"], mode
+        # overflows some buckets, which must drop exactly as brute force
+        want = _brute_force_candidates(
+            {r.doc_id: r.minhash for r in sigs.collect()}, 16, 4
+        )
+        got = set(
+            map(tuple, minhash_lsh_candidates(sigs, "doc_id", "minhash", 16, 4).collect())
+        )
+        assert want and got == want, kind
         sigs.unpersist()
     docs.unpersist()
 
@@ -538,11 +546,11 @@ def test_ivf_topk_exact_full_probe_and_recall(spark):
 
 def test_let_bound_identity_and_hof_fixes(spark):
     """let_bound(expr, body) == body applied to expr, including null rows;
-    the rewritten word_ngrams/char_shingles/simhash must equal a naive
-    (unbound) reconstruction on real-ish text."""
+    the rewritten word_ngrams/simhash and the kernel's char_grams must
+    equal a naive (unbound) reconstruction on real-ish text."""
     from pyspark.sql import functions as F
     from titanlib_spark.textops.dedup import (
-        char_shingles, let_bound, simhash, word_ngrams)
+        char_grams, let_bound, simhash, word_ngrams)
 
     rows = [(1, "The quick brown fox jumps over the lazy dog"),
             (2, "a b"), (3, ""), (4, None),
@@ -553,7 +561,6 @@ def test_let_bound_identity_and_hof_fixes(spark):
         "doc_id",
         let_bound(F.length(F.coalesce("text", F.lit(""))), lambda n: n * 2).alias("dbl"),
         word_ngrams("text", 3).alias("w3"),
-        char_shingles("text", 5).alias("c5"),
         simhash("text").alias("sh"),
     ).orderBy("doc_id").collect()
 
@@ -570,7 +577,7 @@ def test_let_bound_identity_and_hof_fixes(spark):
         )) if len(low) >= 5 else []
         assert r.dbl == len(txt or "") * 2
         assert r.w3 == w3, (i, r.w3, w3)
-        assert r.c5 == c5, (i, r.c5, c5)
+        assert char_grams(5)(txt or "") == set(c5), (i, c5)
     # simhash: non-trivial docs give non-zero fingerprints; empty gives
     # something deterministic (all-bits from zero votes)
     assert got[0].sh != got[4].sh

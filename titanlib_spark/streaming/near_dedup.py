@@ -6,11 +6,10 @@ through. This module extends the same state-store idiom to NEAR duplicates
 (the streaming face of textops/dedup.py's batch MinHash-LSH family,
 recasting reference src/duplicate_check.cpp's keep-first-occurrence rule):
 
-* signature: a row-local vectorized pandas UDF computes the page's MinHash
-  signature with integer math IDENTICAL to textops.dedup.minhash_signatures'
-  md5 mode (same md5-derived 60-bit base hash, same seeded (a,b) permutation
-  coefficients, same Mersenne-31 modulus) — no gram explode ever enters the
-  stream, no shuffle on the map side.
+* signature: the row-local MinHash kernel (textops.dedup.minhash_udf over
+  char shingles) computes the page's signature — the same kernel, so the
+  same bits, as textops.dedup.minhash_signatures. No gram explode ever
+  enters the stream, no shuffle on the map side.
 * banding: the signature's LSH bands become state keys; one explode to
   `bands` SLIM rows (key, band, bucket) — the page payload never rides
   along (at web scale a 16x payload replication through the state shuffle
@@ -43,124 +42,19 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
-from titanlib_spark.textops.dedup import MERSENNE31, _minhash_coeffs
+from titanlib_spark.textops.dedup import char_grams, check_bands, minhash_udf
 
 _PAYLOAD_BAND = -1
 _ROWKEY_PREFIX = "_row:"
 
 
-def minhash_sig_udf(shingle_size: int = 5, num_hashes: int = 64):
-    """Vectorized row-local MinHash signature (array<long>, null when the
-    document has no shingle) — bit-identical to minhash_signatures'
-    hash_fn="md5" path: h = conv(substr(md5(gram),1,15),16,10) % P, then
-    sig_i = min over grams of (a_i*h + b_i) % P with the same seeded
-    coefficients. Row-local so a stream can carry signatures without a
-    gram explode/shuffle.
-
-    This UDF is the MEASURED winner of the streaming signature A/B
-    (scripts/streaming_sig_ab.py, 1e5 generated pages, local[32]):
-    27.7k docs/s vs 4.7k for the row-local JVM HOF twin
-    (:func:`minhash_sig_column`) — the twin's k x n_shingles interpreted
-    aggregate min-folds cost ~6x the one-Python-md5-per-shingle loop
-    plus numpy permutation math here. Signatures are bit-identical
-    (asserted by the same script), so either can replay the other."""
-    a_list, b_list = _minhash_coeffs(num_hashes)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _sig(text: pd.Series) -> pd.Series:
-        import hashlib
-
-        import numpy as np
-
-        a = np.asarray(a_list, dtype=np.int64)[:, None]
-        b = np.asarray(b_list, dtype=np.int64)[:, None]
-        out = []
-        for t in text.to_numpy(dtype=object):
-            if not isinstance(t, str):
-                out.append(None)
-                continue
-            low = t.lower()
-            if len(low) < shingle_size:
-                out.append(None)
-                continue
-            grams = set(
-                low[i : i + shingle_size]
-                for i in range(len(low) - shingle_size + 1)
-            )
-            h = np.fromiter(
-                (
-                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    % MERSENNE31
-                    for g in grams
-                ),
-                dtype=np.int64,
-                count=len(grams),
-            )[None, :]
-            out.append(((a * h + b) % MERSENNE31).min(axis=1).tolist())
-        return pd.Series(out, dtype=object)
-
-    return _sig
-
-
-def minhash_sig_column(
-    text_col: str | Column = "text",
-    shingle_size: int = 5,
-    num_hashes: int = 64,
-) -> Column:
-    """Row-local JVM twin of :func:`minhash_sig_udf`: the same md5-mode
-    signature as a pure Catalyst expression — let-bound distinct shingles
-    -> one md5 per shingle (transform) -> k interpreted `aggregate`
-    min-folds. No explode, no shuffle, no Python worker: usable in a
-    streaming select exactly like the UDF. NULL when the document has no
-    shingle. Bit-identical to the UDF and to minhash_signatures' md5 mode
-    (same hash, same seeded coefficients, same modulus).
-
-    Cost shape: the k min-folds run in Spark's interpreted HOF path
-    (~k x n_shingles interpreted ops per doc) vs the UDF's one Python md5
-    call per shingle + vectorized numpy permutation math — which side
-    wins is measured, not guessed (scripts/streaming_sig_ab.py)."""
-    from titanlib_spark.textops.dedup import (
-        char_shingles,
-        let_bound,
-        md5_hash64,
-    )
-
-    a_list, b_list = _minhash_coeffs(num_hashes)
-    sh = char_shingles(text_col, shingle_size)
-    hashed = F.transform(sh, lambda s: md5_hash64(s) % MERSENNE31)
-
-    def sig_of(hs: Column) -> Column:
-        def fold(av: int, bv: int):
-            # factory closure: aggregate lambdas must take exactly their
-            # arity — no default-arg captures (CLAUDE.md rule 6)
-            def step(acc: Column, h: Column) -> Column:
-                return F.least(acc, (F.lit(av) * h + F.lit(bv)) % MERSENNE31)
-
-            return step
-
-        return F.when(
-            F.size(hs) > 0,
-            F.array(
-                *[
-                    F.aggregate(
-                        hs,
-                        F.lit(MERSENNE31).cast("long"),
-                        fold(a_list[i], b_list[i]),
-                    )
-                    for i in range(num_hashes)
-                ]
-            ),
-        )
-
-    return let_bound(hashed, sig_of)
-
-
 def band_buckets(sig: Column, num_hashes: int = 64, bands: int = 16) -> Column:
-    """LSH band bucket keys: array of `bands` slice-strings — the same
-    concat_ws(",", slice(sig, b*r+1, r)) keys minhash_lsh_candidates uses
-    in md5 mode (trivially equal to DuckDB's array_to_string)."""
+    """LSH band bucket keys: array of `bands` slice-strings
+    concat_ws(",", slice(sig, b*r+1, r)) — equal exactly when the int
+    slices minhash_lsh_candidates groups on are equal, and trivially equal
+    to DuckDB's array_to_string."""
     r = num_hashes // bands
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -184,8 +78,9 @@ def mark_cross_batch_near_dups(
     and the within-batch tiebreak."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    check_bands(num_hashes, bands)
     orig_cols = stream.schema.fields
-    sig = minhash_sig_udf(shingle_size, num_hashes)(F.col(text_col))
+    sig = minhash_udf(char_grams(shingle_size), num_hashes)(F.col(text_col))
 
     # slim band rows: (key, band, bucket) + payload columns as typed nulls
     # so both row kinds share one schema through the single stateful stage
@@ -307,19 +202,20 @@ def near_dup_marks_batch(
     """Batch-replay twin of the streaming stage: a doc is a near-dup
     candidate iff any of its LSH band buckets is also held by a doc with a
     smaller (batch, id) — exactly the claim order the streaming state
-    store plus the sorted within-batch tiebreak produces. Pure DataFrame
-    ops over the SAME signature path (minhash_signatures md5 mode), so the
-    whole composition has a DuckDB SQL twin and goes through the value
+    store plus the sorted within-batch tiebreak produces. DataFrame ops
+    over the SAME signature kernel (minhash_signatures), so the whole
+    composition has a DuckDB SQL twin and goes through the value
     oracle. Returns (id_col, batch_col, near_dup:boolean) for every input
     row; docs with no shingles are never candidates."""
     from pyspark.sql import Window
 
     from titanlib_spark.textops.dedup import minhash_signatures
 
+    check_bands(num_hashes, bands)
     base = df.select(batch_col, id_col, text_col)
-    sigs = minhash_signatures(
-        base, text_col, num_hashes, shingle_size, id_col=id_col, hash_fn="md5"
-    ).where(F.col("minhash").isNotNull())
+    sigs = minhash_signatures(base, text_col, num_hashes, shingle_size).where(
+        F.col("minhash").isNotNull()
+    )
     banded = sigs.select(
         F.col(batch_col),
         F.col(id_col),

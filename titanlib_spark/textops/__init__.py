@@ -2,10 +2,12 @@
 multimodal plumbing.
 
 These extend the QC-check architecture (titanlib_spark.operators) with the
-operators a 100 TB training-data pipeline needs. All hot paths are JVM-side
-column expressions (higher-order array functions over hashes); Python
-appears only in Arrow-batched pandas UDFs where linear algebra is genuinely
-needed (embedding math, media decode).
+operators a 100 TB training-data pipeline needs. Most hot paths are
+JVM-side column expressions (higher-order array functions over hashes);
+Python appears only in Arrow-batched pandas UDFs where per-row compute
+beats the interpreted JVM twin: the one MinHash kernel
+(dedup.minhash_udf, one md5 per gram plus numpy permutation math),
+embedding math and media decode.
 """
 
 from titanlib_spark.textops.dedup import (

@@ -1,16 +1,22 @@
 """Deduplication family: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
-All signature computation is JVM-side (xxhash64 over exploded/ transformed
-arrays inside whole-stage codegen) — no Python in the hot path. The LSH
-band -> bucket -> join shape is the standard shuffle-once candidate
-generation: at 100 TB the only shuffles are (1) groupBy on band bucket,
-(2) the verification join, both on uniformly-hashed keys (no skew by
-construction; a pathological bucket is bounded with a per-bucket cap, the
-`num_max` neighborhood-truncation idea from the reference,
-reference src/sct.cpp:130-146).
+MinHash signatures come from ONE row-local Arrow kernel (:func:`minhash_udf`)
+that takes a Python gram function — char shingles or word n-grams, each a
+few lines that mirror Spark's lower / trim / split semantics — and applies
+the md5 -> 60-bit -> Mersenne-31 permutation contract (CLAUDE.md rule 16)
+in numpy. SimHash, winnowing and the exact n-gram verifier stay JVM-side
+column expressions. The LSH band -> bucket -> pair shape is the standard
+shuffle-once candidate generation: at 100 TB the only shuffles are (1)
+groupBy on band bucket, (2) the verification join, both on
+uniformly-hashed keys (no skew by construction; a pathological bucket is
+bounded with a per-bucket cap, the `num_max` neighborhood-truncation idea
+from the reference, reference src/sct.cpp:130-146).
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -85,24 +91,111 @@ def let_bound(expr: Column, body) -> Column:
     return F.element_at(F.transform(F.array(expr), body), 1)
 
 
-def char_shingles(text: str | Column, n: int = 5) -> Column:
-    """Distinct lowercase character n-grams, computed JVM-side:
-    sequence(1, len-n+1) -> substring — one codegen stage, no UDF.
-    The lowered text is let-bound so the per-gram substring indexes a
-    materialized string instead of re-lowering the document per element.
+# Java's regex \s, which Spark's split uses, is ASCII-only; Python's \s also
+# matches NBSP, U+2003, \x1c-\x1f and more (CLAUDE.md rule 44)
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
-    NB: Spark's sequence(1, 0) yields the DESCENDING [1, 0], not an empty
-    array, so too-short inputs need an explicit guard."""
-    t0 = F.lower(F.col(text) if isinstance(text, str) else text)
 
-    def shingles_of(t: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.length(t) - (n - 1))
-        return F.when(
-            F.length(t) >= n,
-            F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(n)))),
-        ).otherwise(F.array().cast("array<string>"))
+def char_grams(n: int = 5):
+    """Gram function: distinct character n-shingles of lower(text). Python
+    slices code points exactly as Spark's substr does; texts shorter than
+    n have none."""
 
-    return let_bound(t0, shingles_of)
+    def grams(text: str) -> set[str]:
+        low = text.lower()
+        return {low[i : i + n] for i in range(len(low) - n + 1)}
+
+    return grams
+
+
+def word_grams(n: int = 3):
+    """Gram function: the distinct word n-grams of :func:`word_ngrams`,
+    over the tokens of split(lower(trim(text)), '\\s+'). Spark's trim strips
+    only ' ', and its split keeps leading and trailing empty tokens
+    (limit -1), so "\\ta b" tokenizes to ["", "a", "b"]."""
+
+    def grams(text: str) -> set[str]:
+        toks = _JAVA_WS.split(text.strip(" ").lower())
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    return grams
+
+
+def minhash_udf(grams, num_hashes: int = 64):
+    """The MinHash kernel: a row-local Arrow UDF text -> array<long>.
+
+    `grams` maps a text to its distinct gram set (:func:`char_grams`,
+    :func:`word_grams`). Each gram hashes once with Python md5 to the
+    60-bit base hash of :func:`md5_hash64` (rule 16); slot i is
+    min over grams of (a_i * (h mod P) + b_i) mod P with the seeded
+    :func:`_minhash_coeffs`, in vectorized numpy int64 math. The same
+    integer arithmetic is DuckDB SQL, so signatures are value-oracled.
+    NULL text or no gram gives a NULL signature.
+
+    One Python md5 per gram beats the JVM twins: the gram explode ->
+    shuffle -> k min-aggregates took 1.4-1.7x the wall, the row-local
+    k-aggregate HOF fold 5.9x (rule 33). Marked nondeterministic so a
+    filter on the signature does not evaluate the UDF twice (rule 34)."""
+    a_list, b_list = _minhash_coeffs(num_hashes)
+
+    @F.pandas_udf("array<long>")
+    def _sig(text: pd.Series) -> pd.Series:
+        import numpy as np
+
+        a = np.asarray(a_list, dtype=np.int64)[:, None]
+        b = np.asarray(b_list, dtype=np.int64)[:, None]
+        out = []
+        for t in text.to_numpy(dtype=object):
+            gs = grams(t) if isinstance(t, str) else ()
+            if not gs:
+                out.append(None)
+                continue
+            h = np.fromiter(
+                (
+                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                    % MERSENNE31
+                    for g in gs
+                ),
+                dtype=np.int64,
+                count=len(gs),
+            )
+            out.append(((a * h + b) % MERSENNE31).min(axis=1).tolist())
+        return pd.Series(out, dtype=object)
+
+    return _sig.asNondeterministic()
+
+
+def _require_md5(hash_fn: str) -> None:
+    if hash_fn != "md5":
+        raise ValueError(f"MinHash hashes grams with md5 only, got hash_fn={hash_fn!r}")
+
+
+def check_bands(num_hashes: int, bands: int) -> None:
+    """Reject band sizing that leaves slots out of the bands. With
+    num_hashes < bands every band is the EMPTY slice, which all
+    signatures share, so every document would silently become a
+    candidate of every other."""
+    if bands <= 0 or num_hashes <= 0 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes} "
+            "(rows per band = num_hashes // bands)"
+        )
+
+
+def _signature_rows(
+    df: DataFrame, id_col: str, text_col: str, grams, num_hashes: int, out_col: str
+) -> DataFrame:
+    """(id_col, out_col) rows for the docs that have a signature."""
+    from titanlib_spark.session import spread_small_input
+
+    # the kernel is the map-side hot loop: spread a degenerately
+    # partitioned input (single-file scan) across the cores first
+    sig = minhash_udf(grams, num_hashes)(F.col(text_col))
+    return (
+        spread_small_input(df)
+        .select(F.col(id_col), sig.alias(out_col))
+        .where(F.col(out_col).isNotNull())
+    )
 
 
 def minhash_signatures(
@@ -112,62 +205,24 @@ def minhash_signatures(
     shingle_size: int = 5,
     out_col: str = "minhash",
     id_col: str | None = None,
-    hash_fn: str = "xxhash64",
-    gram_fn=None,
+    hash_fn: str = "md5",
     signatures_only: bool = False,
 ) -> DataFrame:
-    """k-permutation MinHash over char shingles; signature[i] = min over
-    shingles of h_i(s). Empty/too-short docs get a null signature.
+    """k-permutation MinHash over char shingles (:func:`minhash_udf` with
+    :func:`char_grams`): a row-local select, no shuffle. Empty or
+    too-short docs get a NULL signature.
 
-    hash_fn="xxhash64" (default): h_i(s) = xxhash64(str(i), s) — fastest,
-    JVM-only. hash_fn="md5": h_i(s) = (a_i * (md5_hash64(s) mod P) + b_i)
-    mod P with seeded coefficients — identical math is expressible in
-    DuckDB SQL, so the full signature is value-oracle-checkable.
-
-    Physical plan: explode distinct shingles -> ONE groupBy with k
-    codegen'd min-aggregates -> assemble the signature array. The obvious
-    nested-transform expression (k lambdas over the shingle array) runs in
-    Spark's interpreted HOF path at ~100x the cost — same lesson as
-    simhash_table. Requires a row key; pass `id_col` or a unique id column
-    named `doc_id` must exist. `gram_fn` overrides the shingle expression
-    (e.g. word_ngrams) — it must yield a distinct array of strings.
-
-    `signatures_only=True` returns just (id_col, out_col) rows for docs
-    with >=1 shingle, skipping the join that re-attaches the signature to
-    the input frame — the shape LSH banding wants (it drops null
-    signatures anyway), one join fewer in the plan."""
-    from titanlib_spark.session import spread_small_input
-
-    id_col = id_col or "doc_id"
-    sh = gram_fn(text_col) if gram_fn is not None else char_shingles(text_col, shingle_size)
-    # shingle generation + per-gram hashing is the map-side hot loop: spread
-    # a degenerately-partitioned input (single-file scan) across the cores
-    # before it runs; no-op on a well-partitioned table
-    exploded = spread_small_input(df).select(F.col(id_col), F.explode(sh).alias("_s"))
-    if hash_fn == "md5":
-        av, bv = _minhash_coeffs(num_hashes)
-        hmod = md5_hash64(F.col("_s")) % MERSENNE31
-        exploded = exploded.select(F.col(id_col), hmod.alias("_h"))
-        votes = exploded.groupBy(id_col).agg(
-            *[
-                F.min((F.lit(av[i]) * F.col("_h") + F.lit(bv[i])) % MERSENNE31).alias(
-                    f"_m{i}"
-                )
-                for i in range(num_hashes)
-            ]
-        )
-    else:
-        votes = exploded.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64(F.lit(str(i)), F.col("_s"))).alias(f"_m{i}")
-                for i in range(num_hashes)
-            ]
-        )
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-    sigs = votes.select(F.col(id_col), sig.alias(out_col))
+    Returns `df` with `out_col` added, or with `signatures_only=True` just
+    (id_col, out_col) rows for docs with >= 1 shingle — the shape LSH
+    banding wants. `id_col` defaults to `doc_id`. `hash_fn` must be
+    "md5"."""
+    _require_md5(hash_fn)
+    grams = char_grams(shingle_size)
     if signatures_only:
-        return sigs
-    return df.join(sigs, on=id_col, how="left")
+        return _signature_rows(
+            df, id_col or "doc_id", text_col, grams, num_hashes, out_col
+        )
+    return df.withColumn(out_col, minhash_udf(grams, num_hashes)(F.col(text_col)))
 
 
 def minhash_lsh_candidates(
@@ -176,65 +231,47 @@ def minhash_lsh_candidates(
     sig_col: str = "minhash",
     bands: int = 16,
     max_bucket: int = 1000,
-    hash_fn: str = "xxhash64",
     materialize: bool = False,
-    pair_gen: str = "join",
 ) -> DataFrame:
     """Candidate pairs (a < b) sharing at least one LSH band bucket.
 
     Signature of length k is cut into `bands` rows-per-band groups; a band's
-    bucket key is the hash of its slice (hash_fn="md5": the raw int-array
-    slice itself — array equality IS slice equality, so the grouping is
-    bit-identical to the comma-joined string the DuckDB twin groups on,
-    without building 80-byte strings into three 8M-row shuffles; measured
-    r06 sf10: banded checkpoint 9.0->7.2s, count shuffle 2.0->1.4s).
-    Buckets larger than `max_bucket` are dropped FIRST via the broadcast
-    anti-join (degenerate content, e.g. boilerplate — the reference's
-    num_max truncation applied to LSH).
+    bucket key is the raw int-array slice itself — array equality IS slice
+    equality, so the grouping is bit-identical to the comma-joined string
+    the DuckDB twin groups on, without building 80-byte strings into three
+    8M-row shuffles (measured r06 sf10: banded checkpoint 9.0->7.2s, count
+    shuffle 2.0->1.4s). Buckets larger than `max_bucket` are dropped FIRST
+    via the broadcast anti-join (degenerate content, e.g. boilerplate — the
+    reference's num_max truncation applied to LSH).
 
-    `pair_gen` picks how pairs come out of the capped buckets:
-
-    - "join" (default): the a×b self-join on the bucket key. Its origin
-      size estimate is a join-blowup (~TiB at 50k docs), so when the
-      materialized result enters a later UNHINTED join, the planner
-      correctly refuses to broadcast it — the scale-safe default for
-      callers like :func:`minhash_lsh_dedup` whose verify joins rely on
-      stats (rule-40 hazard below).
-    - "explode": groupBy bucket → sorted collect_list (every list <=
-      max_bucket by the anti-join, so no pathological collect buffer) →
-      nested-explode i<j enumeration. One shuffle of capped instead of
-      the self-join's two: candidate stage 16.5 → 8.3s at 500k docs,
-      identical pair set (A/B: byte-equal at sf0.01/sf0.1/sf1-replica in
-      both hash modes, incl. a 15,417,234-pair dense case; i<j over a
-      sort_array'd list IS a<b within equal keys — sort_array uses the
-      id type's natural ordering, the old join's comparator). CAVEAT
-      (CLAUDE.md rule 40): Spark 4 checkpoints carry the PRE-checkpoint
-      plan's size ESTIMATE as stats, and the Generate/aggregate chain
-      here estimates ~KiB for what is really ~GiB of pairs — an unhinted
-      downstream join will happily broadcast the pair frame (measured:
-      verify stage 2.4 → 13.7s at 15.4M pairs; OOM at scale). Only use
-      from callers that pin every downstream join strategy explicitly
-      (ngram_jaccard_pairs_lsh does).
+    Pairs come out of the capped buckets by groupBy bucket -> sorted
+    collect_list (every list <= max_bucket by the anti-join, so no
+    pathological collect buffer) -> nested-explode i<j enumeration; i<j
+    over a sort_array'd list IS a<b by the id type's natural order. One
+    shuffle of the capped frame where an a×b self-join needs two: the
+    candidate stage ran 16.5 -> 8.3s at 500k docs, identical pair set.
+    CAVEAT (CLAUDE.md rule 40): Spark 4 checkpoints carry the
+    PRE-checkpoint plan's size ESTIMATE as stats, and the Generate /
+    aggregate chain here estimates ~KiB for what can be ~GiB of pairs —
+    callers must pin every downstream join over the result explicitly
+    (unhinted, the planner broadcasts the pair frame: verify stage 2.4 ->
+    13.7s at 15.4M pairs; OOM at scale).
 
     `materialize=True` checkpoints the banded frame once and returns an
     EAGER checkpoint of the candidate list, unpersisting the banded blocks
-    before returning: the banded frame feeds three plan branches (bucket
-    counts + both pair-gen consumers), each of which re-runs the banding —
-    and everything upstream of `df` — when left lazy. Use it whenever `df`
-    is not already a materialized frame."""
+    before returning: the banded frame feeds several plan branches (bucket
+    counts + the capped pair generation), each of which re-runs the
+    banding — and everything upstream of `df` — when left lazy. Use it
+    whenever `df` is not already a materialized frame."""
     sig = F.col(sig_col)
-    k = F.size(sig)
-    r = (k / bands).cast("int")
-    if hash_fn == "md5":
-        bucket_of = lambda b: F.slice(sig, b * r + 1, r)
-    else:
-        bucket_of = lambda b: F.xxhash64(
-            F.concat_ws(",", F.slice(sig, b * r + 1, r)), b.cast("string")
-        )
+    r = (F.size(sig) / bands).cast("int")
     banded = df.where(sig.isNotNull()).select(
         F.col(id_col),
         F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), bucket_of)
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.slice(sig, b * r + 1, r),
+            )
         ).alias("band", "bucket"),
     )
     if materialize:
@@ -253,46 +290,27 @@ def minhash_lsh_candidates(
         on=["band", "bucket"],
         how="left_anti",
     )
-    if pair_gen == "explode":
-        # nested explodes, not interpreted HOF lambdas: posexplode pins
-        # id_a and its position, explode(slice(ids, i+2, ...)) streams the
-        # ids after it. A flatten(transform(transform(...))) twin built
-        # 500k structs per cap-sized bucket in the interpreter and lost
-        # 1.5x to the self-join in the dense regime; the nested explode
-        # matches the self-join there (3.5s vs 3.4s, 15.4M pairs at 50k
-        # docs) and wins the sparse near-dup regime outright.
-        ids = F.col("_ids")
-        grouped = (
-            capped.groupBy("band", "bucket")
-            .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
-            .where(F.size(ids) >= 2)
+    # nested explodes, not interpreted HOF lambdas: posexplode pins id_a
+    # and its position, explode(slice(ids, i+2, ...)) streams the ids
+    # after it. A flatten(transform(transform(...))) twin built 500k
+    # structs per cap-sized bucket in the interpreter and lost 1.5x to
+    # the self-join in the dense regime; the nested explode matches the
+    # self-join there (3.5s vs 3.4s, 15.4M pairs at 50k docs) and wins
+    # the sparse near-dup regime outright.
+    ids = F.col("_ids")
+    grouped = (
+        capped.groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
+        .where(F.size(ids) >= 2)
+    )
+    cands = (
+        grouped.select(F.posexplode(ids).alias("_i", "id_a"), ids)
+        .select(
+            "id_a",
+            F.explode(F.slice(ids, F.col("_i") + F.lit(2), F.size(ids))).alias("id_b"),
         )
-        cands = (
-            grouped.select(F.posexplode(ids).alias("_i", "id_a"), ids)
-            .select(
-                "id_a",
-                F.explode(
-                    F.slice(ids, F.col("_i") + F.lit(2), F.size(ids))
-                ).alias("id_b"),
-            )
-            .distinct()
-        )
-    else:
-        a = capped.alias("a")
-        b = capped.alias("b")
-        cands = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
+        .distinct()
+    )
     if materialize:
         cands = cands.localCheckpoint(eager=True)
         banded.unpersist()
@@ -315,7 +333,7 @@ def minhash_lsh_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_size: int = 5,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """Drop near-duplicates: candidates from LSH buckets, verified by the
     MinHash Jaccard estimate, losers = the larger id of each verified pair
@@ -324,25 +342,32 @@ def minhash_lsh_dedup(
     the next run — exact connected components are overkill for filter-grade
     dedup and would add an iterative shuffle).
 
-    Materialization (r06): the signature stage otherwise feeds SIX plan
-    branches (three banded consumers + two verify attachments + the final
-    anti-join) and re-runs per branch. Signatures are checkpointed once,
-    the candidate list is materialized (banded checkpointed inside), the
-    loser set — tiny — is checkpointed, and every intermediate block is
+    Materialization (r06): the signature stage otherwise feeds every
+    plan branch (the banded consumers + two verify attachments + the
+    final anti-join) and re-runs per branch. Signatures are checkpointed
+    once, the candidate list is materialized (banded checkpointed inside),
+    the loser set — tiny — is checkpointed, and every intermediate block is
     unpersisted before returning: the final anti-join reads only `df` and
     the loser checkpoint (the minhash column was dropped from the result
     anyway, so the survivors never needed the signature lineage)."""
+    _require_md5(hash_fn)
+    check_bands(num_hashes, bands)
     sigs = minhash_signatures(
-        df, text_col, num_hashes, shingle_size, id_col=id_col, hash_fn=hash_fn,
+        df, text_col, num_hashes, shingle_size, id_col=id_col,
         signatures_only=True,
     ).localCheckpoint(eager=True)
     cands = minhash_lsh_candidates(
-        sigs, id_col, "minhash", bands, hash_fn=hash_fn, materialize=True
+        sigs, id_col, "minhash", bands, materialize=True
     )
+    # both verify joins pinned sort-merge (rule 40): the candidate
+    # checkpoint carries the explode chain's ~KiB estimate, and unhinted
+    # the planner would broadcast what can be GiB of pairs
     pairs = (
-        cands.join(
+        cands.hint("merge")
+        .join(
             sigs.withColumnsRenamed({id_col: "id_a", "minhash": "sig_a"}), on="id_a"
         )
+        .hint("merge")
         .join(sigs.withColumnsRenamed({id_col: "id_b", "minhash": "sig_b"}), on="id_b")
         .where(estimated_jaccard(F.col("sig_a"), F.col("sig_b")) >= threshold)
     )
@@ -519,61 +544,6 @@ def word_ngrams(text: str | Column, n: int = 3) -> Column:
     return let_bound(toks, grams_of)
 
 
-def word_ngram_minhash_udf(n: int = 3, num_hashes: int = 64):
-    """Arrow UDF: md5-mode MinHash signature over word n-grams, row-local.
-
-    Bit-identical to minhash_signatures(hash_fn="md5") over
-    :func:`word_ngrams` (same tokenization as split(lower(trim(t)), \\s+)
-    including Java split's leading-empty-token/trailing-empty-drop
-    behavior, same md5-derived 60-bit base hash, same seeded (a, b)
-    permutation mins — integer arithmetic throughout, so equality is
-    exact, and the `minhash_sigs` full-signature oracle pins it). Same
-    rule-33 economics as streaming's minhash_sig_udf: one Python md5 per
-    gram + vectorized numpy permutation math replaces the gram
-    explode -> shuffle -> 64 codegen'd min-aggregates (the explode ships
-    ~50 gram strings per doc through a shuffle; this ships nothing).
-    Docs with fewer than n tokens (or NULL text) yield NULL."""
-    a_list, b_list = _minhash_coeffs(num_hashes)
-
-    @F.pandas_udf("array<long>")
-    def _sig(text: pd.Series) -> pd.Series:
-        import hashlib
-        import re
-
-        import numpy as np
-
-        a = np.asarray(a_list, dtype=np.int64)[:, None]
-        b = np.asarray(b_list, dtype=np.int64)[:, None]
-        ws = re.compile(r"\s+")
-        out = []
-        for t in text.to_numpy(dtype=object):
-            if not isinstance(t, str):
-                out.append(None)
-                continue
-            toks = ws.split(t.strip(" ").lower())
-            if toks and toks[-1] == "":  # Java split drops trailing empties
-                toks.pop()
-            if len(toks) < n:
-                out.append(None)
-                continue
-            grams = {
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            }
-            h = np.fromiter(
-                (
-                    int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                    % MERSENNE31
-                    for g in grams
-                ),
-                dtype=np.int64,
-                count=len(grams),
-            )[None, :]
-            out.append(((a * h + b) % MERSENNE31).min(axis=1).tolist())
-        return pd.Series(out, dtype=object)
-
-    return _sig
-
-
 def ngram_jaccard_pairs_lsh(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -583,7 +553,7 @@ def ngram_jaccard_pairs_lsh(
     num_hashes: int = 64,
     bands: int = 16,
     max_bucket: int = 1000,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
     broadcast_candidates: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard, but only over MinHash-LSH candidate pairs —
@@ -601,17 +571,14 @@ def ngram_jaccard_pairs_lsh(
     gate recalls >99% of pairs at jaccard >= 0.5 (1-(1-s^4)^16).
 
     Materialization boundaries (each measured at sf1-scale, 50k docs,
-    local[32], r06): SIGNATURES are checkpointed — the candidate stage
-    consumes them through three plan branches (bucket counts + both
-    self-join sides) and would otherwise re-run the whole signature stage
-    per branch (13.3s -> 4.6s for the candidate stage). In md5 mode the
-    signature itself comes from ONE row-local Arrow pass
-    (:func:`word_ngram_minhash_udf`) instead of gram-checkpoint ->
-    explode -> shuffle -> 64 min-aggregates (grams 3.2s + sigs 4.4s ->
-    ~1.5s, and no gram shuffle at 100 TB). Gram arrays for the exact
-    verify are computed only for the candidate ids (a broadcast semi-join
-    of the bounded candidate list back onto the input), so the full-corpus
-    gram arrays are never materialized at all. The RESULT is eagerly
+    local[32], r06): the signature comes from ONE row-local kernel pass
+    (:func:`minhash_udf` with :func:`word_grams`, the tokens of
+    :func:`word_ngrams`) instead of gram-checkpoint -> explode -> shuffle
+    -> 64 min-aggregates (grams 3.2s + sigs 4.4s -> ~1.5s, and no gram
+    shuffle at 100 TB). Gram arrays for the exact verify are computed only
+    for the candidate ids (a broadcast semi-join of the bounded candidate
+    list back onto the input), so the full-corpus gram arrays are never
+    materialized at all. The RESULT is eagerly
     checkpointed so every intermediate block can be unpersisted before
     returning — otherwise each call leaks storage blocks for the life of
     the JVM (a 12x slowdown once dead blocks squeeze execution memory,
@@ -622,39 +589,23 @@ def ngram_jaccard_pairs_lsh(
     build sides of the verify joins — the checkpointed ancestors carry no
     stats, so AQE cannot discover they are small. Disable it if the
     candidate list itself is huge (very loose threshold over very dirty
-    data); the joins then fall back to shuffle joins on the ids."""
-    from titanlib_spark.session import spread_small_input
-
-    if hash_fn == "md5":
-        # asNondeterministic: the isNotNull filter below otherwise makes
-        # the optimizer evaluate the UDF once below the pushed filter and
-        # AGAIN in the projection (guide-§4.4 duplication; measured 9-11s
-        # vs 1.1s at 50k docs). No sigs checkpoint: the banded checkpoint
-        # inside minhash_lsh_candidates is this plan's ONLY consumer of
-        # the signature column, so the UDF pass materializes exactly once
-        # there (the ngram path never needs the raw signature again)
-        sig_udf = word_ngram_minhash_udf(n, num_hashes).asNondeterministic()
-        sigs = (
-            spread_small_input(df)
-            .select(F.col(id_col), sig_udf(F.col(text_col)).alias("minhash"))
-            .where(F.col("minhash").isNotNull())
-        )
-    else:
-        sigs = minhash_signatures(
-            spread_small_input(df), text_col, num_hashes, id_col=id_col,
-            hash_fn=hash_fn, gram_fn=lambda t: word_ngrams(t, n),
-            signatures_only=True,
-        )
+    data); the joins then fall back to shuffle joins on the ids.
+    `hash_fn` must be "md5"."""
+    _require_md5(hash_fn)
+    check_bands(num_hashes, bands)
+    # no sigs checkpoint: the banded checkpoint inside
+    # minhash_lsh_candidates is this plan's ONLY consumer of the signature
+    # column, so the kernel pass materializes exactly once there (the
+    # ngram path never needs the raw signature again)
+    sigs = _signature_rows(df, id_col, text_col, word_grams(n), num_hashes, "minhash")
     # materialize=True: checkpoints banded once inside and returns the
     # bounded candidate list as an eager checkpoint — it fans out to THREE
-    # consumers below (the id semi-join + both verify attachments)
-    # pair_gen="explode": the sparse near-dup regime where it wins 2x;
-    # safe here ONLY because every downstream join over the tiny-estimated
-    # checkpoint (rule 40) is pinned below — cands/ids broadcast by
-    # explicit bounded-side hints, the pair join hinted merge
+    # consumers below (the id semi-join + both verify attachments). Every
+    # downstream join over the tiny-estimated checkpoint (rule 40) is
+    # pinned below — cands/ids broadcast by explicit bounded-side hints,
+    # the pair join hinted merge
     cands = minhash_lsh_candidates(
-        sigs, id_col, "minhash", bands, max_bucket, hash_fn=hash_fn,
-        materialize=True, pair_gen="explode",
+        sigs, id_col, "minhash", bands, max_bucket, materialize=True
     )
     # exact verify on candidate DOCS only: pull the gram arrays for ids in
     # the candidate list (bounded by 2 x |cands|) — the broadcast carries
