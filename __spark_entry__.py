@@ -2740,7 +2740,7 @@ FROM k
     # 3 elements are exact/one-lerp expressions; the great-circle distances
     # replay the numpy formula (engine trig differs by ~1 ulp -> ~1e-8 on
     # pog/z, against >= 1e-3 decision margins and round(x, 4) outputs;
-    # margins verified by scratch/sct_triplet_margins.py).
+    # margins verified by scripts/sct_triplet_margins.py).
     _tg3 = f"""
 tg AS (
   SELECT *,

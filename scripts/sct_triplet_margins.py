@@ -10,15 +10,21 @@ boundary:
 * sign branches (cvres vs 0, va-yb vs 0, sigma vs 0, crs vs own/0.45),
 * the round(x, 4) grid (value must not sit ~1e-8 from a half-step).
 
-Run at sf0.01 (the driver's correctness scale); pass SF dirs as args.
+Run at sf0.01 (the driver's correctness scale); pass SF dirs as args:
+python scripts/sct_triplet_margins.py SF_DIR [SF_DIR ...]
 Exits nonzero if any margin is below MIN_MARGIN.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import __spark_entry__ as entry  # noqa: E402
 
 MIN_MARGIN = 1e-6
 TABLES = ("customer",)
@@ -37,9 +43,6 @@ def _halfgrid_margin(expr: str) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entry
-
     sql = entry.oracle_sql()
     failures = []
     for sf_dir in sys.argv[1:] or ["/root/testdata/sf0.01"]:

@@ -265,6 +265,17 @@ class TestFgtSpatial:
         assert got[9][0] == 12
         assert all(got[i][0] == 0 for i in range(8))
 
+    def test_unknown_background_mode_raises(self, spark):
+        """"mean" is a mode of `background`, not of the circle background:
+        refused up front instead of passing every row."""
+        from titanlib_spark.operators import fgt_spatial
+
+        df = spark.createDataFrame(
+            [(0, 50.0, 10.0, 100.0, 10.0)], "id long, lat double, lon double, elev double, value double"
+        )
+        with pytest.raises(ValueError, match="mean_outer_circle"):
+            fgt_spatial(df, background_elab_type="mean")
+
     def test_advanced_mode_and_bands(self, spark):
         """Non-basic z with admissible/valid bands: a valid background
         vouches for every row (small_innov shortcut -> all good)."""

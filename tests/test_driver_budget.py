@@ -3,7 +3,8 @@
 A checkpoint or a fixpoint count is taken only where its result can change
 the loop's control flow (flags.iterate_flags): one iteration takes
 neither, the last permitted round stays lazy, and early stop still
-returns the flags the eager per-round loop returned.
+returns the flags the eager per-round loop returned. The SCT family's
+three-phase driver reads each phase-1 delta with one aggregate.
 """
 
 from __future__ import annotations
@@ -13,7 +14,9 @@ from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
 
-from titanlib_spark.operators import buddy_check, sct
+from test_sct_resistant import _grid_df
+from titanlib_spark.flags import BAD, GOOD
+from titanlib_spark.operators import buddy_check, fgt_spatial, sct, sct_dual, sct_resistant
 
 # the reference's 10-station Cartesian line (tests/buddy_check_test.py)
 BUDDY_VALUES = [0, 0, 0, 0, 0, 0, 0, 0, 0.1, 1]
@@ -121,6 +124,54 @@ def test_sct_three_iterations_early_stop(spark, count_calls):
     # its verdicts (no neighborhood evaluated) are what is returned
     assert all(r.prob_gross_error is None for r in rows.values())
     assert len(count_calls) == 3
+
+
+def _job_count(spark, fn):
+    """(fn(), number of Spark jobs fn started), from the status tracker."""
+    sc = spark.sparkContext
+    group = f"job-count-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+SPIKE_KW = dict(
+    num_min_outer=5,
+    num_max_outer=30,
+    inner_radius=5000.0,
+    outer_radius=10000.0,
+    num_iterations=10,
+)
+
+
+@pytest.mark.parametrize(
+    "op, kw, n_jobs, n_bad",
+    [
+        # two phase-1 passes, then phases 2 and 3: one aggregate per
+        # phase-1 delta where a count and an isEmpty used to run (33 jobs)
+        (sct_resistant, dict(background_elab_type="median_outer_circle",
+                             tpos=5.0, tneg=5.0), 31, 8),
+        (fgt_spatial, dict(background_elab_type="mean_outer_circle",
+                           tpos=5.0, tneg=5.0), 31, 8),
+        (sct_dual, dict(event_threshold=25.0, condition="Geq",
+                        test_threshold=0.3), 29, 6),
+    ],
+)
+def test_sct_family_reads_each_phase1_delta_once(spark, op, kw, n_jobs, n_bad):
+    df, planted = _grid_df(spark)
+    df = df.cache()
+    df.count()
+    flags, jobs = _job_count(
+        spark, lambda: {r.id: r.flags for r in op(df, **SPIKE_KW, **kw).collect()}
+    )
+    df.unpersist()
+    bad = {i for i, f in flags.items() if f == BAD}
+    assert len(bad) == n_bad and bad <= planted
+    assert all(f == GOOD for i, f in flags.items() if i not in bad)
+    assert jobs == n_jobs
 
 
 def test_session_debugging_off_and_ansi_errors_keep_their_class(spark):

@@ -65,6 +65,17 @@ def test_condition_vocabulary(spark):
         ).collect()
 
 
+def test_unknown_condition_raises(spark):
+    df = spark.createDataFrame(
+        [(0, 60.0, 10.0, 0.0, 5.0)], "id long, lat double, lon double, elev double, value double"
+    )
+    with pytest.raises(ValueError, match="Geq"):
+        sct_dual(
+            df, event_threshold=5.0, condition="Gte", test_threshold=0.1,
+            outer_radius=1000.0,
+        )
+
+
 def test_accept_isolated_false_flag_12(spark):
     """Isolated station cannot gather num_min_outer neighbors -> flag 12
     when accept_isolated=False, 0 when True (reference

@@ -198,11 +198,15 @@ def test_triplet_oracle_margins_clear_of_noise():
     sign branches, round-to-4dp grid) must sit >= 1e-6 from its computed
     value — ~100x the worst cross-engine trig noise — so the DuckDB value
     oracles are robust, not lucky. Pure DuckDB, no Spark session."""
+    import os
     import subprocess
     import sys
 
+    from conftest import SF_DIR
+
     r = subprocess.run(
-        [sys.executable, "scratch/sct_triplet_margins.py", "/root/testdata/sf0.001"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        [sys.executable, "scripts/sct_triplet_margins.py", SF_DIR],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert r.returncode == 0, r.stdout + r.stderr

@@ -73,6 +73,16 @@ def test_flag_vocabulary(sct_res_result):
     assert codes <= {GOOD, BAD, ISOLATED_INNER, ISOLATED_OUTER, 100}
 
 
+@pytest.mark.parametrize("mode", ["median", "bogus"])
+def test_unknown_background_mode_raises(spark, mode):
+    """An unknown mode ("median" is a mode of `background`, not of the
+    circle background) is refused up front; it used to skip every centroid
+    and pass every row."""
+    df, _ = _grid_df(spark)
+    with pytest.raises(ValueError, match="median_outer_circle"):
+        sct_resistant(df, background_elab_type=mode)
+
+
 def test_accept_isolated_false_flags_11_12(spark):
     # 3 clustered stations + 1 far-away station: the lone one cannot gather
     # num_min_outer neighbors -> flag 11/12 when accept_isolated=False

@@ -110,7 +110,7 @@ def _buddy_stats(
     mean/variance from summed per-position moments reassociate the float
     adds, which Spark's partial aggregation already does nondeterministically
     across partitions; flag margins tolerate it by construction (rule 23
-    audit in scratch/buddy_margin_audit.py)."""
+    audit in scripts/buddy_margin_audit.py)."""
     use_elev = elev_col is not None and max_elev_diff > 0
     if not isinstance(radius, str) and not use_elev:
         v = F.col(value_col)

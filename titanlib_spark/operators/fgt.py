@@ -9,7 +9,8 @@ Two surfaces, matching the reference's own duality:
   (include/titanlib.h:225-246, src/fgt.cpp:29-715): per-centroid outer
   circles with num_min/max_outer truncation, per-circle background,
   worst-offender-only flagging, 11/12 isolation flags, three-phase state
-  machine — sct_resistant minus the OI, on the shared three_phase_driver.
+  machine — sct_resistant minus the OI, on the SCT family's circle sweep
+  (operators/_sct_phases.py).
 
 Reference src/fgt.cpp:780-923 (decision core). Per neighborhood group:
 
@@ -33,6 +34,9 @@ the background with `titanlib_spark.operators.background`.
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,7 +47,17 @@ from titanlib_spark.flags import (
     ensure_flags,
     iterate_flags,
 )
+from titanlib_spark.operators._sct_phases import (
+    band,
+    check_choice,
+    circle_check,
+    robust_z_verdict,
+)
 from titanlib_spark.operators.range_check import is_invalid_value
+from titanlib_spark.operators.sct_resistant import (
+    BACKGROUND_MODES,
+    _innovation_decide,
+)
 
 
 def fgt(
@@ -172,6 +186,22 @@ def fgt(
     return iterate_flags(df, one_round, num_iterations, flag_col)
 
 
+def _fgt_core_np(cell, sel, yb, inner_mask, test_mask, set_flag0, *, basic):
+    """One pass over the outer circle ``sel`` WITHOUT the OI (reference
+    fgt_core, src/fgt.cpp:724-905): chi = |yo - yb| / sigma_b, robust
+    stats over inner rows whose BACKGROUND (not yav) is admissible,
+    chi_alt = maxv - minv, worst offender gated by yb outside the valid
+    band."""
+    inner = np.where(inner_mask)[0]
+    g = sel[inner]
+    yb_in = yb[inner]
+    chi = np.abs(cell.value[g] - yb_in) / cell.sigma_b[g]  # IEEE: sb=0 -> inf
+    chi_alt = cell.maxv[g] - cell.minv[g]
+    adm = (yb_in >= cell.mina[g]) & (yb_in <= cell.maxa[g])
+    return robust_z_verdict(cell, sel, yb, inner, test_mask, chi, chi_alt, adm,
+                            yb_in, basic=basic, set_flag0=set_flag0)
+
+
 def fgt_spatial(
     df: DataFrame,
     background_elab_type: str = "mean_outer_circle",
@@ -200,109 +230,49 @@ def fgt_spatial(
     value_col: str = "value",
     flag_col: str = "flags",
 ) -> DataFrame:
-    """Radius-circle FGT (reference src/fgt.cpp:29-715): the
-    sct_resistant three-phase state machine with fgt_core instead of the
-    OI — chi = |yo - yb| / sigma_b against a per-circle background.
-    Returns df with `flags` (0/1/11/12 vocabulary) and a `score` column
-    (the z of the single worst offender per condemnation).
+    """Radius-circle FGT (reference src/fgt.cpp:29-715): sct_resistant's
+    decision (per-circle background, small_innov shortcut) with fgt_core
+    instead of the OI. Returns df with `flags` (0/1/11/12 vocabulary) and
+    a `score` column (the z of the single worst offender per
+    condemnation). An unknown background_elab_type raises ValueError.
 
     `background_uncertainty_col` names the per-row sigma_b column
     (reference background_uncertainties, used with external backgrounds;
     defaults to 1 like src/fgt.cpp:119)."""
-    from titanlib_spark.operators._sct_phases import (
-        scalar_or_col,
-        three_phase_driver,
-    )
-    from titanlib_spark.operators.sct_resistant import _sct_resistant_kernel
-    from titanlib_spark.functions.geo import with_ecef
-    from titanlib_spark.flags import ISOLATED_INNER, ISOLATED_OUTER
-
-    df = ensure_flags(df, flag_col)
-    df = apply_check_flags(
-        df, F.when(is_invalid_value(F.col(value_col)), BAD).otherwise(GOOD), flag_col
-    )
-
-    # plausible range = extremes of the admissible bands
-    # (src/fgt.cpp:140-148); one scalar-aggregate job covers both
-    from titanlib_spark.operators._sct_phases import plausible_range
-
-    minp, maxp = plausible_range(df, value_mina, value_maxa)
-
-    cfg = dict(
-        core="fgt",
-        background_elab_type=background_elab_type,
-        num_min_outer=int(num_min_outer),
-        num_max_outer=int(num_max_outer),
-        inner_radius=float(inner_radius),
-        outer_radius=float(outer_radius),
+    check_choice("background_elab_type", background_elab_type, BACKGROUND_MODES)
+    decide = partial(
+        _innovation_decide,
+        core=partial(_fgt_core_np, basic=bool(basic)),
+        mode=background_elab_type,
         num_min_prof=int(num_min_prof),
         min_elev_diff=float(min_elev_diff),
-        # unused by fgt_core; present for the shared kernel's core_kw
-        min_horizontal_scale=250.0,
-        max_horizontal_scale=100000.0,
-        kth_closest=2,
-        vertical_scale=200.0,
-        basic=bool(basic),
-        minp=minp,
-        maxp=maxp,
-        flag_iso_inner=ISOLATED_INNER if not accept_isolated else GOOD,
-        flag_iso_outer=ISOLATED_OUTER if not accept_isolated else GOOD,
-        mina=scalar_or_col(value_mina),
-        maxa=scalar_or_col(value_maxa),
-        minv=scalar_or_col(value_minv),
-        maxv=scalar_or_col(value_maxv),
-        eps2=scalar_or_col(0.5),
-        tpos=scalar_or_col(tpos),
-        tneg=scalar_or_col(tneg),
-        sigma_b=scalar_or_col(
-            background_uncertainty_col if background_uncertainty_col else 1.0
+    )
+    return circle_check(
+        df,
+        decide,
+        bands=dict(
+            mina=band(value_mina, -np.inf),
+            maxa=band(value_maxa, np.inf),
+            minv=band(value_minv, np.inf),
+            maxv=band(value_maxv, -np.inf),
+            tpos=band(tpos, 3.0),
+            tneg=band(tneg, 3.0),
+            sigma_b=band(background_uncertainty_col, 1.0),
         ),
-    )
-    band_cols = sorted(
-        {spec[1]
-         for key in ("mina", "maxa", "minv", "maxv", "tpos", "tneg", "sigma_b")
-         for spec in [cfg[key]] if spec[0] == "col"}
-    )
-
-    pts = with_ecef(df.where(F.col(flag_col) == GOOD), lat_col, lon_col)
-    pool = pts.select(
-        F.col(id_col).alias("_sid"),
-        F.col(lat_col).cast("double").alias("_slat"),
-        F.col(lon_col).cast("double").alias("_slon"),
-        F.coalesce(F.col(elev_col).cast("double"), F.lit(0.0)).alias("_selev"),
-        F.col(value_col).cast("double").alias("_svalue"),
-        (
-            F.col(obs_to_check).cast("boolean") if obs_to_check else F.lit(True)
-        ).alias("_sobs"),
-        (
-            F.col(background_col).cast("double")
-            if background_col
-            else F.lit(None).cast("double")
-        ).alias("_sbg"),
-        F.col("x").alias("_sx"),
-        F.col("y").alias("_sy"),
-        F.col("z").alias("_sz"),
-        *[F.col(c).cast("double").alias(c) for c in band_cols],
-    )
-
-    def kernel(pdf, phase: int, set_flag0: bool):
-        return _sct_resistant_kernel(pdf, phase=phase, set_flag0=set_flag0, cfg=cfg)
-
-    verdict = three_phase_driver(
-        pool,
-        kernel,
-        outer_radius=float(outer_radius),
-        num_iterations=int(num_iterations),
-        band_cols=band_cols,
+        num_min_outer=num_min_outer,
+        num_max_outer=num_max_outer,
+        inner_radius=inner_radius,
+        outer_radius=outer_radius,
+        num_iterations=num_iterations,
+        accept_isolated=accept_isolated,
+        isolate_inner=True,
+        with_score=True,
+        obs_to_check=obs_to_check,
+        background_col=background_col,
         id_col=id_col,
-    ).select(
-        id_col,
-        F.col("_state").alias("_new_flag"),
-        F.col("score").alias("_new_score"),
+        lat_col=lat_col,
+        lon_col=lon_col,
+        elev_col=elev_col,
+        value_col=value_col,
+        flag_col=flag_col,
     )
-    joined = df.join(verdict, on=id_col, how="left")
-    joined = joined.withColumn("score", F.col("_new_score"))
-    joined = apply_check_flags(
-        joined, F.coalesce(F.col("_new_flag"), F.lit(GOOD)), flag_col
-    ).drop("_new_flag", "_new_score")
-    return joined

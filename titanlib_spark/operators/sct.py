@@ -10,7 +10,8 @@ when nothing new is flagged — src/sct.cpp:294-299):
 
 1. keep unflagged points; bucket into ECEF grid cells of side
    ``outer_radius``;
-2. replicate each point to the 27 adjacent cells as *halo* rows — every
+2. replicate each point to the 27 adjacent cells as *halo* rows
+   (``_sct_phases.halo``, shared with the SCT family's driver) — every
    point within ``outer_radius`` of any core point of a cell is then
    present in that cell's group (chord distance <= arc distance);
 3. per cell (pandas UDF): run the reference's per-centroid loop over the
@@ -55,8 +56,9 @@ from titanlib_spark.flags import (
     ensure_flags,
     iterate_flags,
 )
-from titanlib_spark.functions.geo import cell_offsets, with_ecef
+from titanlib_spark.functions.geo import with_ecef
 from titanlib_spark.operators._neighbors import CellNeighborhood
+from titanlib_spark.operators._sct_phases import band, halo
 from titanlib_spark.operators.background import exact_quantile, vertical_profile_np
 from titanlib_spark.operators.range_check import is_invalid_value
 
@@ -246,18 +248,14 @@ def sct(
     semantics: masked rows still contribute as neighbors). pos/neg/eps2
     accept a scalar or a column name (per-row vectors, reference
     include/titanlib.h:86-102)."""
-    from titanlib_spark.operators._sct_phases import scalar_or_col
-
     df = ensure_flags(df, flag_col)
     df = apply_check_flags(
         df, F.when(is_invalid_value(F.col(value_col)), BAD).otherwise(GOOD), flag_col
     )
-    pos_s, neg_s, eps2_s = scalar_or_col(pos), scalar_or_col(neg), scalar_or_col(eps2)
+    pos_s, neg_s, eps2_s = band(pos, 4.0), band(neg, 4.0), band(eps2, 0.5)
     band_cols = sorted(
         {s[1] for s in (pos_s, neg_s, eps2_s) if s[0] == "col"}
     )
-
-    cs = float(outer_radius)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _sct_kernel(
@@ -291,32 +289,9 @@ def sct(
             F.col("x").alias("_sx"),
             F.col("y").alias("_sy"),
             F.col("z").alias("_sz"),
-            F.floor(F.col("x") / cs).cast("int").alias("_cx"),
-            F.floor(F.col("y") / cs).cast("int").alias("_cy"),
-            F.floor(F.col("z") / cs).cast("int").alias("_cz"),
             *[F.col(c).cast("double").alias(c) for c in band_cols],
         )
-        replicated = (
-            base.withColumn("_o", F.explode(cell_offsets()))
-            .withColumn("_score", (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0) & (F.col("_o.dz") == 0))
-            .select(
-                "_sid",
-                "_slat",
-                "_slon",
-                "_selev",
-                "_svalue",
-                "_stest",
-                "_sx",
-                "_sy",
-                "_sz",
-                "_score",
-                *band_cols,
-                (F.col("_cx") + F.col("_o.dx")).alias("_cx"),
-                (F.col("_cy") + F.col("_o.dy")).alias("_cy"),
-                (F.col("_cz") + F.col("_o.dz")).alias("_cz"),
-            )
-        )
-        verdicts = replicated.groupBy("_cx", "_cy", "_cz").applyInPandas(
+        verdicts = halo(base, outer_radius).groupBy("_cx", "_cy", "_cz").applyInPandas(
             kernel, schema="_sid long, _sct_flag int, prob_gross_error double"
         )
         verdicts = verdicts.select(

@@ -1,16 +1,16 @@
 """SCT-dual — spatial consistency test for dichotomous (event) variables.
 
-Faithful recast of reference src/sct_dual.cpp:25-1014 on the shared
-three-phase driver (see operators/_sct_phases.py):
+Faithful recast of reference src/sct_dual.cpp:25-1014 on the SCT family's
+circle sweep and three-phase driver (operators/_sct_phases.py: outer
+circles truncated before the bad-flag filter, flag 12 below
+num_min_outer, test_just_this in phases 2 and 3). The p_inner < 2 /
+flag-11 check is commented out in the reference (:277-280), so flag 11 is
+unreachable there and here, and phase 3 re-tests every bad row. This
+module holds only the decision on one circle:
 
 * values are thresholded into events w in {0,1} via a per-row
   event_threshold and a ConditionType Eq/Gt/Geq/Lt/Leq
   (src/sct_dual.cpp:176-188);
-* per centroid: outer circle = nearest <= num_max_outer rows within
-  outer_radius, truncated by distance BEFORE the bad-flag filter
-  (:230-260 + src/util.cpp:232-295); p_outer < num_min_outer -> flag 12
-  (the p_inner < 2 / flag-11 check is commented out in the reference,
-  :277-280 — flag 11 is unreachable there and here);
 * single-class shortcut: if every outer row is in the same class, all
   test rows pass (:330-344);
 * sct_dual_core (:700-1014): Gaussian correlation S over the outer circle
@@ -24,9 +24,7 @@ three-phase driver (see operators/_sct_phases.py):
   information content z = cross * log(cross / own) exceeds its per-row
   threshold t, gated by max(own, cross) >= 0.45 (w_idiv_min, :784,:972);
   only the worst candidate per circle per pass is flagged (:986-1010),
-  else (set_flag0) all test rows pass;
-* phases 2 and 3 re-test single unchecked / bad rows with
-  test_just_this semantics (:416-663), so bad rows can be rescued.
+  else (set_flag0) all test rows pass.
 
 Flag vocabulary: 0 good, 1 bad, 12 isolated-outer (accept_isolated=false),
 100 matrix-inversion failure.
@@ -34,31 +32,18 @@ Flag vocabulary: 0 good, 1 bad, 12 isolated-outer (accept_isolated=false),
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from functools import partial
 
-from titanlib_spark.flags import (
-    BAD,
-    FAILED_INVERSION,
-    GOOD,
-    ISOLATED_OUTER,
-    apply_check_flags,
-    ensure_flags,
-)
-from titanlib_spark.functions.geo import with_ecef
-from titanlib_spark.operators.range_check import is_invalid_value
-from titanlib_spark.operators.sct import _geodetic_dist_matrix
-from titanlib_spark.operators._neighbors import CellNeighborhood
-from titanlib_spark.operators._sct_phases import (
-    NA_STATE,
-    scalar_or_col,
-    three_phase_driver,
-)
+import numpy as np
+from pyspark.sql import DataFrame
+
+from titanlib_spark.flags import BAD, GOOD
+from titanlib_spark.operators._sct_phases import band, check_choice, circle_check
+from titanlib_spark.operators.sct_resistant import _correlation
 
 _W_IDIV_MIN = 0.45  # reference src/sct_dual.cpp:784
 _EPS2 = 0.1         # reference src/sct_dual.cpp:139
+CONDITIONS = ("Eq", "Gt", "Geq", "Lt", "Leq")
 
 
 def _event(values: np.ndarray, thr: np.ndarray, condition: str) -> np.ndarray:
@@ -76,29 +61,23 @@ def _event(values: np.ndarray, thr: np.ndarray, condition: str) -> np.ndarray:
     raise ValueError(condition)
 
 
-def _sct_dual_core_np(lats, lons, elevs, w, t, eps2, test_mask, *,
-                      dh_min, dh_max, kth, dz, set_flag0):
-    """One pass over an outer circle (reference sct_dual_core,
-    src/sct_dual.cpp:700-1014). Returns (ok, updates): updates is a list
-    of (outer_local_idx, new_state)."""
-    p = w.size
-    disth = _geodetic_dist_matrix(lats, lons)
-    distz = np.abs(elevs[:, None] - elevs[None, :])
-    srt = np.sort(disth, axis=1)  # k-th closest including self (col 0)
-    k_idx = p - 1 if kth > p else max(kth - 1, 0)
-    dh_mean = float(np.mean(srt[:, k_idx]))
-    dh_mean = min(max(dh_mean, float(dh_min)), float(dh_max))
-
-    S = np.exp(-0.5 * (disth / dh_mean) ** 2 - 0.5 * (distz / dz) ** 2)
+def _sct_dual_core_np(cell, sel, w, test_mask, set_flag0, *,
+                      dh_min, dh_max, kth, dz):
+    """One pass over the outer circle ``sel`` (reference sct_dual_core).
+    Returns the circle's updates, or None when a class matrix is
+    singular."""
+    S = _correlation(cell.lat[sel], cell.lon[sel], cell.elev[sel],
+                     dh_min=dh_min, dh_max=dh_max, kth=kth, dz=dz)
+    t = cell.test_threshold[sel]
     i0 = np.where(w == 0)[0]
     i1 = np.where(w == 1)[0]
-    S0 = S[np.ix_(i0, i0)] + np.diag(eps2[i0])
-    S1 = S[np.ix_(i1, i1)] + np.diag(eps2[i1])
+    S0 = S[np.ix_(i0, i0)] + np.diag(np.full(i0.size, _EPS2))
+    S1 = S[np.ix_(i1, i1)] + np.diag(np.full(i1.size, _EPS2))
     try:
         Sinv0 = np.linalg.inv(S0)
         Sinv1 = np.linalg.inv(S1)
     except np.linalg.LinAlgError:
-        return False, []
+        return None
     rowsum0 = Sinv0.sum(axis=1)
     rowsum1 = Sinv1.sum(axis=1)
     pos0 = {int(g): k_ for k_, g in enumerate(i0)}
@@ -131,135 +110,20 @@ def _sct_dual_core_np(lats, lons, elevs, w, t, eps2, test_mask, *,
             zmx, mmx = float(z), int(i)
 
     if mmx is not None:
-        return True, [(mmx, BAD)]
+        return [(mmx, BAD, np.nan)]
     if set_flag0:
-        return True, [(int(i), GOOD) for i in np.where(test_mask)[0]]
-    return True, []
+        return [(int(i), GOOD, np.nan) for i in np.where(test_mask)[0]]
+    return []
 
 
-def _sct_dual_kernel(pdf: pd.DataFrame, *, phase: int, set_flag0: bool,
-                     cfg: dict) -> pd.DataFrame:
-    ids = pdf["_sid"].to_numpy()
-    lats = pdf["_slat"].to_numpy(dtype=float)
-    lons = pdf["_slon"].to_numpy(dtype=float)
-    elevs = pdf["_selev"].to_numpy(dtype=float)
-    values = pdf["_svalue"].to_numpy(dtype=float)
-    obs = pdf["_sobs"].to_numpy(dtype=bool)
-    core = pdf["_score"].to_numpy(dtype=bool)
-    state = pdf["_sstate"].to_numpy(dtype=np.int32).copy()
-    orig_state = state.copy()
-    pts = np.stack(
-        [pdf["_sx"].to_numpy(float), pdf["_sy"].to_numpy(float),
-         pdf["_sz"].to_numpy(float)],
-        axis=1,
-    )
-    n = len(ids)
-
-    def band(key, default):
-        spec = cfg[key]
-        if spec[0] == "col":
-            return pdf[spec[1]].to_numpy(dtype=float)
-        v = default if spec[1] is None else float(spec[1])
-        return np.full(n, v)
-
-    r = band("event_threshold", 0.0)
-    t = band("test_threshold", 0.5)
-    w = _event(values, r, cfg["condition"])
-    eps2 = np.full(n, _EPS2)
-
-    num_min_outer = cfg["num_min_outer"]
-    num_max_outer = cfg["num_max_outer"]
-    inner_radius = cfg["inner_radius"]
-    outer_radius = cfg["outer_radius"]
-    flag_iso_outer = cfg["flag_iso_outer"]
-    core_kw = dict(
-        dh_min=cfg["min_horizontal_scale"], dh_max=cfg["max_horizontal_scale"],
-        kth=cfg["kth_closest"], dz=cfg["vertical_scale"],
-    )
-
-    # Dense-cell guard (phase 1 only): same state-versioned co-located
-    # memo as sct_resistant — a twin centroid with unchanged flag state
-    # replays an identical no-op pass, so skip it.
-    pos_seen: dict = {}
-    state_ver = 0
-
-    # output-sensitive radius/kNN index (see _neighbors.py): identical
-    # results to the naive per-centroid scan, O(candidates) per query for
-    # dense distinct-location cells
-    nbr = CellNeighborhood(pts, ids, outer_radius, num_max_outer)
-
-    order = np.argsort(ids, kind="stable")
-    for curr in order:
-        if not core[curr] or not obs[curr]:
-            continue
-        if phase in (1, 2):
-            if state[curr] != NA_STATE:
-                continue
-        else:  # phase 3: re-check bad rows (:530-534)
-            if state[curr] != BAD:
-                continue
-        if phase == 1:
-            pos_key = (pts[curr, 0], pts[curr, 1], pts[curr, 2])
-            if pos_seen.get(pos_key) == state_ver:
-                continue
-            pos_seen[pos_key] = state_ver
-
-        # radius query truncated to nearest num_max_outer, PRECEDING the
-        # flag filter (:236-260) — output-sensitive, naive-scan-identical
-        guess, d_guess = nbr.query(curr)
-        if phase == 1:
-            keep = state[guess] != BAD
-        else:
-            keep = (state[guess] != BAD) & (guess != curr)
-        sel = guess[keep]
-        d_sel = d_guess[keep]
-        if phase != 1:
-            sel = np.append(sel, curr)                # test_just_this append
-            d_sel = np.append(d_sel, 0.0)             # d(curr, curr) == 0
-
-        if sel.size < num_min_outer:
-            state[curr] = flag_iso_outer
-            state_ver += 1
-            continue
-        # no p_inner check: commented out in the reference (:277-280)
-
-        inner_mask = d_sel <= inner_radius
-        if phase == 1:
-            st = state[sel]
-            test_mask = inner_mask & obs[sel] & (st != GOOD) & (st != BAD)
-        else:
-            test_mask = sel == curr
-        if not test_mask.any():
-            continue
-
-        w_sel = w[sel]
-        n1 = int(w_sel.sum())
-        if n1 == 0 or n1 == w_sel.size:  # single-class shortcut (:330-344)
-            state[sel[test_mask]] = GOOD
-            state_ver += 1
-            continue
-
-        ok, updates = _sct_dual_core_np(
-            lats[sel], lons[sel], elevs[sel], w_sel, t[sel], eps2[sel],
-            test_mask, set_flag0=set_flag0, **core_kw,
-        )
-        if not ok:
-            state[curr] = FAILED_INVERSION
-            state_ver += 1
-            continue
-        if updates:
-            state_ver += 1
-        for local_i, new_state in updates:
-            state[sel[local_i]] = new_state
-
-    changed = core & (state != orig_state)
-    return pd.DataFrame(
-        {
-            "_sid": ids[changed],
-            "_state": state[changed],
-            "score": np.full(int(changed.sum()), np.nan),
-        }
-    )
+def _dual_decide(cell, sel, inner_mask, test_mask, phase, set_flag0, *,
+                 condition, **core_kw):
+    """The single-class shortcut, then sct_dual_core."""
+    w = _event(cell.value[sel], cell.event_threshold[sel], condition)
+    n1 = int(w.sum())
+    if n1 == 0 or n1 == w.size:  # single-class shortcut (:330-344)
+        return [(j, GOOD, np.nan) for j in np.where(test_mask)[0]]
+    return _sct_dual_core_np(cell, sel, w, test_mask, set_flag0, **core_kw)
 
 
 def sct_dual(
@@ -288,62 +152,38 @@ def sct_dual(
     """Returns df with `flags` updated (0/1/12/100 vocabulary).
 
     event_threshold / test_threshold accept a scalar or a column name
-    (per-row vectors, reference include/titanlib.h:182-198)."""
-    df = ensure_flags(df, flag_col)
-    df = apply_check_flags(
-        df, F.when(is_invalid_value(F.col(value_col)), BAD).otherwise(GOOD), flag_col
-    )
-    if inner_radius is None:
-        inner_radius = float(outer_radius)
-
-    cfg = dict(
+    (per-row vectors, reference include/titanlib.h:182-198). An unknown
+    condition raises ValueError."""
+    check_choice("condition", condition, CONDITIONS)
+    decide = partial(
+        _dual_decide,
         condition=condition,
-        num_min_outer=int(num_min_outer),
-        num_max_outer=int(num_max_outer),
-        inner_radius=float(inner_radius),
-        outer_radius=float(outer_radius),
-        min_horizontal_scale=float(min_horizontal_scale),
-        max_horizontal_scale=float(max_horizontal_scale),
-        kth_closest=int(kth_closest),
-        vertical_scale=float(vertical_scale),
-        flag_iso_outer=ISOLATED_OUTER if not accept_isolated else GOOD,
-        event_threshold=scalar_or_col(event_threshold),
-        test_threshold=scalar_or_col(test_threshold),
+        dh_min=float(min_horizontal_scale),
+        dh_max=float(max_horizontal_scale),
+        kth=int(kth_closest),
+        dz=float(vertical_scale),
     )
-    band_cols = sorted(
-        {spec[1] for key in ("event_threshold", "test_threshold")
-         for spec in [cfg[key]] if spec[0] == "col"}
-    )
-
-    pts = with_ecef(df.where(F.col(flag_col) == GOOD), lat_col, lon_col)
-    pool = pts.select(
-        F.col(id_col).alias("_sid"),
-        F.col(lat_col).cast("double").alias("_slat"),
-        F.col(lon_col).cast("double").alias("_slon"),
-        F.coalesce(F.col(elev_col).cast("double"), F.lit(0.0)).alias("_selev"),
-        F.col(value_col).cast("double").alias("_svalue"),
-        (
-            F.col(obs_to_check).cast("boolean") if obs_to_check else F.lit(True)
-        ).alias("_sobs"),
-        F.lit(None).cast("double").alias("_sbg"),
-        F.col("x").alias("_sx"),
-        F.col("y").alias("_sy"),
-        F.col("z").alias("_sz"),
-        *[F.col(c).cast("double").alias(c) for c in band_cols],
-    )
-
-    def kernel(pdf: pd.DataFrame, phase: int, set_flag0: bool) -> pd.DataFrame:
-        return _sct_dual_kernel(pdf, phase=phase, set_flag0=set_flag0, cfg=cfg)
-
-    verdict = three_phase_driver(
-        pool,
-        kernel,
-        outer_radius=float(outer_radius),
-        num_iterations=int(num_iterations),
-        band_cols=band_cols,
+    return circle_check(
+        df,
+        decide,
+        bands=dict(
+            event_threshold=band(event_threshold, 0.0),
+            test_threshold=band(test_threshold, 0.5),
+        ),
+        num_min_outer=num_min_outer,
+        num_max_outer=num_max_outer,
+        inner_radius=outer_radius if inner_radius is None else inner_radius,
+        outer_radius=outer_radius,
+        num_iterations=num_iterations,
+        accept_isolated=accept_isolated,
+        isolate_inner=False,
+        with_score=False,
+        obs_to_check=obs_to_check,
+        background_col=None,
         id_col=id_col,
-    ).select(id_col, F.col("_state").alias("_new_flag"))
-    joined = df.join(verdict, on=id_col, how="left")
-    return apply_check_flags(
-        joined, F.coalesce(F.col("_new_flag"), F.lit(GOOD)), flag_col
-    ).drop("_new_flag")
+        lat_col=lat_col,
+        lon_col=lon_col,
+        elev_col=elev_col,
+        value_col=value_col,
+        flag_col=flag_col,
+    )

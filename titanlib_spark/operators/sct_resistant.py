@@ -1,56 +1,30 @@
 """SCT-resistant — outlier-resistant spatial consistency test.
 
-Distributed recast of reference src/sct_resistant.cpp:26-1062, faithful to
-its three-phase state machine:
+Distributed recast of reference src/sct_resistant.cpp:26-1062 on the SCT
+family's circle sweep and three-phase driver (operators/_sct_phases.py,
+which describes the state machine, the circles and the per-cell sweep
+deviation). This module holds only the decision on one circle:
 
-* **Phase 1** (src/sct_resistant.cpp:206-397): iterated sweep over
-  centroids that still lack a verdict. Per centroid: outer circle =
-  nearest <= num_max_outer rows within outer_radius (truncated by distance
-  BEFORE dropping bad rows, mirroring the kdtree-then-set_indices order,
-  src/sct_resistant.cpp:242-268 + src/util.cpp:232-295), inner circle,
-  test set = inner rows without a verdict. ``small_innov`` shortcut
-  (background within the valid band for every test row -> all good,
-  :355-372), else sct_core. Good verdicts are only allowed after the first
-  iteration (set_flag0, :374). Stop when an iteration throws nothing out;
-  if that was the FIRST iteration, all remaining rows are set good
-  (set_all_good, :398-414).
-* **Phase 2** "QC missing" (:416-537): each row still without a verdict is
-  tested alone (test_just_this semantics: the centroid is excluded from
-  the neighbour guess and re-appended, src/util.cpp:283-295). Deficient
-  circles get flag 12 (p_outer < num_min_outer) or 11 (p_inner < 2);
-  with accept_isolated=true those become 0 (src/sct_resistant.cpp:168-177).
-* **Phase 3** "final check on the bad" (:542-712): every bad row whose
-  value is plausible is re-tested alone against the non-bad network — it
-  can be restored to good (small_innov / sct_core), re-condemned, or
-  found isolated (11/12).
+* background over the outer circle (reference src/background.cpp:28-57),
+  clamped to the plausible range [minp, maxp] = [min(mina), max(maxa)];
+* ``small_innov`` shortcut: when the background lies in the valid band
+  [minv, maxv] of every test row (non-strict in phase 1, :355-362; strict
+  for the single test row of phases 2 and 3, :515-521), all test rows are
+  good;
+* else sct_core (src/sct_resistant.cpp:760-1062):
 
-sct_core parity (src/sct_resistant.cpp:760-1062):
-
-* Dh(i) = k-th closest pairwise distance INCLUDING self as the first
-  (find_k_closest, src/util.cpp:297-314); Dh_mean clamped to
-  [min_horizontal_scale, max_horizontal_scale];
-* S = exp(-.5 (dh/Dh_mean)^2 - .5 (dz/Dz)^2) + diag(eps2), per-row eps2;
-* analysis ya and LOO cv-analysis yav, both clamped to the plausible range
-  [value_minp, value_maxp] = [min(values_mina), max(values_maxa)]
-  (src/sct_resistant.cpp:191-196, :966-971);
-* chi = sqrt((yo-ya)(yo-yav)) over the INNER circle; robust stats are fed
-  only by inner rows whose **yav** lies in the admissible band [mina,maxa]
-  (:975-980);
-* chi_stat empty -> ALL test rows flagged bad (:984-992);
-* sigma = max(IQR(chi_stat), IQR(chi_alt_stat)) with
-  chi_alt = sqrt(eps2/(1+eps2)) * (maxv - minv) (:996-1001); sigma == 0 ->
-  no verdicts; z = (chi - mu) / (sigma + sigma/sqrt(n));
-* worst offender = max z among test rows whose yav is OUTSIDE the valid
-  band [minv, maxv]; threshold tpos if yo >= yb else tneg; z > thr ->
-  that single row bad (score = z), else set_flag0 -> all test rows good
-  (:1013-1058).
-
-Distribution deviation (documented): the sequential centroid sweep is
-per-grid-cell (side = outer_radius, 27-cell ECEF halo) instead of global,
-so live flag propagation never crosses cells within one pass — the
-iterate-until-stable driver loop converges the global state. The
-reference is explicitly order-tolerant here (its phase 3 exists to undo
-order artifacts).
+  * Dh(i) = k-th closest pairwise distance INCLUDING self as the first
+    (find_k_closest, src/util.cpp:297-314); Dh_mean clamped to
+    [min_horizontal_scale, max_horizontal_scale];
+  * S = exp(-.5 (dh/Dh_mean)^2 - .5 (dz/Dz)^2) + diag(eps2), per-row eps2;
+  * analysis ya and LOO cv-analysis yav, both clamped to [minp, maxp]
+    (:966-971);
+  * chi = sqrt((yo-ya)(yo-yav)) over the INNER circle; robust stats are
+    fed only by inner rows whose **yav** lies in the admissible band
+    [mina, maxa] (:975-980), with chi_alt = sqrt(eps2/(1+eps2)) *
+    (maxv - minv) (:996-1001);
+  * the robust-z worst-offender tail (``_sct_phases.robust_z_verdict``)
+    with candidates whose yav lies OUTSIDE the valid band (:1013-1058).
 
 Flag vocabulary: 0 good, 1 bad, 11/12 isolated (accept_isolated=false),
 100 matrix-inversion failure (include/titanlib.h:133, :120-125).
@@ -58,33 +32,31 @@ Flag vocabulary: 0 good, 1 bad, 11/12 isolated (accept_isolated=false),
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from functools import partial
 
-from titanlib_spark.flags import (
-    BAD,
-    FAILED_INVERSION,
-    GOOD,
-    ISOLATED_INNER,
-    ISOLATED_OUTER,
-    apply_check_flags,
-    ensure_flags,
+import numpy as np
+from pyspark.sql import DataFrame
+
+from titanlib_spark.flags import GOOD
+from titanlib_spark.operators._sct_phases import (
+    band,
+    check_choice,
+    circle_check,
+    robust_z_verdict,
 )
-from titanlib_spark.functions.geo import with_ecef
 from titanlib_spark.operators.background import (
     exact_quantile,
     theil_sen_np,
     vertical_profile_np,
 )
-from titanlib_spark.operators.range_check import is_invalid_value
 from titanlib_spark.operators.sct import _geodetic_dist_matrix
-from titanlib_spark.operators._neighbors import CellNeighborhood
-from titanlib_spark.operators._sct_phases import (
-    NA_STATE,
-    scalar_or_col,
-    three_phase_driver,
+
+BACKGROUND_MODES = (
+    "external",
+    "mean_outer_circle",
+    "median_outer_circle",
+    "vertical_profile",
+    "vertical_profile_theil_sen",
 )
 
 
@@ -110,30 +82,33 @@ def _background_box(mode, elevs, values, ext, num_min_prof, min_elev_diff,
     return vp
 
 
-def _sct_core_np(
-    lats, lons, elevs, yo, yb, eps2, tpos, tneg, mina, maxa, minv, maxv,
-    inner_mask, test_mask, *, minp, maxp, dh_min, dh_max, kth, dz, basic,
-    set_flag0,
-):
-    """One OI pass over an outer circle (reference sct_core,
-    src/sct_resistant.cpp:760-1062). Returns (ok, updates) where updates
-    is a list of (outer_local_idx, new_state, score_or_nan)."""
-    p = yo.size
+def _correlation(lats, lons, elevs, *, dh_min, dh_max, kth, dz):
+    """Gaussian background correlation over an outer circle, shared by
+    sct_core and sct_dual_core: Dh_mean = mean k-th closest distance
+    including self, clamped to [dh_min, dh_max]."""
+    p = lats.size
     disth = _geodetic_dist_matrix(lats, lons)
     distz = np.abs(elevs[:, None] - elevs[None, :])
-
-    # Dh: k-th closest including self-distance 0 (find_k_closest semantics)
     srt = np.sort(disth, axis=1)
     k_idx = p - 1 if kth > p else max(kth - 1, 0)
     dh_mean = float(np.mean(srt[:, k_idx]))
     dh_mean = min(max(dh_mean, float(dh_min)), float(dh_max))
+    return np.exp(-0.5 * (disth / dh_mean) ** 2 - 0.5 * (distz / dz) ** 2)
 
-    S = np.exp(-0.5 * (disth / dh_mean) ** 2 - 0.5 * (distz / dz) ** 2)
+
+def _sct_core_np(cell, sel, yb, inner_mask, test_mask, set_flag0, *,
+                 dh_min, dh_max, kth, dz, basic):
+    """One OI pass over the outer circle ``sel`` (reference sct_core).
+    Returns the circle's updates, or None when S is singular."""
+    yo, eps2 = cell.value[sel], cell.eps2[sel]
+    p = yo.size
+    S = _correlation(cell.lat[sel], cell.lon[sel], cell.elev[sel],
+                     dh_min=dh_min, dh_max=dh_max, kth=kth, dz=dz)
     S[np.diag_indices(p)] += eps2
     try:
         Sinv = np.linalg.inv(S)
     except np.linalg.LinAlgError:
-        return False, []
+        return None
     S[np.diag_indices(p)] -= eps2
 
     d = yo - yb
@@ -142,268 +117,34 @@ def _sct_core_np(
     inner = np.where(inner_mask)[0]
     ya = yb[inner] + S[inner] @ Sinv_d
     yav = yo[inner] - Sinv_d[inner] / np.diag(Sinv)[inner]
-    np.clip(ya, minp, maxp, out=ya)
-    np.clip(yav, minp, maxp, out=yav)
+    np.clip(ya, cell.minp, cell.maxp, out=ya)
+    np.clip(yav, cell.minp, cell.maxp, out=yav)
     chi = np.sqrt(np.maximum((yo[inner] - ya) * (yo[inner] - yav), 0.0))
+    g = sel[inner]
     chi_alt = np.sqrt(eps2[inner] / (1.0 + eps2[inner])) * np.maximum(
-        maxv[inner] - minv[inner], 0.0
+        cell.maxv[g] - cell.minv[g], 0.0
     )
-
-    adm = (yav >= mina[inner]) & (yav <= maxa[inner])
-    test_local = np.where(test_mask[inner])[0]  # positions within `inner`
-    if not adm.any():
-        # yav all inadmissible: every test row is bad (:984-992)
-        return True, [(inner[m], BAD, np.nan) for m in test_local]
-
-    if basic:
-        z = chi
-    else:
-        chi_stat = chi[adm]
-        mu = exact_quantile(0.5, chi_stat)
-        sigma = exact_quantile(0.75, chi_stat) - exact_quantile(0.25, chi_stat)
-        sigma_alt = exact_quantile(0.75, chi_alt[adm]) - exact_quantile(
-            0.25, chi_alt[adm]
-        )
-        sigma = max(sigma, sigma_alt)
-        if sigma == 0:
-            return True, []
-        sigma_mu = sigma / np.sqrt(chi_stat.size)
-        z = (chi - mu) / (sigma + sigma_mu)
-
-    zmx, mmx = -10000.0, -1
-    for m in test_local:
-        gi = inner[m]
-        if z[m] > zmx and (yav[m] < minv[gi] or yav[m] > maxv[gi]):
-            zmx, mmx = float(z[m]), m
-    if mmx >= 0:
-        gi = inner[mmx]
-        thr = tpos[gi] if (yo[gi] - yb[gi]) >= 0 else tneg[gi]
-        if zmx > thr:
-            return True, [(gi, BAD, zmx)]
-    if set_flag0:
-        return True, [(inner[m], GOOD, np.nan) for m in test_local]
-    return True, []
+    adm = (yav >= cell.mina[g]) & (yav <= cell.maxa[g])
+    return robust_z_verdict(cell, sel, yb, inner, test_mask, chi, chi_alt, adm,
+                            yav, basic=basic, set_flag0=set_flag0)
 
 
-def _fgt_core_np(
-    yo, yb, sigma_b, tpos, tneg, mina, maxa, minv, maxv,
-    inner_mask, test_mask, *, basic, set_flag0,
-):
-    """One pass over an outer circle WITHOUT the OI (reference fgt_core,
-    src/fgt.cpp:724-905): chi = |yo - yb| / sigma_b, robust stats over
-    inner rows whose BACKGROUND (not yav) is admissible, chi_alt =
-    maxv - minv, worst offender gated by yb outside the valid band.
-    Same return convention as _sct_core_np."""
-    inner = np.where(inner_mask)[0]
-    chi = np.abs(yo[inner] - yb[inner]) / sigma_b[inner]  # IEEE: sb=0 -> inf
-    chi_alt = maxv[inner] - minv[inner]
-    adm = (yb[inner] >= mina[inner]) & (yb[inner] <= maxa[inner])
-    test_local = np.where(test_mask[inner])[0]
-    if not adm.any():
-        # background all inadmissible: every test row is bad (:669-676)
-        return True, [(inner[m], BAD, np.nan) for m in test_local]
-
-    if basic:
-        z = chi
-    else:
-        chi_stat = chi[adm]
-        mu = exact_quantile(0.5, chi_stat)
-        sigma = exact_quantile(0.75, chi_stat) - exact_quantile(0.25, chi_stat)
-        sigma_alt = exact_quantile(0.75, chi_alt[adm]) - exact_quantile(
-            0.25, chi_alt[adm]
-        )
-        if sigma_alt > sigma:  # NaN-safe: empty-band chi_alt never wins
-            sigma = sigma_alt
-        if sigma == 0:
-            return True, []
-        sigma_mu = sigma / np.sqrt(chi_stat.size)
-        z = (chi - mu) / (sigma + sigma_mu)
-
-    zmx, mmx = -10000.0, -1
-    for m in test_local:
-        gi = inner[m]
-        if z[m] > zmx and (yb[gi] < minv[gi] or yb[gi] > maxv[gi]):
-            zmx, mmx = float(z[m]), m
-    if mmx >= 0:
-        gi = inner[mmx]
-        thr = tpos[gi] if (yo[gi] - yb[gi]) >= 0 else tneg[gi]
-        if zmx > thr:
-            return True, [(gi, BAD, zmx)]
-    if set_flag0:
-        return True, [(inner[m], GOOD, np.nan) for m in test_local]
-    return True, []
-
-
-def _sct_resistant_kernel(pdf: pd.DataFrame, *, phase: int, set_flag0: bool,
-                          cfg: dict) -> pd.DataFrame:
-    ids = pdf["_sid"].to_numpy()
-    lats = pdf["_slat"].to_numpy(dtype=float)
-    lons = pdf["_slon"].to_numpy(dtype=float)
-    elevs = pdf["_selev"].to_numpy(dtype=float)
-    values = pdf["_svalue"].to_numpy(dtype=float)
-    obs = pdf["_sobs"].to_numpy(dtype=bool)
-    core = pdf["_score"].to_numpy(dtype=bool)
-    state = pdf["_sstate"].to_numpy(dtype=np.int32).copy()
-    orig_state = state.copy()
-    ext = pdf["_sbg"].to_numpy(dtype=float)
-    pts = np.stack(
-        [pdf["_sx"].to_numpy(float), pdf["_sy"].to_numpy(float),
-         pdf["_sz"].to_numpy(float)],
-        axis=1,
-    )
-    n = len(ids)
-    scores = np.full(n, np.nan)
-    score_set = np.zeros(n, dtype=bool)
-
-    def band(key, default):
-        spec = cfg[key]
-        if spec[0] == "col":
-            return pdf[spec[1]].to_numpy(dtype=float)
-        v = default if spec[1] is None else float(spec[1])
-        return np.full(n, v)
-
-    mina = band("mina", -np.inf)
-    maxa = band("maxa", np.inf)
-    minv = band("minv", np.inf)    # None => empty valid band (never vouches)
-    maxv = band("maxv", -np.inf)
-    eps2 = band("eps2", 0.5)
-    tpos = band("tpos", 3.0)
-    tneg = band("tneg", 3.0)
-
-    is_fgt = cfg.get("core") == "fgt"
-    sigmab = band("sigma_b", 1.0) if is_fgt else None
-
-    minp, maxp = cfg["minp"], cfg["maxp"]
-    num_min_outer = cfg["num_min_outer"]
-    num_max_outer = cfg["num_max_outer"]
-    inner_radius = cfg["inner_radius"]
-    outer_radius = cfg["outer_radius"]
-    flag_iso_inner = cfg["flag_iso_inner"]
-    flag_iso_outer = cfg["flag_iso_outer"]
-
-    core_kw = dict(
-        minp=minp, maxp=maxp,
-        dh_min=cfg["min_horizontal_scale"], dh_max=cfg["max_horizontal_scale"],
-        kth=cfg["kth_closest"], dz=cfg["vertical_scale"], basic=cfg["basic"],
-    )
-
-    # Dense-cell guard (phase 1 only): a co-located centroid whose twin
-    # already swept with the SAME flag state computes an identical circle
-    # and identical updates — skipping the repeat pass is a no-op. The
-    # memo is invalidated whenever any state changes, so live flag
-    # propagation within the pass is untouched. Phases 2/3 single out
-    # `curr` itself (test_just_this) and are not memoizable.
-    pos_seen: dict = {}
-    state_ver = 0
-
-    # output-sensitive radius/kNN index (see _neighbors.py): identical
-    # results to the naive per-centroid scan, O(candidates) per query for
-    # dense distinct-location cells
-    nbr = CellNeighborhood(pts, ids, outer_radius, num_max_outer)
-
-    order = np.argsort(ids, kind="stable")
-    for curr in order:
-        if not core[curr] or not obs[curr]:
-            continue
-        if phase in (1, 2):
-            if state[curr] != NA_STATE:
-                continue
-        else:  # phase 3: re-check plausible bad rows (:563-566)
-            if state[curr] != BAD or values[curr] < minp or values[curr] > maxp:
-                continue
-        if phase == 1:
-            pos_key = (pts[curr, 0], pts[curr, 1], pts[curr, 2])
-            if pos_seen.get(pos_key) == state_ver:
-                continue
-            pos_seen[pos_key] = state_ver
-
-        # radius query truncated to nearest num_max_outer BEFORE the flag
-        # filter (:242-268) — output-sensitive index, naive-scan-identical
-        guess, d_guess = nbr.query(curr)
-        if phase == 1:
-            keep = state[guess] != BAD
-        else:
-            keep = (state[guess] != BAD) & (guess != curr)
-        sel = guess[keep]
-        d_sel = d_guess[keep]
-        if phase != 1:
-            sel = np.append(sel, curr)                # test_just_this append
-            d_sel = np.append(d_sel, 0.0)             # d(curr, curr) == 0
-
-        if sel.size < num_min_outer:
-            state[curr] = flag_iso_outer
-            state_ver += 1
-            continue
-        inner_mask = d_sel <= inner_radius            # curr: d=0 -> inner
-        if int(inner_mask.sum()) < 2:
-            state[curr] = flag_iso_inner
-            state_ver += 1
-            continue
-
-        try:
-            vp = _background_box(
-                cfg["background_elab_type"], elevs[sel], values[sel], ext[sel],
-                cfg["num_min_prof"], cfg["min_elev_diff"], minp, maxp,
-            )
-        except Exception:
-            continue
-
-        if phase == 1:
-            st = state[sel]
-            test_mask = inner_mask & obs[sel] & (st != GOOD) & (st != BAD)
-        else:
-            test_mask = sel == curr
-        if not test_mask.any():
-            continue
-
-        tsel = np.where(test_mask)[0]
-        if phase == 1:  # non-strict band (:355-362)
-            small = bool(
-                np.all((vp[tsel] >= minv[sel][tsel]) & (vp[tsel] <= maxv[sel][tsel]))
-            )
-        else:           # strict band (:515-521)
-            j = tsel[0]
-            small = bool((vp[j] > minv[sel][j]) & (vp[j] < maxv[sel][j]))
-        if small:
-            state[sel[tsel]] = GOOD
-            state_ver += 1
-            continue
-
-        if is_fgt:
-            ok, updates = _fgt_core_np(
-                values[sel], vp, sigmab[sel], tpos[sel], tneg[sel],
-                mina[sel], maxa[sel], minv[sel], maxv[sel],
-                inner_mask, test_mask,
-                basic=cfg["basic"], set_flag0=set_flag0,
-            )
-        else:
-            ok, updates = _sct_core_np(
-                lats[sel], lons[sel], elevs[sel], values[sel], vp,
-                eps2[sel], tpos[sel], tneg[sel], mina[sel], maxa[sel],
-                minv[sel], maxv[sel], inner_mask, test_mask,
-                set_flag0=set_flag0, **core_kw,
-            )
-        if not ok:
-            state[curr] = FAILED_INVERSION  # :380-384
-            state_ver += 1
-            continue
-        if updates:
-            state_ver += 1
-        for local_i, new_state, sc in updates:
-            gi = sel[local_i]
-            state[gi] = new_state
-            if not np.isnan(sc):
-                scores[gi] = sc
-                score_set[gi] = True
-
-    changed = core & ((state != orig_state) | score_set)
-    return pd.DataFrame(
-        {
-            "_sid": ids[changed],
-            "_state": state[changed],
-            "score": scores[changed],
-        }
-    )
+def _innovation_decide(cell, sel, inner_mask, test_mask, phase, set_flag0, *,
+                       core, mode, num_min_prof, min_elev_diff):
+    """Background, the small_innov shortcut, then ``core`` — the decision
+    hook of sct_resistant (core = sct_core) and fgt_spatial (fgt_core)."""
+    yb = _background_box(mode, cell.elev[sel], cell.value[sel], cell.bg[sel],
+                         num_min_prof, min_elev_diff, cell.minp, cell.maxp)
+    tsel = np.where(test_mask)[0]
+    minv, maxv = cell.minv[sel], cell.maxv[sel]
+    if phase == 1:  # non-strict band (:355-362)
+        small = bool(np.all((yb[tsel] >= minv[tsel]) & (yb[tsel] <= maxv[tsel])))
+    else:           # strict band (:515-521)
+        j = tsel[0]
+        small = bool((yb[j] > minv[j]) & (yb[j] < maxv[j]))
+    if small:
+        return [(j, GOOD, np.nan) for j in tsel]
+    return core(cell, sel, yb, inner_mask, test_mask, set_flag0)
 
 
 def sct_resistant(
@@ -443,88 +184,50 @@ def sct_resistant(
     offender rule, reference `scores`, include/titanlib.h:131).
 
     Band params (value_mina/maxa/minv/maxv) and eps2/tpos/tneg accept a
-    scalar or a column name (per-row vectors, reference convention)."""
-    df = ensure_flags(df, flag_col)
-    df = apply_check_flags(
-        df, F.when(is_invalid_value(F.col(value_col)), BAD).otherwise(GOOD), flag_col
+    scalar or a column name (per-row vectors, reference convention).
+    An unknown background_elab_type raises ValueError."""
+    check_choice("background_elab_type", background_elab_type, BACKGROUND_MODES)
+    core = partial(
+        _sct_core_np,
+        dh_min=float(min_horizontal_scale),
+        dh_max=float(max_horizontal_scale),
+        kth=int(kth_closest),
+        dz=float(vertical_scale),
+        basic=bool(basic),
     )
-
-    # plausible range = extremes of the admissible bands (:191-196);
-    # one scalar-aggregate job covers both column-valued bands
-    from titanlib_spark.operators._sct_phases import plausible_range
-
-    minp, maxp = plausible_range(df, value_mina, value_maxa)
-
-    cfg = dict(
-        background_elab_type=background_elab_type,
-        num_min_outer=int(num_min_outer),
-        num_max_outer=int(num_max_outer),
-        inner_radius=float(inner_radius),
-        outer_radius=float(outer_radius),
+    decide = partial(
+        _innovation_decide,
+        core=core,
+        mode=background_elab_type,
         num_min_prof=int(num_min_prof),
         min_elev_diff=float(min_elev_diff),
-        min_horizontal_scale=float(min_horizontal_scale),
-        max_horizontal_scale=float(max_horizontal_scale),
-        kth_closest=int(kth_closest),
-        vertical_scale=float(vertical_scale),
-        basic=bool(basic),
-        minp=minp,
-        maxp=maxp,
-        flag_iso_inner=ISOLATED_INNER if not accept_isolated else GOOD,
-        flag_iso_outer=ISOLATED_OUTER if not accept_isolated else GOOD,
-        mina=scalar_or_col(value_mina),
-        maxa=scalar_or_col(value_maxa),
-        minv=scalar_or_col(value_minv),
-        maxv=scalar_or_col(value_maxv),
-        eps2=scalar_or_col(eps2),
-        tpos=scalar_or_col(tpos),
-        tneg=scalar_or_col(tneg),
     )
-    band_cols = sorted(
-        {spec[1] for key in ("mina", "maxa", "minv", "maxv", "eps2", "tpos", "tneg")
-         for spec in [cfg[key]] if spec[0] == "col"}
-    )
-
-    # slim working projection: computed ONCE, state updated per pass
-    pts = with_ecef(df.where(F.col(flag_col) == GOOD), lat_col, lon_col)
-    pool = pts.select(
-        F.col(id_col).alias("_sid"),
-        F.col(lat_col).cast("double").alias("_slat"),
-        F.col(lon_col).cast("double").alias("_slon"),
-        F.coalesce(F.col(elev_col).cast("double"), F.lit(0.0)).alias("_selev"),
-        F.col(value_col).cast("double").alias("_svalue"),
-        (
-            F.col(obs_to_check).cast("boolean") if obs_to_check else F.lit(True)
-        ).alias("_sobs"),
-        (
-            F.col(background_col).cast("double")
-            if background_col
-            else F.lit(None).cast("double")
-        ).alias("_sbg"),
-        F.col("x").alias("_sx"),
-        F.col("y").alias("_sy"),
-        F.col("z").alias("_sz"),
-        *[F.col(c).cast("double").alias(c) for c in band_cols],
-    )
-
-    def kernel(pdf: pd.DataFrame, phase: int, set_flag0: bool) -> pd.DataFrame:
-        return _sct_resistant_kernel(pdf, phase=phase, set_flag0=set_flag0, cfg=cfg)
-
-    verdict = three_phase_driver(
-        pool,
-        kernel,
-        outer_radius=float(outer_radius),
-        num_iterations=int(num_iterations),
-        band_cols=band_cols,
+    return circle_check(
+        df,
+        decide,
+        bands=dict(
+            mina=band(value_mina, -np.inf),
+            maxa=band(value_maxa, np.inf),
+            minv=band(value_minv, np.inf),    # None: empty valid band
+            maxv=band(value_maxv, -np.inf),   # (never vouches)
+            eps2=band(eps2, 0.5),
+            tpos=band(tpos, 3.0),
+            tneg=band(tneg, 3.0),
+        ),
+        num_min_outer=num_min_outer,
+        num_max_outer=num_max_outer,
+        inner_radius=inner_radius,
+        outer_radius=outer_radius,
+        num_iterations=num_iterations,
+        accept_isolated=accept_isolated,
+        isolate_inner=True,
+        with_score=True,
+        obs_to_check=obs_to_check,
+        background_col=background_col,
         id_col=id_col,
-    ).select(
-        id_col,
-        F.col("_state").alias("_new_flag"),
-        F.col("score").alias("_new_score"),
+        lat_col=lat_col,
+        lon_col=lon_col,
+        elev_col=elev_col,
+        value_col=value_col,
+        flag_col=flag_col,
     )
-    joined = df.join(verdict, on=id_col, how="left")
-    joined = joined.withColumn("score", F.col("_new_score"))
-    joined = apply_check_flags(
-        joined, F.coalesce(F.col("_new_flag"), F.lit(GOOD)), flag_col
-    ).drop("_new_flag", "_new_score")
-    return joined
