@@ -1,21 +1,34 @@
-"""Rule-23 margin audit for the buddy_check position rollup.
+"""Rule-23 margin audit for the buddy_check oracle.
 
-The rollup computes buddy mean/variance from summed per-position moments
-(sum v, sum v^2) instead of Spark's streaming avg/var_pop over pair rows.
-Both are reassociations of the same IEEE sums (Spark's partial aggregation
-order is already nondeterministic), so the only way the flag could differ
-from the DuckDB oracle is a comparison sitting within ~1e-12 relative of
-its boundary. This script computes, per row at the correctness SFs, the
-distance of every decision quantity from its boundary and prints the
-minima. Margins >= 1e-6 are safe (CLAUDE.md rule 23).
+buddy_check computes buddy mean/variance from per-key moments (count,
+avg, var_pop per (lat, lon) key) shifted on each pair by the query key's
+pivot, its min value: S1 = sum n_k (mean_k - pivot), S2 = sum n_k (var_k +
+(mean_k - pivot)^2), var = S2/n - (S1/n)^2, |value - mean| = |(value -
+pivot) - S1/n|. The DuckDB oracle uses avg/var_pop over pair rows. Both
+are reassociations of the same sums (Spark's partial aggregation order is
+already nondeterministic) with no cancellation beyond (mean - pivot)^2 /
+var, so a flag can only differ when a comparison sits within ~1e-12
+relative of its boundary. This script computes, per row, the distance of
+every decision quantity from its boundary and prints the minima; it exits
+1 when one is below MIN_MARGIN = 1e-6 (the rule-23 cross-engine floor).
 
 Boundaries audited (harness params: num_min=5, threshold=2.0, min_std=0.1):
 * |value - mean| / std_adj  vs  threshold   (the flag comparison)
 * sqrt(var + var/n)         vs  min_std     (the greatest() branch)
 * n                         vs  num_min     (integer — exact, skipped)
+
+Run: python scripts/buddy_margin_audit.py [SF_DIR ...]
+(default: the sf0.001 and sf0.01 correctness scales, DEFAULT_SF_DIRS)
 """
 
+import os
+import sys
+
 import duckdb
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from __spark_entry__ import DEFAULT_SF  # noqa: E402
 
 RADIUS = 2500.0
 NUM_MIN = 5
@@ -64,9 +77,25 @@ SELECT
 FROM m
 """
 
-for d in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-    row = duckdb.connect().execute(
-        Q.format(dir=d, r=RADIUS, num_min=NUM_MIN, thr=THRESHOLD, min_std=MIN_STD)
-    ).fetchone()
-    print(f"{d}: min |dev/std - thr| = {row[0]:.3e}  "
-          f"min |std - min_std| = {row[1]:.3e}  rows = {row[2]}")
+MIN_MARGIN = 1e-6
+DEFAULT_SF_DIRS = [DEFAULT_SF, os.path.join(os.path.dirname(DEFAULT_SF), "sf0.01")]
+
+
+def main() -> int:
+    failures = []
+    for d in sys.argv[1:] or DEFAULT_SF_DIRS:
+        flag_m, std_m, n = duckdb.connect().execute(
+            Q.format(dir=d, r=RADIUS, num_min=NUM_MIN, thr=THRESHOLD, min_std=MIN_STD)
+        ).fetchone()
+        print(f"{d}: min |dev/std - thr| = {flag_m:.3e}  "
+              f"min |std - min_std| = {std_m:.3e}  rows = {n}")
+        failures += [(d, m) for m in (flag_m, std_m) if m < MIN_MARGIN]
+    if failures:
+        print("MARGIN FAILURES:", failures)
+        return 1
+    print("all margins clear of cross-engine noise")
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

@@ -139,6 +139,24 @@ class TestBuddyCheck:
         )
         assert flags_of(out) == [1] * 10
 
+    def test_oracle_margins_clear_of_noise(self):
+        """Every decision boundary of the buddy_check oracle (flag
+        threshold, min_std branch) must sit >= 1e-6 from its computed
+        value, so the shifted-moment stats and DuckDB's var_pop agree on
+        every flag. Pure DuckDB, no Spark session."""
+        import os
+        import subprocess
+        import sys
+
+        from conftest import SF_DIR
+
+        r = subprocess.run(
+            [sys.executable, "scripts/buddy_margin_audit.py", SF_DIR],
+            capture_output=True, text=True, timeout=300,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
+        assert r.returncode == 0, r.stdout + r.stderr
+
 
 class TestBuddyEventCheck:
     def test_fraction_mode(self, spark):

@@ -18,8 +18,10 @@ import math
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from titanlib_spark.operators import (
     buddy_check,
@@ -164,8 +166,11 @@ def _buddy_event_model(lat, lon, elev, value, *, radius, num_min,
 
 def _isolation_model(lat, lon, elev, *, num_min, radius, vertical_radius):
     """Reference isolation_check semantics: neighbors among valid-coord
-    rows (values/flags irrelevant), optional symmetric elevation band."""
+    rows (values/flags irrelevant), optional symmetric elevation band.
+    `radius` is a scalar or a length-n vector (row i's radius gates row
+    i's neighbors)."""
     n = len(lat)
+    radius = np.broadcast_to(np.asarray(radius, float), (n,))
     located = np.isfinite(lat) & np.isfinite(lon)
     if vertical_radius is not None:
         bad_coord = ~located | ~np.isfinite(elev)
@@ -178,7 +183,7 @@ def _isolation_model(lat, lon, elev, *, num_min, radius, vertical_radius):
         if bad_coord[i]:
             flags[i] = 1
             continue
-        nb = located & (d2[i] > 0) & (d2[i] <= radius * radius)
+        nb = located & (d2[i] > 0) & (d2[i] <= radius[i] * radius[i])
         nb[i] = False
         if vertical_radius is not None:
             nb &= np.abs(elev[i] - elev) <= vertical_radius
@@ -524,6 +529,193 @@ def test_isolation_check_matches_brute_force(spark, pdf, radius, num_min,
     out = isolation_check(
         spark.createDataFrame(pdf), num_min=num_min, radius=radius,
         vertical_radius=vertical_radius,
+    )
+    got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
+    assert [got[i] for i in range(len(pdf))] == list(expected)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture,
+                           HealthCheck.too_slow],
+)
+@given(
+    pdf=stations(),
+    num_min=st.integers(1, 4),
+    vertical_radius=st.sampled_from([None, 120.0]),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_isolation_check_per_row_radius_matches_brute_force(
+    spark, pdf, num_min, vertical_radius, seed
+):
+    """Per-row `radius` column: each row's own radius gates its count."""
+    rng = np.random.default_rng(seed)
+    pdf = pdf.assign(rad=rng.uniform(2_000, 30_000, len(pdf)))
+    expected = _isolation_model(
+        pdf.lat.to_numpy(), pdf.lon.to_numpy(), pdf.elev.to_numpy(),
+        num_min=num_min, radius=pdf.rad.to_numpy(),
+        vertical_radius=vertical_radius,
+    )
+    out = isolation_check(
+        spark.createDataFrame(pdf), num_min=num_min, radius="rad",
+        vertical_radius=vertical_radius, cell_size=30_000.0,
+    )
+    got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
+    assert [got[i] for i in range(len(pdf))] == list(expected)
+
+
+@pytest.mark.parametrize("max_elev_diff", [-1.0, 3.0])
+def test_buddy_check_large_offset_matches_brute_force(spark, max_elev_diff):
+    """Values 1e7 + N(0, 0.01): raw moments (sum v^2 / n - mean^2) cancel
+    to a variance of ~0 here and flag most rows against min_std = 1e-5;
+    the shifted moments must reproduce numpy's two-pass variance, with
+    and without the lapse adjustment."""
+    rng = np.random.default_rng(20261018)
+    n = 30
+    pdf = pd.DataFrame({
+        "id": np.arange(n, dtype=np.int64),
+        "lat": rng.uniform(50.0, 50.1, n),
+        "lon": rng.uniform(10.0, 10.1, n),
+        "elev": rng.uniform(0.0, 5.0, n),
+        "value": 1e7 + rng.normal(0.0, 0.01, n),
+    })
+    params = dict(radius=15_000.0, num_min=3, threshold=1.0,
+                  max_elev_diff=max_elev_diff, elev_gradient=-0.0065,
+                  min_std=1e-5, num_iterations=2)
+    expected = _buddy_model(
+        pdf.lat.to_numpy(), pdf.lon.to_numpy(), pdf.elev.to_numpy(),
+        pdf.value.to_numpy(), **params,
+    )
+    assert 0 < expected.sum() < n  # the case separates good from bad
+    out = buddy_check(spark.createDataFrame(pdf), **params)
+    got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
+    assert [got[i] for i in range(n)] == list(expected)
+
+
+@st.composite
+def lattice_stations(draw, values, min_n=4, max_n=30):
+    """Rows on a 3x3 lattice (0.01 deg spacing: 0.7-1.1 km between
+    neighbors), so several rows share each position; elev drawn from a
+    few levels incl. NaN, so (position, elev) keys repeat too."""
+    n = draw(st.integers(min_n, max_n))
+    cells = [draw(st.integers(0, 8)) for _ in range(n)]
+    levels = st.sampled_from([0.0, 60.0, 200.0, float("nan")])
+    return pd.DataFrame({
+        "id": np.arange(n, dtype=np.int64),
+        "lat": [50.0 + (c // 3) * 0.01 for c in cells],
+        "lon": [10.0 + (c % 3) * 0.01 for c in cells],
+        "elev": [draw(levels) for _ in range(n)],
+        "value": [draw(values) for _ in range(n)],
+    })
+
+
+def _with_null_elev(spark, pdf):
+    """Spark frame whose NaN elevations are NULL on odd ids (both are
+    invalid; the models read NaN for either)."""
+    df = spark.createDataFrame(pdf)
+    return df.withColumn(
+        "elev",
+        F.when(F.isnan("elev") & (F.col("id") % 2 == 1), F.lit(None))
+        .otherwise(F.col("elev")),
+    )
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture,
+                           HealthCheck.too_slow],
+)
+@given(
+    pdf=lattice_stations(maybe_nan_val),
+    radius=st.one_of(st.floats(500, 3_000), st.just("rad")),
+    num_min=st.integers(1, 6),
+    vertical_radius=st.sampled_from([None, 120.0]),
+)
+def test_isolation_check_lattice_matches_brute_force(spark, pdf, radius,
+                                                     num_min, vertical_radius):
+    """Co-located rows: counts per (position, elev, radius) key."""
+    pdf = pdf.assign(rad=[(800.0, 1_500.0, 2_500.0)[i % 3] for i in range(len(pdf))])
+    rad = pdf.rad.to_numpy() if radius == "rad" else radius
+    expected = _isolation_model(
+        pdf.lat.to_numpy(), pdf.lon.to_numpy(), pdf.elev.to_numpy(),
+        num_min=num_min, radius=rad, vertical_radius=vertical_radius,
+    )
+    out = isolation_check(
+        _with_null_elev(spark, pdf), num_min=num_min, radius=radius,
+        vertical_radius=vertical_radius, cell_size=3_000.0,
+    )
+    got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
+    assert [got[i] for i in range(len(pdf))] == list(expected)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture,
+                           HealthCheck.too_slow],
+)
+@given(
+    pdf=lattice_stations(maybe_nan_val),
+    radius=st.floats(500, 3_000),
+    num_min=st.integers(1, 6),
+    threshold=st.floats(0.5, 3.0),
+    max_elev_diff=st.sampled_from([-1.0, 150.0]),
+    min_std=st.one_of(st.just(0.0), st.floats(0.1, 2.0)),
+    iters=st.integers(1, 2),
+)
+def test_buddy_check_lattice_matches_brute_force(spark, pdf, radius, num_min,
+                                                 threshold, max_elev_diff,
+                                                 min_std, iters):
+    """Co-located rows: moments pre-aggregated per (position[, elev]) key."""
+    params = dict(radius=radius, num_min=num_min, threshold=threshold,
+                  max_elev_diff=max_elev_diff, elev_gradient=-0.0065,
+                  min_std=min_std, num_iterations=iters)
+    expected = _buddy_model(
+        pdf.lat.to_numpy(), pdf.lon.to_numpy(), pdf.elev.to_numpy(),
+        pdf.value.to_numpy(), **params,
+    )
+    out = buddy_check(_with_null_elev(spark, pdf), **params)
+    got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
+    assert [got[i] for i in range(len(pdf))] == list(expected)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture,
+                           HealthCheck.too_slow],
+)
+@given(
+    pdf=lattice_stations(st.sampled_from([-1.0, 0.5, 2.0, 4.0, float("nan")])),
+    radius=st.floats(500, 3_000),
+    num_min=st.integers(1, 6),
+    event_threshold=st.sampled_from([0.5, 1.0, 3.0, "et"]),
+    threshold=st.one_of(st.floats(0.05, 0.9), st.floats(1.0, 3.0)),
+    max_elev_diff=st.sampled_from([-1.0, 150.0]),
+    iters=st.integers(1, 2),
+)
+def test_buddy_event_check_lattice_matches_brute_force(
+    spark, pdf, radius, num_min, event_threshold, threshold, max_elev_diff,
+    iters
+):
+    """Co-located rows with repeated values: keys grow by value (and the
+    per-row threshold) when the event bit reads the query row."""
+    pdf = pdf.assign(et=[(0.5, 3.0)[i % 2] for i in range(len(pdf))])
+    et = pdf.et.to_numpy() if event_threshold == "et" else event_threshold
+    expected = _buddy_event_model(
+        pdf.lat.to_numpy(), pdf.lon.to_numpy(), pdf.elev.to_numpy(),
+        pdf.value.to_numpy(),
+        radius=radius, num_min=num_min, event_threshold=et,
+        threshold=threshold, max_elev_diff=max_elev_diff,
+        elev_gradient=-0.0065, num_iterations=iters,
+    )
+    out = buddy_event_check(
+        _with_null_elev(spark, pdf), radius=radius, num_min=num_min,
+        event_threshold=event_threshold, threshold=threshold,
+        max_elev_diff=max_elev_diff, elev_gradient=-0.0065,
+        num_iterations=iters,
     )
     got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
     assert [got[i] for i in range(len(pdf))] == list(expected)

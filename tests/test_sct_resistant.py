@@ -83,6 +83,17 @@ def test_unknown_background_mode_raises(spark, mode):
         sct_resistant(df, background_elab_type=mode)
 
 
+@pytest.mark.parametrize("op", ["sct_resistant", "fgt_spatial"])
+def test_external_background_requires_column(spark, op):
+    """"external" without background_col used to read a NULL background
+    for every row and condemn most of them; now it is refused up front."""
+    from titanlib_spark import operators
+
+    df, _ = _grid_df(spark)
+    with pytest.raises(ValueError, match="requires background_col"):
+        getattr(operators, op)(df, background_elab_type="external")
+
+
 def test_accept_isolated_false_flags_11_12(spark):
     # 3 clustered stations + 1 far-away station: the lone one cannot gather
     # num_min_outer neighbors -> flag 11/12 when accept_isolated=False

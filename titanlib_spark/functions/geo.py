@@ -318,6 +318,91 @@ def undirected_neighbor_pairs(
     return undirected, pts, per_row_radius
 
 
+def _neighbor_key_sums(
+    df: DataFrame,
+    radius,
+    key_aggs: dict[str, Column],
+    contrib,
+    pair_cols: tuple[str, ...] = (),
+    elev_gate: tuple[str, float] | None = None,
+    lat_col: str = "lat",
+    lon_col: str = "lon",
+    cell_size: float | None = None,
+    coord_type: str = "geodetic",
+) -> tuple[DataFrame, list[str]]:
+    """Per-row sums over each row's radius neighbours (self and
+    co-located rows excluded) — the one neighbour-statistics plan of
+    isolation_check, buddy_check and buddy_event_check.
+
+    Grouping key = position (lat, lon) + EVERY column the per-pair math
+    reads: the `elev_gate` column, a per-row `radius` column and
+    `pair_cols` (a lapse elevation, a per-row event threshold, the
+    neighbour's own value when its contribution depends on the query
+    row). Rows with equal keys then see the same neighbours with the same
+    contributions, so a row's sums are its key's sums. The dsq > 0 rule
+    already drops every co-located pair, so keys at one position never
+    pair with each other. Dense lattices collapse to one key per
+    position; with unique positions each key is one row and the plan is
+    the per-point pair join.
+
+    Plan: `key_aggs` ({name: aggregate}) pre-aggregate each key; keys pair
+    once on the undirected grid join; the symmetric `elev_gate`
+    (|elev_a - elev_b| <= limit, a NULL/NaN elev drops the pair) and
+    `contrib(q, n)` run on the UNDIRECTED row (rule 11). `q(c)`/`n(c)`
+    read key column or key aggregate `c` of the query/neighbour key;
+    `contrib` returns {name: Column} for that direction. With a per-row
+    radius a direction past its query key's radius contributes NULL. Both
+    directions explode as (query key, contributions) structs and sum per
+    query key; sum skips NULL, so integer contributions give integer sums
+    bit-identical to a per-point count.
+
+    Returns (sums, key): `sums` holds the key columns, the query key's own
+    `key_aggs` and one sum per `contrib` name, for a left join back on
+    `key`. A key with no contributing neighbour has no row, and a row
+    with a NULL key column matches none."""
+    per_row_radius = isinstance(radius, str)
+    key = list(dict.fromkeys(
+        [lat_col, lon_col]
+        + ([elev_gate[0]] if elev_gate else [])
+        + ([radius] if per_row_radius else [])
+        + list(pair_cols)
+    ))
+    keyed = (
+        df.groupBy(*key)
+        .agg(*[e.alias(n) for n, e in key_aggs.items()])
+        .withColumn("_key", F.struct(*key, *key_aggs))
+    )
+    und, _, _ = undirected_neighbor_pairs(
+        keyed, radius, id_col="_key", lat_col=lat_col, lon_col=lon_col,
+        include_self=False, cell_size=cell_size, coord_type=coord_type,
+    )
+
+    def side(s):
+        return lambda c: F.col(f"_id{s}")[c]
+
+    if elev_gate:
+        e, limit = elev_gate
+        und = und.where(F.abs(side("a")(e) - side("b")(e)) <= float(limit))
+
+    def direction(qs, ns):
+        terms = contrib(side(qs), side(ns))
+        if per_row_radius:
+            within = F.col("dist") <= F.col(f"_r{qs}")
+            terms = {k: F.when(within, c) for k, c in terms.items()}
+        return F.struct(
+            F.col(f"_id{qs}").alias("_q"), *[c.alias(k) for k, c in terms.items()]
+        ), list(terms)
+
+    (d_ab, names), (d_ba, _) = direction("a", "b"), direction("b", "a")
+    sums = (
+        und.select(F.explode(F.array(d_ab, d_ba)).alias("_d"))
+        .groupBy(F.col("_d._q").alias("_q"))
+        .agg(*[F.sum(f"_d.{k}").alias(k) for k in names])
+        .select("_q.*", *names)
+    )
+    return sums, key
+
+
 def knn_pairs(
     df: DataFrame,
     k: int,

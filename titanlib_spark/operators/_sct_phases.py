@@ -108,6 +108,17 @@ def check_choice(name: str, value, choices) -> None:
         )
 
 
+def check_background(mode: str, modes, background_col: str | None) -> None:
+    """Refuse an unknown circle-background mode, and an "external" one
+    without its column (every background would read NULL), before any
+    Spark job."""
+    check_choice("background_elab_type", mode, modes)
+    if mode == "external" and background_col is None:
+        raise ValueError(
+            'background_elab_type="external" requires background_col'
+        )
+
+
 def plausible_range(df: DataFrame, mina, maxa):
     """(minp, maxp) = extremes of the admissible bands (reference
     src/sct_resistant.cpp:191-196 / src/fgt.cpp:140-148). Column-valued

@@ -10,8 +10,8 @@ row with at least `num_min` unflagged buddies in `radius`:
   (1 - fraction) <= threshold;
 * threshold >= 1 (count mode, :150-155): same with absolute counts.
 
-Same iteration/early-stop machinery as buddy_check. Spark plan: identical
-grid-join + groupBy, aggregating sum(event) and count.
+Same iteration/early-stop machinery as buddy_check; buddy and event
+counts are integer sums from `functions.geo._neighbor_key_sums`.
 """
 
 from __future__ import annotations
@@ -26,7 +26,8 @@ from titanlib_spark.flags import (
     ensure_flags,
     iterate_flags,
 )
-from titanlib_spark.operators.buddy_check import _buddy_event_stats
+from titanlib_spark.functions.geo import _neighbor_key_sums
+from titanlib_spark.operators.buddy_check import _lapse_terms
 from titanlib_spark.operators.range_check import is_invalid_value
 
 
@@ -62,19 +63,43 @@ def buddy_event_check(
     df = apply_check_flags(
         df, F.when(is_invalid_value(F.col(value_col)), BAD).otherwise(GOOD), flag_col
     )
-    use_elev = elev_col is not None and max_elev_diff > 0
+    gate, adjust = _lapse_terms(elev_col, max_elev_diff, elev_gradient)
+    et_is_col = isinstance(event_threshold, str)
+    v = F.col(value_col)
+    key_aggs = {"_key_n": F.count(v)}
+    if gate is not None or et_is_col:
+        # a neighbour's event bit reads the query row (its elevation or
+        # threshold), so the neighbour's value joins the key
+        pair_cols = (value_col,) + ((event_threshold,) if et_is_col else ())
+
+        def events(q, n):
+            et = q(event_threshold) if et_is_col else F.lit(float(event_threshold))
+            return (adjust(n(value_col), q, n) < et).cast("long") * n("_key_n")
+    else:
+        pair_cols = ()
+        key_aggs["_key_e"] = F.sum((v < F.lit(float(event_threshold))).cast("long"))
+
+        def events(q, n):
+            return n("_key_e")
 
     def one_round(df: DataFrame) -> DataFrame:
         unflagged = df.where(F.col(flag_col) == GOOD)
-        stats, join_on = _buddy_event_stats(
-            unflagged, radius, id_col, lat_col, lon_col, value_col,
-            elev_col if use_elev else None, max_elev_diff, elev_gradient,
-            event_threshold, cell_size, coord_type,
+        stats, key = _neighbor_key_sums(
+            unflagged,
+            radius,
+            key_aggs,
+            lambda q, n: {"_n_buddies": n("_key_n"), "_n_event": events(q, n)},
+            pair_cols=pair_cols,
+            elev_gate=gate,
+            lat_col=lat_col,
+            lon_col=lon_col,
+            cell_size=cell_size,
+            coord_type=coord_type,
         )
-        # position-keyed stats may also match already-flagged rows sharing
-        # a position with unflagged ones; the monotone flag merge makes
-        # that difference unobservable
-        joined = df.join(stats, on=join_on, how="left")
+        # key-joined stats may also match already-flagged rows sharing a
+        # key with unflagged ones; the monotone flag merge makes that
+        # unobservable
+        joined = df.join(stats, on=key, how="left")
         _pcol = lambda v, cast: F.col(v) if isinstance(v, str) else F.lit(cast(v))
         thr = _pcol(threshold, float)
         is_event = F.col(value_col) < _pcol(event_threshold, float)
@@ -95,6 +120,6 @@ def buddy_event_check(
             verdict = verdict & (F.col(obs_to_check) == 1)
         return apply_check_flags(
             joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
-        ).drop("_n_buddies", "_n_event")
+        ).drop(*[c for c in stats.columns if c not in key])
 
     return iterate_flags(df, one_round, num_iterations, flag_col)

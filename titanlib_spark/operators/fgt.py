@@ -49,7 +49,7 @@ from titanlib_spark.flags import (
 )
 from titanlib_spark.operators._sct_phases import (
     band,
-    check_choice,
+    check_background,
     circle_check,
     robust_z_verdict,
 )
@@ -234,12 +234,16 @@ def fgt_spatial(
     decision (per-circle background, small_innov shortcut) with fgt_core
     instead of the OI. Returns df with `flags` (0/1/11/12 vocabulary) and
     a `score` column (the z of the single worst offender per
-    condemnation). An unknown background_elab_type raises ValueError.
+    condemnation). An unknown background_elab_type, or "external" without
+    `background_col`, raises ValueError. A NULL external background is
+    NaN: that row's chi is NaN, so it is never admissible nor the worst
+    offender, and a circle whose inner rows all have NULL backgrounds
+    flags all its test rows BAD.
 
     `background_uncertainty_col` names the per-row sigma_b column
     (reference background_uncertainties, used with external backgrounds;
     defaults to 1 like src/fgt.cpp:119)."""
-    check_choice("background_elab_type", background_elab_type, BACKGROUND_MODES)
+    check_background(background_elab_type, BACKGROUND_MODES, background_col)
     decide = partial(
         _innovation_decide,
         core=partial(_fgt_core_np, basic=bool(basic)),

@@ -7,18 +7,10 @@ Reference src/isolation_check.cpp:31-92: a row is flagged when
   excluding the point itself / coordinate-identical points), optionally
   restricted to neighbors whose |elev diff| <= vertical_radius.
 
-Spark plan: the neighbor count of a point depends ONLY on its exact
-position (coordinate-identical points are excluded by the dsq > 0 rule,
-so every point at a position sees the same neighbor set): aggregate
-points per distinct position first, run the grid-bucketed pair join at
-POSITION granularity (pair volume drops from O(n * k) to
-O(p * k_pos) — the harness's 40x40 lattice turns 150k points into 1,600
-positions and a ~400M-row pair explosion into ~25k), then left-join the
-per-position counts back on the position key. Counts are integer sums of
-integer per-position counts over the identical distance predicate, so
-the result is bit-identical to the per-point join. Falls back to the
-per-point pair join only for a per-row radius column (a position may
-then mix radii).
+`radius` is a scalar in meters or a per-row column name (then pass
+cell_size >= max radius). Neighbor counts come from
+`functions.geo._neighbor_key_sums` (integer sums, bit-identical to a
+per-point count).
 
 Neighbors are counted among ALL located points regardless of their flags —
 the reference operates on a bare Points set; flag-pushdown (running only on
@@ -31,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from titanlib_spark.flags import BAD, GOOD, apply_check_flags
-from titanlib_spark.functions.geo import undirected_neighbor_pairs
+from titanlib_spark.functions.geo import _neighbor_key_sums
 from titanlib_spark.operators.range_check import is_invalid_value
 
 
@@ -48,97 +40,28 @@ def isolation_check(
     coord_type: str = "geodetic",
     cell_size: float | None = None,
 ) -> DataFrame:
-    bad_coord = is_invalid_value(F.col(lat_col)) | is_invalid_value(F.col(lon_col))
+    bad_pos = is_invalid_value(F.col(lat_col)) | is_invalid_value(F.col(lon_col))
+    bad_coord = bad_pos
     if vertical_radius is not None:
         bad_coord = bad_coord | is_invalid_value(F.col(elev_col))
 
-    located = df.where(~(is_invalid_value(F.col(lat_col)) | is_invalid_value(F.col(lon_col))))
-    if isinstance(radius, str):
-        # per-row radius: rows at one position may carry different radii,
-        # so counts are per-point — keep the per-point pair join
-        carry = (elev_col,) if vertical_radius is not None else ()
-        und, _, _ = undirected_neighbor_pairs(
-            located,
-            radius,
-            id_col=id_col,
-            lat_col=lat_col,
-            lon_col=lon_col,
-            carry_cols=carry,
-            include_self=False,
-            coord_type=coord_type,
-            cell_size=cell_size,
-        )
-        if vertical_radius is not None:
-            # symmetric vertical gate on the UNDIRECTED row: if either elev
-            # is invalid the |diff| comparison is false and the pair drops
-            # for BOTH directions — exactly the reference's exclusion (an
-            # invalid-elev row is flagged by bad_coord regardless)
-            und = und.where(
-                F.abs(F.col(f"_pa_{elev_col}") - F.col(f"_pb_{elev_col}"))
-                <= float(vertical_radius)
-            )
-        # a direction only counts within ITS query row's radius; NULL ids
-        # are dropped before the count
-        ida = F.when(F.col("dist") <= F.col("_ra"), F.col("_ida"))
-        idb = F.when(F.col("dist") <= F.col("_rb"), F.col("_idb"))
-        counted = und.select(F.explode(F.array(ida, idb)).alias(id_col)).where(
-            F.col(id_col).isNotNull()
-        )
-        counts = counted.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n_neigh"))
-        out = df.join(counts, on=id_col, how="left")
-    else:
-        # position-granularity rollup (module docstring): with a vertical
-        # radius the pair gate reads elev, so elev joins the position key
-        # (an invalid-elev "position" drops all its pairs via the NULL/NaN
-        # comparison, exactly as the per-point gate did)
-        pos_cols = [lat_col, lon_col] + (
-            [elev_col] if vertical_radius is not None else []
-        )
-        pos = (
-            located.groupBy(*pos_cols)
-            .agg(F.count(F.lit(1)).alias("_pos_n"))
-            .withColumn("_pid", F.struct(*pos_cols))
-        )
-        carry = ("_pos_n",) + (
-            (elev_col,) if vertical_radius is not None else ()
-        )
-        und, _, _ = undirected_neighbor_pairs(
-            pos,
-            radius,
-            id_col="_pid",
-            lat_col=lat_col,
-            lon_col=lon_col,
-            carry_cols=carry,
-            include_self=False,
-            coord_type=coord_type,
-            cell_size=cell_size,
-        )
-        if vertical_radius is not None:
-            und = und.where(
-                F.abs(F.col(f"_pa_{elev_col}") - F.col(f"_pb_{elev_col}"))
-                <= float(vertical_radius)
-            )
-        contrib = und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("_ida").alias("_q"), F.col("_pb__pos_n").alias("_c")
-                    ),
-                    F.struct(
-                        F.col("_idb").alias("_q"), F.col("_pa__pos_n").alias("_c")
-                    ),
-                )
-            ).alias("_d")
-        )
-        counts = (
-            contrib.groupBy(F.col("_d._q").alias("_q"))
-            .agg(F.sum("_d._c").alias("_n_neigh"))
-            .select("_q.*", "_n_neigh")
-        )
-        out = df.join(counts, on=pos_cols, how="left")
-    out = out.withColumn(
+    located = df.where(~bad_pos)
+    # an invalid elev drops all of a row's pairs through the gate; such a
+    # row is flagged by bad_coord regardless
+    counts, key = _neighbor_key_sums(
+        located,
+        radius,
+        {"_key_n": F.count(F.lit(1))},
+        lambda q, n: {"_n_neigh": n("_key_n")},
+        elev_gate=(elev_col, vertical_radius) if vertical_radius is not None else None,
+        lat_col=lat_col,
+        lon_col=lon_col,
+        cell_size=cell_size,
+        coord_type=coord_type,
+    )
+    out = df.join(counts, on=key, how="left").withColumn(
         "_n_neigh", F.coalesce(F.col("_n_neigh"), F.lit(0))
     )
     bad = bad_coord | (F.col("_n_neigh") < int(num_min))
     out = apply_check_flags(out, F.when(bad, BAD).otherwise(GOOD), flag_col)
-    return out.drop("_n_neigh")
+    return out.drop("_n_neigh", "_key_n")

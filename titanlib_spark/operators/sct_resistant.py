@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from titanlib_spark.flags import GOOD
 from titanlib_spark.operators._sct_phases import (
     band,
-    check_choice,
+    check_background,
     circle_check,
     robust_z_verdict,
 )
@@ -185,8 +185,13 @@ def sct_resistant(
 
     Band params (value_mina/maxa/minv/maxv) and eps2/tpos/tneg accept a
     scalar or a column name (per-row vectors, reference convention).
-    An unknown background_elab_type raises ValueError."""
-    check_choice("background_elab_type", background_elab_type, BACKGROUND_MODES)
+    An unknown background_elab_type, or "external" without
+    `background_col`, raises ValueError. A NULL external background reads
+    as NaN and poisons every circle holding its row: the OI estimates turn
+    NaN, no row is admissible and the circle's test rows are condemned.
+    The row itself ends BAD; neighbours judged in its company can end BAD
+    too, and a real outlier near it can be missed."""
+    check_background(background_elab_type, BACKGROUND_MODES, background_col)
     core = partial(
         _sct_core_np,
         dh_min=float(min_horizontal_scale),

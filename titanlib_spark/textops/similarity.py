@@ -118,31 +118,12 @@ def cosine_topk(
     )
 
 
-def hyperplane_signature(
-    vec_col: str | Column, dim: int, n_planes: int = 16, seed: int = 7
-) -> Column:
-    """Deterministic random-hyperplane LSH bucket id (int). Planes come from
-    a seeded numpy RNG, embedded as literals (the broadcast-lookup-table
-    pattern: tiny model shipped inside the plan)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[p]])
-        bit = F.when(dot(v, plane) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, p))
-    return bucket
-
-
 def _table_signatures_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     """Arrow UDF computing ALL hyperplane-table signatures in one pass:
-    array<long> of length n_tables. Bit-identical to per-plane
-    `hyperplane_signature` Columns (and to the DuckDB list_reduce oracle):
-    the accumulation loop adds the per-dimension products in strict
-    left-to-right order, so every intermediate rounding matches the fold.
+    array<long> of length n_tables. Bit-identical to the DuckDB
+    list_reduce oracle: the accumulation loop adds the per-dimension
+    products in strict left-to-right order, so every intermediate
+    rounding matches the fold.
     One vectorized pass replaces n_tables*n_planes interpreted HOF dot
     products (~6x on the near-dup query at sf0.1, measured). NULL vectors
     get a NULL signature array (explode skips them: never candidates)."""
