@@ -593,6 +593,39 @@ def test_buddy_check_large_offset_matches_brute_force(spark, max_elev_diff):
     assert [got[i] for i in range(n)] == list(expected)
 
 
+
+@pytest.mark.parametrize("max_elev_diff", [-1.0, 50.0])
+def test_buddy_check_outlier_in_key_matches_brute_force(spark, max_elev_diff):
+    """A 3x3 lattice, four rows per position, values 1e7 + N(0, 0.01),
+    one row of the centre position 1e4 lower: the outlier drags the
+    centre key's pivot (its mean) 2.5e3 = 2.5e5 std away from its
+    buddies' mean. Flags must still match numpy's two-pass variance,
+    with and without the lapse adjustment (one elevation per position,
+    so the lapse key still holds four rows)."""
+    rng = np.random.default_rng(20261019)
+    cell = np.repeat(np.arange(9), 4)
+    n = len(cell)
+    value = 1e7 + rng.normal(0.0, 0.01, n)
+    value[4 * 4] -= 1e4
+    pdf = pd.DataFrame({
+        "id": np.arange(n, dtype=np.int64),
+        "lat": 50.0 + (cell // 3) * 0.01,
+        "lon": 10.0 + (cell % 3) * 0.01,
+        "elev": rng.uniform(0.0, 5.0, 9)[cell],
+        "value": value,
+    })
+    params = dict(radius=1_500.0, num_min=3, threshold=1.0,
+                  max_elev_diff=max_elev_diff, elev_gradient=-0.0065,
+                  min_std=1e-5, num_iterations=2)
+    expected = _buddy_model(
+        pdf.lat.to_numpy(), pdf.lon.to_numpy(), pdf.elev.to_numpy(),
+        pdf.value.to_numpy(), **params,
+    )
+    assert expected[16] == 1 and 1 < expected.sum() < n
+    out = buddy_check(spark.createDataFrame(pdf), **params)
+    got = {r["id"]: r["flags"] for r in out.select("id", "flags").collect()}
+    assert [got[i] for i in range(n)] == list(expected)
+
 @st.composite
 def lattice_stations(draw, values, min_n=4, max_n=30):
     """Rows on a 3x3 lattice (0.01 deg spacing: 0.7-1.1 km between

@@ -258,6 +258,12 @@ def undirected_neighbor_pairs(
 
     pts = with_ecef(df, lat_col, lon_col, coord_type=coord_type)
 
+    # both sides read one frame with the join's not-null filter already
+    # applied, so their inputs are identical (behind a key aggregation,
+    # one shuffle serves both sides)
+    cx, cy, cz = _cell_cols(F.col("x"), F.col("y"), F.col("z"), cell_size)
+    located = pts.where(cx.isNotNull() & cy.isNotNull() & cz.isNotNull())
+
     # Symmetric generation: each unordered pair is found EXACTLY ONCE —
     # same-cell pairs via the (0,0,0) offset with id_a < id_b, cross-cell
     # pairs via the 13 lexicographically-positive offsets (one of +o/-o is
@@ -265,7 +271,7 @@ def undirected_neighbor_pairs(
     # and both directions are then emitted by a 2-element posexplode of the
     # join OUTPUT (no union, so the join is never recomputed) — this halves
     # the dominant shuffle + probe volume of every spatial operator.
-    right = pts.select(
+    right = located.select(
         F.col(id_col).alias("_idb"),
         F.col("x").alias("_bx"),
         F.col("y").alias("_by"),
@@ -276,7 +282,7 @@ def undirected_neighbor_pairs(
     )
 
     left = (
-        pts.select(
+        located.select(
             F.col(id_col).alias("_ida"),
             F.col("x").alias("_ax"),
             F.col("y").alias("_ay"),
@@ -297,6 +303,11 @@ def undirected_neighbor_pairs(
         )
     )
 
+    # the exploded side gets its own shuffle stage, so AQE plans the join
+    # on its measured size: estimated behind an aggregate, its 14x explode
+    # counts once, and AQE broadcast that side (lapse buddy at 1e5 rows:
+    # 2x slower than broadcasting the other side)
+    left = left.repartition("_cx", "_cy", "_cz")
     joined = left.join(right, on=["_cx", "_cy", "_cz"])
     dsq = chord_dist_sq(
         F.col("_ax"), F.col("_ay"), F.col("_az"),
@@ -320,19 +331,22 @@ def undirected_neighbor_pairs(
 
 def _neighbor_key_sums(
     df: DataFrame,
+    pool: Column,
     radius,
     key_aggs: dict[str, Column],
     contrib,
     pair_cols: tuple[str, ...] = (),
     elev_gate: tuple[str, float] | None = None,
+    id_col: str = "id",
     lat_col: str = "lat",
     lon_col: str = "lon",
     cell_size: float | None = None,
     coord_type: str = "geodetic",
-) -> tuple[DataFrame, list[str]]:
-    """Per-row sums over each row's radius neighbours (self and
-    co-located rows excluded) — the one neighbour-statistics plan of
-    isolation_check, buddy_check and buddy_event_check.
+) -> DataFrame:
+    """Per-row sums over each row's radius neighbours among the `pool`
+    rows (self and co-located rows excluded) — the one
+    neighbour-statistics plan of isolation_check, buddy_check and
+    buddy_event_check.
 
     Grouping key = position (lat, lon) + EVERY column the per-pair math
     reads: the `elev_gate` column, a per-row `radius` column and
@@ -345,21 +359,25 @@ def _neighbor_key_sums(
     position; with unique positions each key is one row and the plan is
     the per-point pair join.
 
-    Plan: `key_aggs` ({name: aggregate}) pre-aggregate each key; keys pair
-    once on the undirected grid join; the symmetric `elev_gate`
-    (|elev_a - elev_b| <= limit, a NULL/NaN elev drops the pair) and
-    `contrib(q, n)` run on the UNDIRECTED row (rule 11). `q(c)`/`n(c)`
-    read key column or key aggregate `c` of the query/neighbour key;
-    `contrib` returns {name: Column} for that direction. With a per-row
-    radius a direction past its query key's radius contributes NULL. Both
-    directions explode as (query key, contributions) structs and sum per
-    query key; sum skips NULL, so integer contributions give integer sums
-    bit-identical to a per-point count.
+    Plan: `key_aggs` ({name: aggregate}) pre-aggregate each key of the
+    pool; the key's smallest `id_col` value (ids must be unique) is its
+    id in the grid join, which carries the key columns and aggregates as
+    plain columns. Keys pair once; the symmetric `elev_gate` (|elev_a -
+    elev_b| <= limit, a NULL/NaN elev drops the pair) and `contrib(q, n)`
+    run on the UNDIRECTED row (rule 11). `q(c)`/`n(c)` read key column or
+    key aggregate `c` of the query/neighbour key; `contrib` returns
+    {name: Column} for that direction. With a per-row radius a direction
+    past its query key's radius contributes NULL. Both directions explode
+    as (query id, its key columns and aggregates, contributions) rows and
+    sum per query id; sum skips NULL, so integer contributions give
+    integer sums bit-identical to a per-point count. Grouping on the long
+    id instead of a key struct keeps struct hashing off the pair rows
+    (lapse buddy_event at 1e5 rows: 7.5-8.1 s with a struct key, 5.7-6.5
+    s with the long id).
 
-    Returns (sums, key): `sums` holds the key columns, the query key's own
-    `key_aggs` and one sum per `contrib` name, for a left join back on
-    `key`. A key with no contributing neighbour has no row, and a row
-    with a NULL key column matches none."""
+    Returns `df` left-joined on the key with the key's `key_aggs` and one
+    sum per `contrib` name; all are NULL for a row whose key has no
+    contributing neighbour (a NULL key column matches no key)."""
     per_row_radius = isinstance(radius, str)
     key = list(dict.fromkeys(
         [lat_col, lon_col]
@@ -367,18 +385,20 @@ def _neighbor_key_sums(
         + ([radius] if per_row_radius else [])
         + list(pair_cols)
     ))
+    carry = [c for c in key if c != radius] + list(key_aggs)
     keyed = (
-        df.groupBy(*key)
-        .agg(*[e.alias(n) for n, e in key_aggs.items()])
-        .withColumn("_key", F.struct(*key, *key_aggs))
+        df.where(pool)
+        .groupBy(*key)
+        .agg(F.min(id_col).alias("_kid"), *[e.alias(n) for n, e in key_aggs.items()])
     )
     und, _, _ = undirected_neighbor_pairs(
-        keyed, radius, id_col="_key", lat_col=lat_col, lon_col=lon_col,
-        include_self=False, cell_size=cell_size, coord_type=coord_type,
+        keyed, radius, id_col="_kid", lat_col=lat_col, lon_col=lon_col,
+        carry_cols=tuple(carry), include_self=False, cell_size=cell_size,
+        coord_type=coord_type,
     )
 
     def side(s):
-        return lambda c: F.col(f"_id{s}")[c]
+        return lambda c: F.col(f"_p{s}_{c}")
 
     if elev_gate:
         e, limit = elev_gate
@@ -389,18 +409,26 @@ def _neighbor_key_sums(
         if per_row_radius:
             within = F.col("dist") <= F.col(f"_r{qs}")
             terms = {k: F.when(within, c) for k, c in terms.items()}
+        q = side(qs)
+        own = [F.col(f"_r{qs}") if c == radius else q(c) for c in key]
+        own += [q(c) for c in key_aggs]
         return F.struct(
-            F.col(f"_id{qs}").alias("_q"), *[c.alias(k) for k, c in terms.items()]
+            F.col(f"_id{qs}").alias("_q"),
+            *[c.alias(n) for c, n in zip(own, [*key, *key_aggs])],
+            *[c.alias(k) for k, c in terms.items()],
         ), list(terms)
 
     (d_ab, names), (d_ba, _) = direction("a", "b"), direction("b", "a")
+    # one long id per query key; its key columns and aggregates are the
+    # same on every row of the group, so max() just reads them back
     sums = (
         und.select(F.explode(F.array(d_ab, d_ba)).alias("_d"))
-        .groupBy(F.col("_d._q").alias("_q"))
-        .agg(*[F.sum(f"_d.{k}").alias(k) for k in names])
-        .select("_q.*", *names)
+        .groupBy(F.col("_d._q"))
+        .agg(*[F.max(f"_d.{c}").alias(c) for c in [*key, *key_aggs]],
+             *[F.sum(f"_d.{k}").alias(k) for k in names])
+        .drop("_q")
     )
-    return sums, key
+    return df.join(sums, on=key, how="left")
 
 
 def knn_pairs(

@@ -14,7 +14,7 @@ iteration flags nothing new (src/buddy_check.cpp:161-176).
 
 Buddy statistics come from `functions.geo._neighbor_key_sums`: count,
 plus mean and variance from neighbour moments shifted by a pivot, the
-query key's min value (no Sigma v^2/n - mean^2 cancellation when
+query key's mean value (no Sigma v^2/n - mean^2 cancellation when
 |mean| >> std). The fixpoint loop is driver-side control flow
 (flags.iterate_flags): a checkpoint snapshots the flags and a count
 tests the fixpoint only between rounds.
@@ -82,13 +82,12 @@ def buddy_check(
         "_key_n": F.count(v),
         "_key_mean": F.avg(v),
         "_key_var": F.var_pop(v),
-        "_key_min": F.min(v),
     }
 
     def moments(q, n):
-        # neighbour key moments shifted by the QUERY key's pivot (its min
-        # value): no cancellation when |mean| >> std
-        d = adjust(n("_key_mean") - q("_key_min"), q, n)
+        # neighbour key moments shifted by the QUERY key's mean (the
+        # pivot): no cancellation when |mean| >> std
+        d = adjust(n("_key_mean") - q("_key_mean"), q, n)
         return {
             "_n_buddies": n("_key_n"),
             "_s1": n("_key_n") * d,
@@ -96,22 +95,22 @@ def buddy_check(
         }
 
     def one_round(df: DataFrame) -> DataFrame:
-        unflagged = df.where(F.col(flag_col) == GOOD)
-        stats, key = _neighbor_key_sums(
-            unflagged,
+        # key stats from unflagged rows may also reach already-flagged
+        # rows sharing their key; the monotone flag merge makes that
+        # unobservable
+        joined = _neighbor_key_sums(
+            df,
+            F.col(flag_col) == GOOD,
             radius,
             key_aggs,
             moments,
             elev_gate=gate,
+            id_col=id_col,
             lat_col=lat_col,
             lon_col=lon_col,
             cell_size=cell_size,
             coord_type=coord_type,
         )
-        # key-joined stats may also match already-flagged rows sharing a
-        # key with unflagged ones; the monotone flag merge makes that
-        # unobservable
-        joined = df.join(stats, on=key, how="left")
         # num_min / threshold / min_std accept a scalar or a per-row column
         # name (reference length-N vector convention, src/buddy_check.cpp:32-41)
         _pcol = lambda v, cast: F.col(v) if isinstance(v, str) else F.lit(cast(v))
@@ -121,7 +120,7 @@ def buddy_check(
         # zero-variance neighbourhood can leave (sqrt would give NaN)
         var = F.greatest(F.col("_s2") / n - shift * shift, F.lit(0.0))
         std_adj = F.greatest(F.sqrt(var + var / n), _pcol(min_std, float))
-        dev = F.abs(F.col(value_col) - F.col("_key_min") - shift)
+        dev = F.abs(F.col(value_col) - F.col("_key_mean") - shift)
         # std_adj can be 0 when min_std=0 meets a zero-variance
         # neighborhood; ANSI mode would abort on the division, so encode
         # the IEEE semantics (dev/0 = inf exceeds any finite threshold,
@@ -134,7 +133,7 @@ def buddy_check(
             verdict = verdict & (F.col(obs_to_check) == 1)
         return apply_check_flags(
             joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
-        ).drop(*[c for c in stats.columns if c not in key])
+        ).drop(*key_aggs, "_n_buddies", "_s1", "_s2")
 
     # a single pass stays lazy: the input scan is recomputed by the stats
     # branch, far cheaper than a checkpoint + count job (rule 26), and the

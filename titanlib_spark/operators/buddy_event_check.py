@@ -83,23 +83,23 @@ def buddy_event_check(
             return n("_key_e")
 
     def one_round(df: DataFrame) -> DataFrame:
-        unflagged = df.where(F.col(flag_col) == GOOD)
-        stats, key = _neighbor_key_sums(
-            unflagged,
+        # key counts from unflagged rows may also reach already-flagged
+        # rows sharing their key; the monotone flag merge makes that
+        # unobservable
+        joined = _neighbor_key_sums(
+            df,
+            F.col(flag_col) == GOOD,
             radius,
             key_aggs,
             lambda q, n: {"_n_buddies": n("_key_n"), "_n_event": events(q, n)},
             pair_cols=pair_cols,
             elev_gate=gate,
+            id_col=id_col,
             lat_col=lat_col,
             lon_col=lon_col,
             cell_size=cell_size,
             coord_type=coord_type,
         )
-        # key-joined stats may also match already-flagged rows sharing a
-        # key with unflagged ones; the monotone flag merge makes that
-        # unobservable
-        joined = df.join(stats, on=key, how="left")
         _pcol = lambda v, cast: F.col(v) if isinstance(v, str) else F.lit(cast(v))
         thr = _pcol(threshold, float)
         is_event = F.col(value_col) < _pcol(event_threshold, float)
@@ -120,6 +120,6 @@ def buddy_event_check(
             verdict = verdict & (F.col(obs_to_check) == 1)
         return apply_check_flags(
             joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
-        ).drop(*[c for c in stats.columns if c not in key])
+        ).drop(*key_aggs, "_n_buddies", "_n_event")
 
     return iterate_flags(df, one_round, num_iterations, flag_col)

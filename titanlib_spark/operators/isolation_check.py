@@ -45,23 +45,21 @@ def isolation_check(
     if vertical_radius is not None:
         bad_coord = bad_coord | is_invalid_value(F.col(elev_col))
 
-    located = df.where(~bad_pos)
     # an invalid elev drops all of a row's pairs through the gate; such a
     # row is flagged by bad_coord regardless
-    counts, key = _neighbor_key_sums(
-        located,
+    out = _neighbor_key_sums(
+        df,
+        ~bad_pos,
         radius,
         {"_key_n": F.count(F.lit(1))},
         lambda q, n: {"_n_neigh": n("_key_n")},
         elev_gate=(elev_col, vertical_radius) if vertical_radius is not None else None,
+        id_col=id_col,
         lat_col=lat_col,
         lon_col=lon_col,
         cell_size=cell_size,
         coord_type=coord_type,
-    )
-    out = df.join(counts, on=key, how="left").withColumn(
-        "_n_neigh", F.coalesce(F.col("_n_neigh"), F.lit(0))
-    )
+    ).withColumn("_n_neigh", F.coalesce(F.col("_n_neigh"), F.lit(0)))
     bad = bad_coord | (F.col("_n_neigh") < int(num_min))
     out = apply_check_flags(out, F.when(bad, BAD).otherwise(GOOD), flag_col)
     return out.drop("_n_neigh", "_key_n")
