@@ -2,10 +2,13 @@
 queries() entries at an arbitrary SF dir, plus .explain("formatted") dumps.
 
 Usage:
-    python bench_extra.py [--sf DIR] [--trials N] [--explain-dir DIR] name...
+    python scripts/query_bench.py [--sf DIR] [--trials N] [--explain-dir DIR] name...
 
-Separate from the FROZEN bench.py on purpose: this is the measurement
-scratchpad for OPTIMIZATION_r06.md; bench.py stays the driver contract.
+Each trial unpersists the RDDs its query left persisted, so the next trial
+of an identical plan cannot read them (CLAUDE.md rule 31). Separate from
+bench.py on purpose: bench.py is the frozen headline contract, this is
+the tool for looking at one query at a time. The last line is one JSON
+record with the whole window's host steal.
 """
 
 from __future__ import annotations
@@ -16,40 +19,30 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
-from bench import _stat_snap, window_steal  # noqa: E402
+from bench import SF_DIR, _stat_snap, window_steal  # noqa: E402
+from perfbench.harness import free_new_rdds, materialize, persistent_rdds  # noqa: E402
 from titanlib_spark.session import get_spark  # noqa: E402
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf", default=SF_DIR)  # bench.py's: $SPARK_GRAFT_SF_DIR or sf0.1
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--explain-dir", default=None)
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
-        "titanlib_spark_bench_extra",
+        "titanlib_spark_query_bench",
         master=f"local[{cpus}]",
         shuffle_partitions=max(8, cpus),
     )
+    sc = spark.sparkContext
     qs = entry.queries()
-
-    def _persistent_rdds(sc):
-        out = {}
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            kv = it.next()
-            out[int(kv._1())] = kv._2()
-        return out
 
     snap0 = _stat_snap()
     results = {}
@@ -63,14 +56,12 @@ def main() -> None:
                 f.write(plan)
         trials = []
         for _ in range(args.trials):
-            before = set(_persistent_rdds(spark.sparkContext))
-            spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+            before = set(persistent_rdds(sc))
+            sc.setJobDescription(f"query_bench:{name}")
             t0 = time.time()
             materialize(qs[name](spark, args.sf))
             trials.append(round(time.time() - t0, 3))
-            for rdd_id, rdd in _persistent_rdds(spark.sparkContext).items():
-                if rdd_id not in before:
-                    rdd.unpersist(True)
+            free_new_rdds(sc, before)
         results[name] = {"trials": trials, "min": min(trials)}
         print(json.dumps({name: results[name]}), flush=True)
     contention = window_steal(snap0, _stat_snap())

@@ -1,17 +1,26 @@
-"""End-to-end drive of titanlib_spark through its public API on real testdata."""
+"""End-to-end drive of titanlib_spark through its public API on real testdata.
+
+Run from the repository root (Python workers import the package from
+there): python scripts/verify_e2e.py [SF_DIR]   (default ~/testdata/sf0.001)"""
+import os
+import sys
+
 from pyspark.sql import functions as F
 
-from titanlib_spark import get_spark, GOOD
-from titanlib_spark.pipeline import QCDataset
-from titanlib_spark.operators import (
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from titanlib_spark import get_spark, GOOD  # noqa: E402
+from titanlib_spark.pipeline import QCDataset  # noqa: E402
+from titanlib_spark.operators import (  # noqa: E402
     metadata_check, range_check, isolation_check, buddy_check, sct,
     duplicate_check_exact, fgt, background,
 )
 
 spark = get_spark("verify_e2e", master="local[8]", shuffle_partitions=8)
 
-# Build a point table from the driver's events parquet (deterministic derivation)
-ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+# Build a point table from the events parquet (deterministic derivation)
+sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.expanduser("~/testdata/sf0.001")
+ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 pts = ev.select(
     F.col("event_id").alias("id"),
     ((F.col("event_id") * 7919 % 2000) / 100.0 + 50.0).alias("lat"),

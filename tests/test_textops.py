@@ -26,7 +26,6 @@ from titanlib_spark.textops.multimodal import (
 from titanlib_spark.textops.similarity import (
     cosine_topk,
     lsh_bucketed_topk,
-    with_normalized_embedding,
 )
 from titanlib_spark.textops.stats import (
     bpe_ish_token_count,
@@ -103,25 +102,35 @@ def test_ngram_jaccard_pairs(docs):
     assert (0, 3) not in got
 
 
+# Hostile embedding rows next to 50 seeded 8-dim vectors: each kernel
+# must read them exactly as the Column-level cosine() does.
+_HOSTILE_VECTORS = [
+    (100, [0.0] * 8),                       # zero vector -> NULL
+    (101, None),                            # NULL vector -> NULL
+    (102, [1.0] * 4),                       # ragged -> NULL
+    (103, [float("nan")] + [1.0] * 7),      # NaN element -> NaN
+    (104, [float("inf")] + [1.0] * 7),      # inf -> NaN (inf/inf)
+    (105, [None] + [1.0] * 7),              # NULL element -> NULL
+]
+
+
+def _bits(x: float) -> bytes:
+    import struct
+
+    return struct.pack("d", x)
+
+
 def test_cosine_topk_kernel_bit_identical_to_column_fold(spark):
     """The Arrow cosine kernel must reproduce the Column-level
     aggregate-over-zip_with cosine() BIT for bit (rule 21), including
     Spark's NaN-as-greatest `when(den > 0)` semantics (rule 7: a NaN
     cosine stays NaN and top-ranks; only den == 0 / null / ragged
-    vectors yield NULL)."""
-    import struct
-
+    vectors and vectors with a NULL element yield NULL)."""
     from titanlib_spark.textops.similarity import _query_lit, cosine, cosine_topk
 
     rng = np.random.default_rng(11)
     rows = [(i, rng.standard_normal(8).tolist()) for i in range(50)]
-    rows += [
-        (100, [0.0] * 8),                       # zero vector -> NULL
-        (101, None),                            # NULL vector -> NULL
-        (102, [1.0] * 4),                       # ragged -> NULL
-        (103, [float("nan")] + [1.0] * 7),      # NaN element -> NaN
-        (104, [float("inf")] + [1.0] * 7),      # inf -> NaN (inf/inf)
-    ]
+    rows += _HOSTILE_VECTORS
     df = spark.createDataFrame(rows, "vec_id long, emb_d array<double>")
     q = rng.standard_normal(8).tolist()
 
@@ -131,6 +140,7 @@ def test_cosine_topk_kernel_bit_identical_to_column_fold(spark):
             "vec_id", cosine(F.col("emb_d"), _query_lit(q)).alias("cosine_sim")
         ).collect()
     }
+    assert col[105] is None
     arrow = {
         r.vec_id: r.cosine_sim
         for r in cosine_topk(
@@ -142,9 +152,94 @@ def test_cosine_topk_kernel_bit_identical_to_column_fold(spark):
         if want is None:
             assert got is None, vid
         else:
-            assert got is not None and struct.pack("d", want) == struct.pack(
-                "d", got
-            ), (vid, want, got)
+            assert got is not None and _bits(want) == _bits(got), (vid, want, got)
+
+
+def test_embedding_pair_cosine_bit_identical_to_column_fold(spark):
+    """The pair verifier scores with the same strict fold as the Column
+    cosine(a, b): at threshold -1 every pair with a real cosine is
+    emitted with the Column's exact bits, and every pair the Column
+    scores NULL or NaN (zero, NULL, ragged, NULL-element, NaN and inf
+    rows) is absent."""
+    from titanlib_spark.textops.similarity import cosine, embedding_near_dup_pairs
+
+    rng = np.random.default_rng(5)
+    rows = [(i, rng.standard_normal(8).tolist()) for i in range(12)]
+    rows += _HOSTILE_VECTORS
+    df = spark.createDataFrame(rows, "vec_id long, emb_d array<double>")
+
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("emb_d").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("emb_d").alias("vb"))
+    col = {
+        (r.id_a, r.id_b): r.c
+        for r in a.join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("c"))
+        .collect()
+    }
+    got = {
+        (r.id_a, r.id_b): r.cosine_sim
+        for r in embedding_near_dup_pairs(
+            df, threshold=-1.0, vec_col="emb_d"
+        ).collect()
+    }
+    scored = {p for p, c in col.items() if c is not None and not np.isnan(c)}
+    assert len(scored) == 66 and len(col) == 153  # 12 clean rows pair up
+    assert set(got) == scored
+    for pair in scored:
+        assert _bits(col[pair]) == _bits(got[pair]), (pair, col[pair], got[pair])
+
+
+def test_bad_shape_vectors_never_candidates(spark):
+    """Ragged, wrong-dimension, NULL and NULL-element rows get a NULL
+    signature or cell: they are never LSH or IVF candidates, never fail
+    a task, and leave every clean row's result as it is without them —
+    both mixed into a batch of clean rows and as a single-partition batch
+    in which every row has the same wrong length (shorter or longer)."""
+    from titanlib_spark.textops.similarity import ivf_assign, lsh_candidate_pairs
+
+    rng = np.random.default_rng(17)
+    clean = [(i, rng.standard_normal(8).tolist()) for i in range(40)]
+    bad = [
+        (200, [1.0] * 4),
+        (201, [1.0] * 12),
+        (202, None),
+        (203, [None] + [1.0] * 7),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    good = spark.createDataFrame(clean, schema).coalesce(1)
+    mixed = spark.createDataFrame(clean + bad, schema).coalesce(1)
+    q = rng.standard_normal(8).tolist()
+    C = rng.standard_normal((3, 8))
+
+    def cands(df):
+        return set(map(tuple, lsh_candidate_pairs(df, 8, 2, 2).collect()))
+
+    def topk(df):
+        return [
+            (r.vec_id, r.cosine_sim)
+            for r in lsh_bucketed_topk(df, q, k=60, n_planes=2).collect()
+        ]
+
+    def cells(df):
+        return {
+            r.vec_id: r.cell
+            for r in df.select("vec_id", ivf_assign(C).alias("cell")).collect()
+        }
+
+    want = cands(good)
+    assert want and cands(mixed) == want
+    assert topk(good) and topk(mixed) == topk(good)
+    mixed_cells = cells(mixed)
+    assert all(mixed_cells[i] is None for i, _ in bad)
+    assert {i: c for i, c in mixed_cells.items() if i < 200} == cells(good)
+
+    for length in (4, 12):
+        same = spark.createDataFrame(
+            [(i, rng.standard_normal(length).tolist()) for i in range(20)], schema
+        ).coalesce(1)
+        assert cands(same) == set(), length
+        assert topk(same) == [], length
+        assert set(cells(same).values()) == {None}, length
 
 
 def _brute_force_candidates(sigs, bands, max_bucket):

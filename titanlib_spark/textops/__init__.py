@@ -23,7 +23,6 @@ from titanlib_spark.textops.dedup import (
     duplicate_passage_pairs,
 )
 from titanlib_spark.textops.similarity import (
-    with_normalized_embedding,
     cosine_topk,
     embedding_near_dup_pairs,
     ivf_assign,
@@ -52,7 +51,6 @@ __all__ = [
     "token_window_hashes",
     "winnowed_fingerprints",
     "duplicate_passage_pairs",
-    "with_normalized_embedding",
     "cosine_topk",
     "ivf_assign",
     "ivf_probe_cells",

@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-* Brute-force cosine top-k — the exact baseline: JVM-side dot product via
-  zip_with/aggregate against a broadcast query vector, global top-k.
+* Brute-force cosine top-k — the exact baseline: one Arrow pass scores
+  every row against the query, then a global top-k.
 * LSH-bucketed top-k — data-independent scale path: deterministic
   random-hyperplane signatures bucket the corpus; a query probes only its
   own bucket(s) and re-ranks exactly. One shuffle to build buckets
@@ -12,12 +12,18 @@
   row a cell; a query scans only its `nprobe` nearest cells and re-ranks
   exactly. nprobe == n_centroids degrades gracefully to the exact scan,
   which is the exactness property the tests pin.
+
+Every embedding Arrow UDF (top-k scores, pair verify, LSH signatures, IVF
+cells) runs on one numpy kernel: `_unpack` reads a batch into a matrix,
+`_fold_dot` is the one dot product and `_cosine` the one cosine. The
+Column-level `dot`/`norm`/`cosine` stay as the reference the kernel is
+tested against bit for bit.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -41,14 +47,56 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(den > 0, dot(a, b) / den)
 
 
-def with_normalized_embedding(
-    df: DataFrame, vec_col: str = "embedding", out_col: str = "_unit"
-) -> DataFrame:
-    v = F.col(vec_col)
-    n = norm(v)
-    return df.withColumn(
-        out_col,
-        F.when(n > 0, F.transform(v, lambda x: x / n)),
+def _unpack(v: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """One Arrow list<double> batch as an (n, dim) float64 matrix, plus
+    the mask of rows that hold a vector. A NULL vector, a vector of any
+    other length and a vector with a NULL element are not vectors: their
+    row is zeros and masked off, so every result on it is NULL. Arrow
+    reads a NULL element as NaN, so element validity comes from the
+    child array's validity, not from the values (a NaN element stays a
+    vector, as it does for the Column fold). The matrix is column-major,
+    so each step of `_fold_dot` reads one contiguous column."""
+    off = v.offsets.to_numpy()
+    ok = (np.diff(off) == dim) & v.is_valid().to_numpy(zero_copy_only=False)
+    idx = off[:-1][ok, None] + np.arange(dim)
+    clean = ~v.values.is_null().to_numpy(zero_copy_only=False)[idx].any(axis=1)
+    ok[ok] = clean
+    A = np.zeros((len(v), dim), order="F")
+    A[ok] = v.values.to_numpy(zero_copy_only=False)[idx[clean]]
+    return ok, A
+
+
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Σᵢ a[..., i]·b[..., i] under numpy broadcasting — row·query,
+    row·row and row·matrix (a[:, None, :] against a (k, dim) matrix).
+    It adds one dimension at a time, left to right, from 0.0: every
+    rounding step is that of the Column fold (aggregate over zip_with)
+    and of DuckDB list_inner_product, so the result is bit-identical to
+    both (CLAUDE.md rule 21). np.einsum or `@` reassociate the sum."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for i in range(a.shape[-1]):
+        acc += a[..., i] * b[..., i]
+    return acc
+
+
+def _cosine(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(cosine, mask of non-NULL results) with the Column `cosine()`
+    semantics: den = sqrt(a·a)·sqrt(b·b); den == 0 gives NULL, and a NaN
+    den gives NaN, because Spark's NaN > 0 is true (rule 7)."""
+    den = np.sqrt(_fold_dot(a, a)) * np.sqrt(_fold_dot(b, b))
+    live = den != 0
+    return _fold_dot(a, b) / np.where(live, den, 1.0), live
+
+
+def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int) -> np.ndarray:
+    """(n_tables * n_planes, dim) LSH hyperplanes; table t's planes are
+    `standard_normal((n_planes, dim))` drawn from default_rng(seed + t),
+    as `__spark_entry__.oracle_sql` draws them for the DuckDB oracles."""
+    return np.concatenate(
+        [
+            np.random.default_rng(seed + t).standard_normal((n_planes, dim))
+            for t in range(n_tables)
+        ]
     )
 
 
@@ -66,50 +114,19 @@ def cosine_topk(
     """Exact brute-force top-k by cosine similarity to a constant query.
 
     The query vector ships inside the UDF closure (tiny model in the
-    plan); the scan is ONE Arrow pass, then a global top-k (orderBy +
-    limit = TakeOrderedAndProject, no full sort). The score was a
-    Column-level `cosine()` — three interpreted aggregate-folds per row
-    (~380 lambda evals at dim 64, incl. the query's own norm, which
-    ConstantFolding does not fold through a HOF): 3.7s at 242k vectors.
-    The Arrow kernel accumulates dot and norm per-dimension in strict
-    fold order (rule 21: `acc += A[:, i] * q[i]` over dims in order is
-    BIT-identical to the aggregate-over-zip_with fold AND to the DuckDB
-    list_inner_product oracle), np.sqrt/np division are the same
-    IEEE-754 ops, the den>0 guard mirrors the ANSI-safe `when`, and
-    NaN→pd.NA emits real NULLs (rule 22) — ragged/NULL vectors degrade
-    to NULL exactly like the null-padded zip_with. A/B: byte-identical
-    (cosine_sim bits + ranks) to the Column form on every SF."""
+    plan); the scan is ONE Arrow pass of the cosine kernel, then a global
+    top-k (orderBy + limit = TakeOrderedAndProject, no full sort). The
+    scores are bit-identical to the Column `cosine()` (three interpreted
+    aggregate-folds per row: 3.7s at 242k vectors), NULL where it is NULL
+    and NaN where it is NaN — a NaN score top-ranks in desc order, as in
+    Spark."""
     qv = np.asarray(query_vec, dtype=np.float64)
-    d = len(qv)
-    qn_acc = 0.0
-    for i in range(d):  # strict fold order for the query norm too
-        qn_acc += float(qv[i]) * float(qv[i])
-    qn = float(np.sqrt(qn_acc))
 
-    @F.pandas_udf("double")
-    def _cos_to_query(v: pd.Series) -> pd.Series:
-        vals = np.full(len(v), np.nan)
-        null = np.ones(len(v), dtype=bool)
-        ok = (v.notna() & (v.map(len, na_action="ignore") == d)).to_numpy()
-        if ok.any():
-            A = np.stack(v[ok].to_numpy()).astype(np.float64)
-            dotq = np.zeros(len(A))
-            na = np.zeros(len(A))
-            for i in range(d):  # strict fold order: (acc + x_i*y_i) per step
-                dotq += A[:, i] * qv[i]
-                na += A[:, i] * A[:, i]
-            den = np.sqrt(na) * qn
-            # mirror the Column `when(den > 0, dot/den)` under SPARK
-            # comparison semantics: NaN > 0 is TRUE there (rule 7), so a
-            # NaN den yields NaN (which top-ranks in desc order), and
-            # only den == 0 yields NULL. The explicit FloatingArray mask
-            # keeps NaN as NaN instead of astype("Float64")'s NaN->NA.
-            keep = (den > 0) | np.isnan(den)
-            vals[ok] = np.where(
-                keep, dotq / np.where(den != 0, den, 1.0), np.nan
-            )
-            null[ok] = ~keep
-        return pd.Series(pd.arrays.FloatingArray(vals, null))
+    @F.arrow_udf("double")
+    def _cos_to_query(v: pa.Array) -> pa.Array:
+        ok, A = _unpack(v, len(qv))
+        cos, live = _cosine(A, qv)
+        return pa.array(cos, mask=~(ok & live))
 
     return (
         df.select(F.col(id_col), _cos_to_query(F.col(vec_col)).alias("cosine_sim"))
@@ -120,39 +137,26 @@ def cosine_topk(
 
 def _table_signatures_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     """Arrow UDF computing ALL hyperplane-table signatures in one pass:
-    array<long> of length n_tables. Bit-identical to the DuckDB
-    list_reduce oracle: the accumulation loop adds the per-dimension
-    products in strict left-to-right order, so every intermediate
-    rounding matches the fold.
-    One vectorized pass replaces n_tables*n_planes interpreted HOF dot
-    products (~6x on the near-dup query at sf0.1, measured). NULL vectors
-    get a NULL signature array (explode skips them: never candidates)."""
+    array<long> of length n_tables, bit p of table t set when the row's
+    fold dot product with plane p is > 0 — bit-identical to the DuckDB
+    oracle. One vectorized pass replaces n_tables*n_planes interpreted
+    HOF dot products (~6x on the near-dup query at sf0.1, measured).
+    Rows that are not `dim`-vectors get a NULL signature array (explode
+    skips them: never candidates)."""
     from pyspark.sql.types import ArrayType, LongType
 
-    planes = np.stack(
-        [
-            np.random.default_rng(seed + t).standard_normal((n_planes, dim))
-            for t in range(n_tables)
-        ]
-    )  # (T, P, D)
-    pm = planes.transpose(2, 0, 1).reshape(dim, n_tables * n_planes)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    # column-major, like the unpacked rows: each fold step reads one
+    # contiguous column of the planes
+    planes = np.asfortranarray(_hyperplanes(dim, n_planes, n_tables, seed))
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def sigs(v: pd.Series) -> pd.Series:
-        out = np.full(len(v), None, dtype=object)
-        ok = v.notna()
-        if ok.any():
-            A = np.stack(v[ok].to_numpy())  # (n, D)
-            acc = np.zeros((A.shape[0], pm.shape[1]))
-            for i in range(dim):  # strict fold order: (acc + x_i*p_i) per step
-                acc += A[:, i : i + 1] * pm[i]
-            s = ((acc > 0).reshape(-1, n_tables, n_planes) * weights).sum(
-                axis=2, dtype=np.int64
-            )
-            for j, row in zip(np.flatnonzero(ok.to_numpy()), s):
-                out[j] = row.tolist()
-        return pd.Series(out)
+    @F.arrow_udf(ArrayType(LongType()))
+    def sigs(v: pa.Array) -> pa.Array:
+        ok, A = _unpack(v, dim)
+        bits = _fold_dot(A[:, None, :], planes) > 0
+        s = (bits.reshape(len(v), n_tables, n_planes) * weights).sum(axis=2)
+        offsets = pa.array(np.arange(len(v) + 1, dtype=np.int32) * n_tables)
+        return pa.ListArray.from_arrays(offsets, pa.array(s.ravel()), mask=pa.array(~ok))
 
     return sigs
 
@@ -171,6 +175,16 @@ def lsh_candidate_pairs(
     table — the gate stage of :func:`embedding_near_dup_pairs`, exposed so
     callers can measure prune ratio / recall. Carries ONLY (id, table,
     bucket): the n_tables-way replication never ships the vector payload.
+    Rows that are not `dim`-vectors are never candidates.
+
+    Sizing `n_planes` (P) and `n_tables` (L): an unrelated pair collides
+    in a table with probability ~0.5^P, so the candidate list holds
+    ~L·0.5^P·n²/2 pairs. Keep L·0.5^P ≈ c/n to keep it ~c·n, linear in
+    the corpus: the defaults give L·0.5^P = 1.2e-4, ~6e3 candidates at
+    1e4 vectors but ~6e7 at 1e6. At 1.01e6 vectors,
+    24 planes and 32 tables ran end to end in 31.9 s with gate recall
+    0.985 on planted cos-0.97 clones, where 16 planes x 16 tables filled
+    the disk (BENCH_SCALING.md).
 
     `materialize=True` checkpoints the slim (id, table, bucket) frame once
     and returns the candidate list as an EAGER checkpoint, unpersisting
@@ -221,42 +235,42 @@ def embedding_near_dup_pairs(
     buckets by hyperplane signature and only compares within a bucket.
     `n_tables` > 1 is the standard recall lever: L independent plane sets
     (seed+t), a pair is a candidate if it collides in ANY table
-    (recall = 1 - (1 - p^n_planes)^L for per-plane agreement p). Scale
+    (recall = 1 - (1 - p^n_planes)^L for per-plane agreement p). Size the
+    gate with L·0.5^P ≈ c/n (see :func:`lsh_candidate_pairs`: 24 planes x
+    32 tables took 31.9 s at 1.01e6 vectors with gate recall 0.985). Scale
     path: one explode(L) + equi-join on (table, bucket) carrying ONLY
     (id, table, bucket) — vectors are attached to the deduped candidate
-    list afterwards, so the 8-way replication never ships the embedding
-    payload; the exact cosine verify is one Arrow-vectorized batch (the
-    per-pair linear algebra is the hot path — interpreted per-element
-    lambdas cost ~60x, measured at sf0.1).
+    list afterwards, so the L-way replication never ships the embedding
+    payload; the exact verify is one Arrow batch of the cosine kernel
+    (interpreted per-element lambdas cost ~60x, measured at sf0.1), so
+    `cosine_sim` carries the Column `cosine()` bits. A pair the Column
+    form scores NULL or NaN (zero, NULL, ragged or NULL-element vectors;
+    NaN or inf elements) never passes the threshold.
 
     Note at loose thresholds (cos ~0.4, theta ~66 deg) hyperplane bits
     agree on ~2/3 of random planes, so the gate prunes weakly; tighten
     with more planes (and more tables for recall) for real near-dup
     thresholds >= 0.8."""
-    @F.pandas_udf("double")
-    def _batch_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        # Zero-norm and NULL vectors yield SQL NULL (never pass a >=
-        # threshold), matching the guarded Column-level cosine(): Spark
-        # orders NaN above all doubles, so an unguarded 0/0 would make a
-        # zero embedding pair with every row it meets.
-        if len(va) == 0:
-            return pd.Series([], dtype="Float64")
-        ok = va.notna() & vb.notna()
-        out = np.full(len(va), np.nan)
-        if ok.any():
-            A = np.stack(va[ok].to_numpy())
-            B = np.stack(vb[ok].to_numpy())
-            num = np.einsum("ij,ij->i", A, B)
-            den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
-                np.einsum("ij,ij->i", B, B)
-            )
-            out[ok.to_numpy()] = np.where(
-                den > 0, num / np.where(den > 0, den, 1.0), np.nan
-            )
-        # float64 -> nullable Float64 turns NaN into pd.NA -> Spark NULL
-        return pd.Series(out).astype("Float64")
+    @F.arrow_udf("double")
+    def _pair_cos(va: pa.Array, vb: pa.Array) -> pa.Array:
+        cos, keep = np.zeros(len(va)), np.zeros(len(va), dtype=bool)
+        # the Column cosine() scores two vectors of one length, whatever
+        # the length, so each length in the batch is unpacked on its own
+        for d in np.unique(np.diff(va.offsets.to_numpy())):
+            (oa, A), (ob, B) = _unpack(va, d), _unpack(vb, d)
+            c, live = _cosine(A, B)
+            both = oa & ob
+            cos[both], keep[both] = c[both], live[both]
+        return pa.array(cos, mask=~keep)
 
-    cond = F.col("id_a") < F.col("id_b")
+    def verified(joined: DataFrame) -> DataFrame:
+        sim = F.col("cosine_sim")
+        return (
+            joined.withColumn("cosine_sim", _pair_cos(F.col("_va"), F.col("_vb")))
+            .where((sim >= float(threshold)) & ~F.isnan(sim))
+            .select("id_a", "id_b", "cosine_sim")
+        )
+
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     if n_planes > 0:
@@ -268,21 +282,11 @@ def embedding_near_dup_pairs(
             df, dim, n_planes, n_tables, seed, vec_col=vec_col,
             id_col=id_col, materialize=True,
         )
-        joined = cand.join(va, on="id_a").join(vb, on="id_b")
-        verified = (
-            joined.withColumn("cosine_sim", _batch_cos(F.col("_va"), F.col("_vb")))
-            .where(F.col("cosine_sim") >= float(threshold))
-            .select("id_a", "id_b", "cosine_sim")
-            .localCheckpoint(eager=True)
-        )
+        out = verified(cand.join(va, on="id_a").join(vb, on="id_b"))
+        out = out.localCheckpoint(eager=True)
         cand.unpersist()
-        return verified
-    joined = va.join(vb, cond)
-    return (
-        joined.withColumn("cosine_sim", _batch_cos(F.col("_va"), F.col("_vb")))
-        .where(F.col("cosine_sim") >= float(threshold))
-        .select("id_a", "id_b", "cosine_sim")
-    )
+        return out
+    return verified(va.join(vb, F.col("id_a") < F.col("id_b")))
 
 
 def lsh_bucketed_topk(
@@ -301,11 +305,13 @@ def lsh_bucketed_topk(
     With n_planes=8 the corpus splits into 256 buckets -> the probe scans
     ~ (1 + n_planes·multiprobe) / 256 of the data. Bucket ids are a pure
     function of the row, so a real deployment materializes them once
-    (partition column) and gets partition pruning on probes."""
+    (partition column) and gets partition pruning on probes. Rows of
+    another length than the query are never candidates."""
     dim = len(query_vec)
     qv = np.asarray(query_vec, dtype=float)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
+    planes = _hyperplanes(dim, n_planes, 1, seed)
+    # the query's own bits come from `planes[p] @ qv`, as in the DuckDB
+    # oracle's probe set; only the corpus side must replay the fold
     qbits = int(sum((1 << p) for p in range(n_planes) if planes[p] @ qv > 0))
     # probe set = every bucket within Hamming distance `multiprobe_bits`
     from itertools import combinations
@@ -318,9 +324,6 @@ def lsh_bucketed_topk(
                 mask |= 1 << p
             probes.add(qbits ^ mask)
 
-    # one Arrow pass instead of n_planes interpreted HOF dot products;
-    # the strict fold-order accumulation keeps the bucket ids bit-identical
-    # to the Column-expression signature (and the DuckDB oracle)
     sig_udf = _table_signatures_udf(dim, n_planes, 1, seed)
     sig = F.element_at(sig_udf(F.col(vec_col)), 1)
     candidates = df.where(sig.isin(*sorted(probes)))
@@ -385,39 +388,24 @@ def train_ivf_centroids(
 
 def ivf_assign(centroids: np.ndarray, vec_col: str | Column = "embedding") -> Column:
     """Arrow-vectorized cell assignment: argmax cosine against the (tiny)
-    centroid matrix. NULL / zero-norm vectors get a NULL cell (they are
-    never similarity candidates). In a real deployment this column is
-    written once as a partition column, so probes get partition pruning."""
+    centroid matrix. NULL / zero-norm vectors and vectors of another
+    length than the centroids get a NULL cell (they are never similarity
+    candidates). In a real deployment this column is written once as a
+    partition column, so probes get partition pruning."""
     C = np.asarray(centroids, dtype=float)
-    CT = C.T.copy()  # (dim, k)
 
-    @F.pandas_udf("int")
-    def _assign(v: pd.Series) -> pd.Series:
-        out = np.full(len(v), np.nan)
-        ok = v.notna()
-        if ok.any():
-            A = np.stack(v[ok].to_numpy()).astype(float)
-            dim = A.shape[1]
-            # strict left-to-right folds (CLAUDE.md rule 21): norm and
-            # centroid scores accumulate per dimension in index order, so
-            # they are bit-identical to DuckDB list_inner_product — the
-            # argmax cell survives a SQL replay exactly. np.argmax takes
-            # the FIRST max, i.e. lowest cell index wins ties — the
-            # oracle's tie rule must match.
-            norm2 = np.zeros(A.shape[0])
-            for i in range(dim):
-                norm2 += A[:, i] * A[:, i]
-            n = np.sqrt(norm2)
-            good = n > 0
-            unit = A / np.where(good, n, 1.0)[:, None]
-            acc = np.zeros((A.shape[0], CT.shape[1]))
-            for i in range(dim):
-                acc += unit[:, i : i + 1] * CT[i]
-            cells = np.argmax(acc, axis=1).astype(float)
-            cells[~good] = np.nan
-            out[ok.to_numpy()] = cells
-        # float->nullable Int32: NaN becomes pd.NA -> Spark NULL
-        return pd.Series(out).astype("Int32")
+    @F.arrow_udf("int")
+    def _assign(v: pa.Array) -> pa.Array:
+        ok, A = _unpack(v, C.shape[1])
+        # fold norms and centroid scores replay in DuckDB as
+        # list_inner_product, so the argmax cell survives a SQL replay
+        # exactly; np.argmax takes the FIRST max, i.e. the lowest cell
+        # wins ties — the oracle's tie rule must match
+        n = np.sqrt(_fold_dot(A, A))
+        ok &= n > 0
+        unit = A / np.where(ok, n, 1.0)[:, None]
+        cells = np.argmax(_fold_dot(unit[:, None, :], C), axis=1)
+        return pa.array(cells.astype(np.int32), mask=~ok)
 
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return _assign(v)
