@@ -138,6 +138,19 @@ def _job_count(spark, fn):
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_sct_kernel_is_one_python_map_per_partition(spark):
+    # one Arrow map call per partition of halo rows, no per-cell group
+    # call; the halo exchange stays the only shuffle in front of it, so the
+    # job count is the per-cell applyInPandas plan's (4)
+    out = sct(_golden_sct_frame(spark), **SCT_KW)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInPandas") == 1
+    flags, jobs = _job_count(spark, lambda: {r.id: r.flags for r in out.collect()})
+    assert flags == {0: 0, 1: 0, 2: 1}
+    assert jobs == 4
+
+
 SPIKE_KW = dict(
     num_min_outer=5,
     num_max_outer=30,

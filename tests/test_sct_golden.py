@@ -43,6 +43,26 @@ def test_sct_simple_golden(spark):
     assert flags == {0: 0, 1: 0, 2: 1}
 
 
+def test_sct_empty_partitions_golden(spark):
+    # without AQE coalescing, many of 64 shuffle partitions of the 81 halo
+    # rows are empty, and the per-partition kernel is still called for
+    # each of them
+    rows = [
+        (i, LATS[i], LONS[i], 0.0, v) for i, v in enumerate([0.0, 1.0, 100.0])
+    ]
+    df = spark.createDataFrame(rows, "id long, lat double, lon double, elev double, value double")
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "64"}
+    before = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        flags = {r.id: r.flags for r in sct(df, **SCT_KW).collect()}
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert flags == {0: 0, 1: 0, 2: 1}
+
+
 def test_sct_obs_to_check_golden(spark):
     # reference tests/sct_test.py:91-100: two spikes (ids 4,5); only id 4
     # is testable -> [0,0,0,0,1,0]

@@ -5,24 +5,40 @@ the Nelder-Mead fit averages with ``np.add.reduce``; both must reproduce
 the formulas they replaced bit for bit, and the whole kernel must
 reproduce the digests recorded from the pre-vectorization kernel on seeded
 random cells (ties, co-located points, masked rows, both vertical-profile
-fits). No Spark session needed.
+fits). The stacked profile fit must match the scalar fit per problem, and
+the partition kernel (many cells, one stacked fit) must return each cell's
+recorded rows. No Spark session needed.
+
+Fast inner loop for kernel edits (seconds, no Spark):
+``python -m pytest tests/test_sct_kernel.py tests/test_sct_sweep.py -q``
 """
 
 from __future__ import annotations
 
 import hashlib
+import importlib
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from titanlib_spark.functions.geo import EARTH_RADIUS
-from titanlib_spark.operators.background import _rms_objective, exact_quantile
+from titanlib_spark.operators.background import (
+    _rms_objective,
+    exact_quantile,
+    vertical_profile_batch,
+    vertical_profile_np,
+)
 from titanlib_spark.operators.sct import (
     _dh_rows,
     _geodetic_dist_matrix,
+    _Params,
     _sct_kernel,
+    _sct_partition,
 )
+
+# the package re-exports the ``sct`` function under the module's name
+sct_module = importlib.import_module("titanlib_spark.operators.sct")
 
 
 def _per_row_dh(disth: np.ndarray) -> np.ndarray:
@@ -168,3 +184,110 @@ KERNEL_DIGESTS = {
 def test_sct_kernel_matches_recorded_output(seed):
     pdf, params = _random_cell(seed)
     assert _kernel_digest(_sct_kernel(pdf, **params)) == KERNEL_DIGESTS[seed]
+
+
+def _profile_cases(rng) -> dict[str, list[tuple[np.ndarray, np.ndarray]]]:
+    """(elevs, values) boxes per branch of ``vertical_profile_np`` at
+    ``num_min_prof`` 12 and ``min_elev_diff`` 100."""
+
+    def vals(e):
+        return 10.0 - 0.0065 * e + rng.normal(0.0, 1.0, e.size)
+
+    cases: dict[str, list] = {k: [] for k in (
+        "flat", "small_spread", "two_param", "five_param", "h1_eq_h0",
+        "non_finite", "single")}
+    for s in (3, 7, 11, 12, 20, 33):
+        for _ in range(4):
+            e = np.full(s, float(rng.integers(0, 900)))
+            cases["flat"].append((e, vals(e)))
+            e = 300.0 + rng.random(s) * 60.0
+            cases["small_spread"].append((e, vals(e)))
+            e = rng.random(s) * 1500.0
+            cases["two_param" if s < 12 else "five_param"].append((e, vals(e)))
+            # the 90th percentile sits at 0: h1i starts at 0, so h1 == h0
+            e = np.r_[-rng.random(s // 2 + 1) * 600.0, np.zeros(s - s // 2 - 1)]
+            cases["h1_eq_h0"].append((e, vals(e)))
+            e = rng.random(s) * 1500.0
+            e[rng.integers(0, s)] = rng.choice([np.nan, np.inf])
+            cases["non_finite"].append((e, vals(np.nan_to_num(e))))
+    e = np.array([250.0])
+    cases["single"].append((e, vals(e)))
+    return cases
+
+
+def test_vertical_profile_batch_matches_scalar_fit():
+    rng = np.random.default_rng(2024)
+    cases = _profile_cases(rng)
+    boxes = [b for bs in cases.values() for b in bs]
+    order = rng.permutation(len(boxes))  # mixed box sizes and branches
+    boxes = [boxes[i] for i in order]
+    got = vertical_profile_batch(
+        [e for e, _ in boxes], [v for _, v in boxes], 12, 100.0
+    )
+    assert len(got) == len(boxes)
+    for (e, v), g in zip(boxes, got):
+        want = vertical_profile_np(e, v, 12, 100.0)
+        assert g.shape == want.shape
+        assert g.tobytes() == want.tobytes()
+
+
+@pytest.mark.parametrize("num_min_prof", [0, 1000])
+def test_vertical_profile_batch_branches_per_problem(num_min_prof):
+    rng = np.random.default_rng(num_min_prof)
+    for name, boxes in _profile_cases(rng).items():
+        got = vertical_profile_batch(
+            [e for e, _ in boxes], [v for _, v in boxes], num_min_prof, 100.0
+        )
+        for (e, v), g in zip(boxes, got):
+            want = vertical_profile_np(e, v, num_min_prof, 100.0)
+            assert g.tobytes() == want.tobytes(), name
+
+
+@pytest.mark.parametrize(
+    "chunk_bytes, seeds",
+    [
+        (None, sorted(KERNEL_DIGESTS)),
+        # fit and resolve after every cell: chunking must not move a bit
+        (1, [0, 7, 13, 22]),
+    ],
+    ids=["one_stack", "chunk_per_cell"],
+)
+def test_sct_partition_returns_each_cells_recorded_rows(monkeypatch, chunk_bytes, seeds):
+    """All 24 cells in one frame, interleaved at random with each cell's
+    rows in their own order, each cell keyed by its seed; per seed, the
+    partition kernel run with that seed's parameters must return that
+    cell's recorded rows (ids are offset per cell; the kernel reads ids
+    only for their order)."""
+    if chunk_bytes is not None:
+        monkeypatch.setattr(sct_module, "_CHUNK_BYTES", chunk_bytes)
+    rng = np.random.default_rng(99)
+    frames, params = [], {}
+    for seed in sorted(KERNEL_DIGESTS):
+        pdf, params[seed] = _random_cell(seed)
+        frames.append(pdf.assign(_sid=pdf["_sid"] + seed * 1_000_000,
+                                 _cx=seed, _cy=-seed % 3, _cz=7))
+    allf = pd.concat(frames, ignore_index=True)
+    cell = allf["_cx"].to_numpy()
+    slots = cell[rng.permutation(len(allf))]
+    rows = np.empty(len(allf), dtype=np.int64)
+    for seed in sorted(KERNEL_DIGESTS):
+        rows[slots == seed] = np.flatnonzero(cell == seed)
+    allf = allf.iloc[rows].reset_index(drop=True)
+    for seed in seeds:
+        out = _sct_partition(allf, _Params(**params[seed]))
+        assert out["_sid"].is_unique and len(out) == allf["_score"].sum()
+        mine = out[out["_sid"] // 1_000_000 == seed]
+        mine = mine.assign(_sid=mine["_sid"] - seed * 1_000_000)
+        assert _kernel_digest(mine) == KERNEL_DIGESTS[seed]
+
+
+def test_sct_partition_skips_halo_only_cells():
+    pdf, params = _random_cell(3)
+    halo_only = pdf.assign(_score=False, _cx=1)
+    both = pd.concat([pdf.assign(_cx=0), halo_only], ignore_index=True)
+    both = both.assign(_cy=0, _cz=0)
+    out = _sct_partition(both, _Params(**params))
+    assert _kernel_digest(out) == KERNEL_DIGESTS[3]
+    empty = _sct_partition(halo_only.assign(_cy=0, _cz=0), _Params(**params))
+    assert list(empty.columns) == ["_sid", "_sct_flag", "prob_gross_error"]
+    assert len(empty) == 0

@@ -189,6 +189,28 @@ def test_embedding_pair_cosine_bit_identical_to_column_fold(spark):
         assert _bits(col[pair]) == _bits(got[pair]), (pair, col[pair], got[pair])
 
 
+def test_embedding_pair_cosine_evaluated_once(spark):
+    """The exact verifier filters on the pair cosine it emits: the Arrow
+    UDF must run once per pair, not once below the pushed filter and
+    again in the projection (rule 34)."""
+    import contextlib
+    import io
+
+    from titanlib_spark.textops.similarity import embedding_near_dup_pairs
+
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.standard_normal(4).tolist()) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_near_dup_pairs(df, threshold=0.0)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain()
+    nodes = [ln for ln in buf.getvalue().splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1 and "_pair_cos" in nodes[0], buf.getvalue()
+    got = {(r.id_a, r.id_b) for r in out.collect()}
+    assert got and all(a < b for a, b in got)
+
+
 def test_bad_shape_vectors_never_candidates(spark):
     """Ragged, wrong-dimension, NULL and NULL-element rows get a NULL
     signature or cell: they are never LSH or IVF candidates, never fail
@@ -688,6 +710,31 @@ def test_spread_small_input(spark):
     # already-wide inputs pass through untouched (identical plan object)
     wide = spark.range(1000).repartition(spark.sparkContext.defaultParallelism * 2)
     assert spread_small_input(wide) is wide
+
+
+def test_spread_small_input_sizes_files_through_hadoop(spark, tmp_path, monkeypatch):
+    """inputFiles() returns URIs ("dir%20with%20space"), not local paths:
+    the sizes come from the Hadoop FileSystem of each URI, so a small
+    parquet under such a directory is spread without the rdd probe (a
+    full driver-side plan pass, rule 32)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from titanlib_spark.session import spread_small_input
+
+    path = str(tmp_path / "dir with space" / "t.parquet")
+    spark.range(50).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert any("%20" in f for f in df.inputFiles())
+
+    def no_rdd(self):
+        raise AssertionError("spread_small_input fell back to df.rdd")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "rdd", property(no_rdd))
+        spread = spread_small_input(df)
+    assert spread is not df
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert spread.count() == 50
 
 
 def test_winnowed_passage_dedup_guarantee(spark):

@@ -3,7 +3,7 @@
 Statistical core from reference src/sct.cpp:120-306, re-expressed for a
 cluster: Spark owns data movement (grid partitioning with halo exchange),
 numpy owns the per-neighborhood optimal-interpolation (OI) algebra inside
-an Arrow-batched ``applyInPandas``.
+one Arrow-batched ``mapInPandas`` call per partition of halo rows.
 
 Plan per iteration (driver-side loop, flags.iterate_flags: early stop
 when nothing new is flagged — src/sct.cpp:294-299):
@@ -14,17 +14,32 @@ when nothing new is flagged — src/sct.cpp:294-299):
    (``_sct_phases.halo``, shared with the SCT family's driver) — every
    point within ``outer_radius`` of any core point of a cell is then
    present in that cell's group (chord distance <= arc distance);
-3. per cell (pandas UDF): run the reference's per-centroid loop over the
-   cell's core points with the ``checked`` memo (src/sct.cpp:108-123):
-   gather <= ``num_max`` nearest unflagged neighbors within
-   ``outer_radius`` (>= ``num_min`` or skip), vertical-profile background,
-   Gaussian covariance S = exp(-.5 (dh/Dh)^2 - .5 (dz/Dz)^2) + eps2*I
-   with Dh = mean per-row 10th-pct pairwise distance clamped to
-   ``min_horizontal_scale``, invert, compute analysis residuals ``ares``,
-   cross-validation residuals ``cvres = -(1/diag(Sinv)) * Sinv d``,
-   ``sig2o = max(mean(d * -ares), 0.01)``, ``pog = cvres*ares/sig2o``;
-   flag rows within ``inner_radius`` where pog exceeds pos (cvres<0) /
-   neg (cvres>=0) thresholds (src/sct.cpp:272-291).
+   ``repartition`` by cell key is the one exchange;
+3. per partition (one Python call): split the rows by cell key, drop
+   cells with no core row (a guaranteed no-op), and run the reference's
+   per-centroid loop (src/sct.cpp:108-123) as three passes:
+
+   a. per cell, a geometry sweep over its core points in id order: the
+      ``checked`` memo, the co-located guard, gather <= ``num_max``
+      nearest unflagged neighbors within ``outer_radius`` (>= ``num_min``
+      or skip), Gaussian covariance S = exp(-.5 (dh/Dh)^2 - .5 (dz/Dz)^2)
+      + eps2*I with Dh = mean per-row 10th-pct pairwise distance clamped
+      to ``min_horizontal_scale``, and its inverse (a failed inversion
+      skips the centroid, src/sct.cpp:221-224);
+   b. one stacked vertical-profile fit over every recorded centroid of
+      the partition (``background.vertical_profile_batch``);
+   c. per centroid in sweep order: analysis residuals ``ares``,
+      cross-validation residuals ``cvres = -(1/diag(Sinv)) * Sinv d``,
+      ``sig2o = max(mean(d * -ares), 0.01)``, ``pog = cvres*ares/sig2o``;
+      flag rows within ``inner_radius`` where pog exceeds pos (cvres<0) /
+      neg (cvres>=0) thresholds (src/sct.cpp:272-291).
+
+   The split is exact: which centroids get evaluated, and their S, read
+   only positions, ids, elevations, ``obs_to_check`` and eps2 — the
+   ``checked`` memo marks rows whatever their values or verdicts — so
+   pass (a) picks the reference loop's centroids, and (b) and (c) run
+   each one's arithmetic in its own op order. Stacking the fit across the
+   whole partition, not per cell, is what pays (rule 43).
 
 Deviation from the reference (documented): the sequential centroid sweep is
 per-cell instead of global, so the `checked` memo never spans cells.
@@ -44,6 +59,8 @@ written (src/sct.cpp:91-92), so parity is a constant-0 column.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -59,7 +76,7 @@ from titanlib_spark.flags import (
 from titanlib_spark.functions.geo import with_ecef
 from titanlib_spark.operators._neighbors import CellNeighborhood
 from titanlib_spark.operators._sct_phases import band, halo
-from titanlib_spark.operators.background import exact_quantile, vertical_profile_np
+from titanlib_spark.operators.background import exact_quantile_rows, vertical_profile_batch
 from titanlib_spark.operators.range_check import is_invalid_value
 
 
@@ -78,45 +95,34 @@ def _geodetic_dist_matrix(lats: np.ndarray, lons: np.ndarray) -> np.ndarray:
 
 def _dh_rows(disth: np.ndarray) -> np.ndarray:
     """Per-row 10th percentile of the off-diagonal distances (Dh is their
-    mean). One ``np.quantile(axis=1)`` over the off-diagonal matrix takes
-    the same order statistics and lerp as a per-row call, so it is
-    bit-identical to the per-row loop. A single point (no off-diagonal:
-    NaN) or a non-finite distance keeps the per-row ``exact_quantile``
-    semantics, which drop non-finite values per row."""
+    mean), bit-identical to a per-row ``exact_quantile`` loop, which drops
+    non-finite distances per row and gives NaN for a single point."""
     s_box = disth.shape[0]
-    if s_box > 1 and np.isfinite(disth).all():
-        off = disth[~np.eye(s_box, dtype=bool)].reshape(s_box, s_box - 1)
-        return np.quantile(off, 0.10, axis=1)
-    return np.array(
-        [exact_quantile(0.10, np.delete(disth[i], i)) for i in range(s_box)]
-    )
+    off = disth[~np.eye(s_box, dtype=bool)].reshape(s_box, s_box - 1)
+    return exact_quantile_rows(0.10, off)
 
 
-def _sct_kernel(
-    pdf: pd.DataFrame,
-    num_min: int,
-    num_max: int,
-    inner_radius: float,
-    outer_radius: float,
-    num_min_prof: int,
-    min_elev_diff: float,
-    min_horizontal_scale: float,
-    vertical_scale: float,
-    pos,
-    neg,
-    eps2,
-) -> pd.DataFrame:
-    ids = pdf["_sid"].to_numpy()
-    lats = pdf["_slat"].to_numpy(dtype=float)
-    lons = pdf["_slon"].to_numpy(dtype=float)
-    elevs = pdf["_selev"].to_numpy(dtype=float)
-    values = pdf["_svalue"].to_numpy(dtype=float)
-    to_test = pdf["_stest"].to_numpy(dtype=bool)
-    core = pdf["_score"].to_numpy(dtype=bool)
-    x = pdf["_sx"].to_numpy(dtype=float)
-    y = pdf["_sy"].to_numpy(dtype=float)
-    z = pdf["_sz"].to_numpy(dtype=float)
-    n = len(ids)
+class _Params(NamedTuple):
+    num_min: int
+    num_max: int
+    inner_radius: float
+    outer_radius: float
+    num_min_prof: int
+    min_elev_diff: float
+    min_horizontal_scale: float
+    vertical_scale: float
+    pos: tuple
+    neg: tuple
+    eps2: tuple
+
+
+# pass-1 matrices (S and its inverse) held before a fit; the partition is
+# fitted and resolved in chunks of cells that stay under this
+_CHUNK_BYTES = 32 << 20
+
+
+def _columns(pdf: pd.DataFrame, p: _Params) -> dict:
+    n = len(pdf)
 
     def band(spec, default):
         # per-row vectors (reference vec pos/neg/eps2, include/titanlib.h:86-102)
@@ -124,20 +130,40 @@ def _sct_kernel(
             return pdf[spec[1]].to_numpy(dtype=float)
         return np.full(n, default if spec[1] is None else float(spec[1]))
 
-    pos_v = band(pos, 4.0)
-    neg_v = band(neg, 4.0)
-    eps2_v = band(eps2, 0.5)
+    return {
+        "ids": pdf["_sid"].to_numpy(),
+        "lats": pdf["_slat"].to_numpy(dtype=float),
+        "lons": pdf["_slon"].to_numpy(dtype=float),
+        "elevs": pdf["_selev"].to_numpy(dtype=float),
+        "values": pdf["_svalue"].to_numpy(dtype=float),
+        "to_test": pdf["_stest"].to_numpy(dtype=bool),
+        "core": pdf["_score"].to_numpy(dtype=bool),
+        "x": pdf["_sx"].to_numpy(dtype=float),
+        "y": pdf["_sy"].to_numpy(dtype=float),
+        "z": pdf["_sz"].to_numpy(dtype=float),
+        "pos_v": band(p.pos, 4.0),
+        "neg_v": band(p.neg, 4.0),
+        "eps2_v": band(p.eps2, 0.5),
+    }
 
-    flags = np.zeros(n, dtype=np.int32)
-    pog_out = np.full(n, np.nan)
-    checked = np.zeros(n, dtype=bool)
+
+def _sweep(col: dict, p: _Params) -> list:
+    """Pass 1: the reference's centroid loop over one cell's core rows,
+    with every step that reads no value — the ``checked`` memo, the
+    co-located guard, the ``num_min`` skip, Dh, S and its inverse.
+    Returns (sel, dists, S, Sinv) per evaluated centroid in sweep order,
+    S's diagonal unweighted."""
+    ids, x, y, z = col["ids"], col["x"], col["y"], col["z"]
+    elevs, eps2_v = col["elevs"], col["eps2_v"]
+    to_test, core = col["to_test"], col["core"]
+    checked = np.zeros(len(ids), dtype=bool)
+    circles = []
 
     order = np.argsort(ids, kind="stable")  # deterministic sweep order
-    pts = np.stack([x, y, z], axis=1)
     # output-sensitive radius/kNN queries: identical results to the naive
     # scan, O(candidates) per centroid for dense distinct-location cells
     # (see _neighbors.py)
-    nbr = CellNeighborhood(pts, ids, outer_radius, num_max)
+    nbr = CellNeighborhood(np.stack([x, y, z], axis=1), ids, p.outer_radius, p.num_max)
 
     # Dense-cell guard: co-located centroids define IDENTICAL circles
     # (sel is a pure function of position + ids here — the unflagged
@@ -157,66 +183,132 @@ def _sct_kernel(
         # chord-metric radius query (reference KDTree semantics), nearest
         # num_max with id tie-break for determinism
         sel, dists = nbr.query(curr)
-        if sel.size < num_min:
+        if sel.size < p.num_min:
             checked[curr] = True
             continue
 
         e_box = elevs[sel]
-        v_box = values[sel]
-        if num_min_prof >= 0:
-            vp = vertical_profile_np(e_box, v_box, num_min_prof, min_elev_diff)
-        else:
-            vp = np.full(sel.size, float(np.mean(v_box)))
-
-        disth = _geodetic_dist_matrix(lats[sel], lons[sel])
+        disth = _geodetic_dist_matrix(col["lats"][sel], col["lons"][sel])
         distz = np.abs(e_box[:, None] - e_box[None, :])
         s_box = sel.size
-        dh_mean = max(float(np.mean(_dh_rows(disth))), float(min_horizontal_scale))
+        dh_mean = max(float(np.mean(_dh_rows(disth))), float(p.min_horizontal_scale))
 
         S = np.exp(
-            -0.5 * (disth / dh_mean) ** 2 - 0.5 * (distz / vertical_scale) ** 2
+            -0.5 * (disth / dh_mean) ** 2 - 0.5 * (distz / p.vertical_scale) ** 2
         )
         S[np.diag_indices(s_box)] += eps2_v[sel]
-        d = v_box - vp
         try:
             Sinv = np.linalg.inv(S)
         except np.linalg.LinAlgError:
             continue  # reference skips on inversion failure (src/sct.cpp:221-224)
         S[np.diag_indices(s_box)] -= eps2_v[sel]  # unweight diagonal
+        circles.append((sel, dists, S, Sinv))
 
-        Sinv_d = Sinv @ d
-        ares = S @ Sinv_d - d
-        zinv = 1.0 / np.diag(Sinv)
-        cvres = -zinv * Sinv_d
-        sig2o = max(float(np.mean(d * (-ares))), 0.01)
-        pog = cvres * ares / sig2o
+        # obs_to_check masks rows from flagging/pog entirely but they
+        # still contribute to the OI (src/sct.cpp:274-278); a masked row
+        # marks the centroid checked, mirroring the reference's own quirk
+        if not to_test[sel].all():
+            checked[curr] = True
+        checked[sel[to_test[sel] & (dists <= p.inner_radius) & core[sel]]] = True
 
-        for i in range(s_box):
-            idx = sel[i]
-            # obs_to_check masks rows from flagging/pog entirely but they
-            # still contribute to the OI (src/sct.cpp:274-278)
-            if not to_test[idx]:
-                checked[curr] = True  # mirrors the reference's own quirk
-                continue
-            if dists[i] <= inner_radius:
-                if not core[idx]:
-                    continue
-                prev = pog_out[idx]
-                pog_out[idx] = pog[i] if np.isnan(prev) else max(prev, pog[i])
-                if (cvres[i] < 0 and pog[i] > pos_v[idx]) or (
-                    cvres[i] >= 0 and pog[i] > neg_v[idx]
-                ):
-                    flags[idx] = BAD
-                checked[idx] = True
+    return circles
 
-    keep = core
-    return pd.DataFrame(
-        {
-            "_sid": ids[keep],
-            "_sct_flag": flags[keep],
-            "prob_gross_error": pog_out[keep],
-        }
-    )
+
+def _resolve(cells: list, p: _Params) -> list[pd.DataFrame]:
+    """Passes 2 and 3 over (columns, circles) per cell: one stacked
+    vertical-profile fit over every circle, then per circle in sweep order
+    the OI residuals, pog and verdicts. Returns each cell's core rows."""
+    boxes = [col["values"][sel] for col, circles in cells for sel, *_ in circles]
+    if p.num_min_prof >= 0:
+        elev_boxes = [col["elevs"][sel] for col, circles in cells for sel, *_ in circles]
+        profiles = iter(
+            vertical_profile_batch(elev_boxes, boxes, p.num_min_prof, p.min_elev_diff)
+        )
+    else:
+        profiles = iter([np.full(v.size, float(np.mean(v))) for v in boxes])
+
+    out = []
+    for col, circles in cells:
+        to_test, core = col["to_test"], col["core"]
+        flags = np.zeros(len(core), dtype=np.int32)
+        pog_out = np.full(len(core), np.nan)
+        for sel, dists, S, Sinv in circles:
+            d = col["values"][sel] - next(profiles)
+            Sinv_d = Sinv @ d
+            ares = S @ Sinv_d - d
+            zinv = 1.0 / np.diag(Sinv)
+            cvres = -zinv * Sinv_d
+            sig2o = max(float(np.mean(d * (-ares))), 0.01)
+            pog = cvres * ares / sig2o
+
+            hit = to_test[sel] & (dists <= p.inner_radius) & core[sel]
+            idx, pog, cvres = sel[hit], pog[hit], cvres[hit]
+            prev = pog_out[idx]
+            pog_out[idx] = np.where(np.isnan(prev) | (pog > prev), pog, prev)
+            bad = ((cvres < 0) & (pog > col["pos_v"][idx])) | (
+                (cvres >= 0) & (pog > col["neg_v"][idx])
+            )
+            flags[idx[bad]] = BAD
+        out.append(
+            pd.DataFrame(
+                {
+                    "_sid": col["ids"][core],
+                    "_sct_flag": flags[core],
+                    "prob_gross_error": pog_out[core],
+                }
+            )
+        )
+    return out
+
+
+def _sct_cells(pdf: pd.DataFrame, cells, p: _Params) -> pd.DataFrame:
+    """Run the three passes over the cells of ``pdf`` (each an array of
+    row positions, in arrival order), fitting and resolving in chunks of
+    cells whose pass-1 matrices stay under ``_CHUNK_BYTES``."""
+    col = _columns(pdf, p)
+    out: list[pd.DataFrame] = []
+    pending: list = []
+    held = 0
+    for rows in cells:
+        cell = {k: v[rows] for k, v in col.items()}
+        circles = _sweep(cell, p)
+        pending.append((cell, circles))
+        held += sum(S.nbytes + Sinv.nbytes for _, _, S, Sinv in circles)
+        if held > _CHUNK_BYTES:
+            out += _resolve(pending, p)
+            pending, held = [], 0
+    out += _resolve(pending, p)
+    if not out:
+        return pd.DataFrame(
+            {
+                "_sid": col["ids"][:0],
+                "_sct_flag": np.zeros(0, dtype=np.int32),
+                "prob_gross_error": np.zeros(0),
+            }
+        )
+    return pd.concat(out, ignore_index=True)
+
+
+def _sct_kernel(pdf: pd.DataFrame, *args, **kwargs) -> pd.DataFrame:
+    """One cell's rows (no cell key): the partition kernel's one-cell
+    case. Arguments as ``_Params``."""
+    return _sct_cells(pdf, [np.arange(len(pdf))], _Params(*args, **kwargs))
+
+
+def _sct_partition(pdf: pd.DataFrame, p: _Params) -> pd.DataFrame:
+    """One partition of halo rows: split by cell key ``_cx``/``_cy``/
+    ``_cz`` (rows keep their arrival order within a cell), drop cells with
+    no core row, and run every remaining cell through one kernel call."""
+    keys = np.stack([pdf[c].to_numpy() for c in ("_cx", "_cy", "_cz")], axis=1)
+    order = np.lexsort(keys.T[::-1])  # stable: arrival order within a cell
+    keys = keys[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (keys[1:] != keys[:-1]).any(axis=1)
+    core = pdf["_score"].to_numpy(dtype=bool)
+    cells = [
+        rows for rows in np.split(order, np.flatnonzero(first)[1:]) if core[rows].any()
+    ]
+    return _sct_cells(pdf, cells, p)
 
 
 def sct(
@@ -257,21 +349,24 @@ def sct(
         {s[1] for s in (pos_s, neg_s, eps2_s) if s[0] == "col"}
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _sct_kernel(
-            pdf,
-            num_min,
-            num_max,
-            inner_radius,
-            outer_radius,
-            num_min_prof,
-            min_elev_diff,
-            min_horizontal_scale,
-            vertical_scale,
-            pos_s,
-            neg_s,
-            eps2_s,
-        )
+    params = _Params(
+        num_min,
+        num_max,
+        inner_radius,
+        outer_radius,
+        num_min_prof,
+        min_elev_diff,
+        min_horizontal_scale,
+        vertical_scale,
+        pos_s,
+        neg_s,
+        eps2_s,
+    )
+
+    def kernel(batches):
+        frames = list(batches)  # an empty partition still makes the call
+        if frames:
+            yield _sct_partition(pd.concat(frames, ignore_index=True), params)
 
     def one_round(df: DataFrame) -> DataFrame:
         pts = with_ecef(df.where(F.col(flag_col) == GOOD), lat_col, lon_col)
@@ -291,7 +386,7 @@ def sct(
             F.col("z").alias("_sz"),
             *[F.col(c).cast("double").alias(c) for c in band_cols],
         )
-        verdicts = halo(base, outer_radius).groupBy("_cx", "_cy", "_cz").applyInPandas(
+        verdicts = halo(base, outer_radius).repartition("_cx", "_cy", "_cz").mapInPandas(
             kernel, schema="_sid long, _sct_flag int, prob_gross_error double"
         )
         verdicts = verdicts.select(

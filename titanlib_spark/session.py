@@ -34,9 +34,12 @@ def spread_small_input(df, min_parts: int | None = None):
     The degeneracy test reads the scan's FILE LISTING (split count
     replayed from total bytes + per-file open cost, the scan-packing
     formula) instead of df.rdd.getNumPartitions(), which forces a full
-    analyze+optimize+toRdd pass driver-side per call (rule 32). Frames
-    with no backing files (createDataFrame, generated data) fall back to
-    the rdd probe — they are small by construction in every call site."""
+    analyze+optimize+toRdd pass driver-side per call (rule 32). Each size
+    comes from the Hadoop FileSystem of the file's URI, so any scheme the
+    scan reads (and URI-escaped local paths) is sized the way the scan
+    sizes it. Frames with no backing files (createDataFrame, generated
+    data) or a file the FileSystem cannot stat fall back to the rdd
+    probe — they are small by construction in every call site."""
     spark = df.sparkSession
     sc = spark.sparkContext
     target = min_parts or sc.defaultParallelism
@@ -45,23 +48,24 @@ def spread_small_input(df, min_parts: int | None = None):
     except Exception:
         files = []
     if files:
-        import os
-
         max_pb = _size_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
         open_cost = _size_bytes(
             spark.conf.get("spark.sql.files.openCostInBytes", "4m")
         )
+        from py4j.protocol import Py4JError
+
+        jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
         total = 0
         for f in files:
-            p = f[7:] if f.startswith("file://") else f
             try:
-                total += os.path.getsize(p) + open_cost
-            except OSError:
-                # remote/unlistable storage: fall back to the rdd probe
+                path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
+                size = path.getFileSystem(conf).getFileStatus(path).getLen()
+            except Py4JError:
                 total = None
                 break
+            total += size + open_cost
         if total is not None:
             est_splits = max(1, -(-total // max_pb))
             return df.repartition(target) if est_splits < target else df

@@ -251,7 +251,6 @@ def embedding_near_dup_pairs(
     agree on ~2/3 of random planes, so the gate prunes weakly; tighten
     with more planes (and more tables for recall) for real near-dup
     thresholds >= 0.8."""
-    @F.arrow_udf("double")
     def _pair_cos(va: pa.Array, vb: pa.Array) -> pa.Array:
         cos, keep = np.zeros(len(va)), np.zeros(len(va), dtype=bool)
         # the Column cosine() scores two vectors of one length, whatever
@@ -263,10 +262,15 @@ def embedding_near_dup_pairs(
             cos[both], keep[both] = c[both], live[both]
         return pa.array(cos, mask=~keep)
 
+    # the threshold filter reads the UDF's output: nondeterministic keeps
+    # the optimizer from evaluating it below the pushed filter AND in the
+    # projection (rule 34)
+    pair_cos = F.arrow_udf(_pair_cos, "double").asNondeterministic()
+
     def verified(joined: DataFrame) -> DataFrame:
         sim = F.col("cosine_sim")
         return (
-            joined.withColumn("cosine_sim", _pair_cos(F.col("_va"), F.col("_vb")))
+            joined.withColumn("cosine_sim", pair_cos(F.col("_va"), F.col("_vb")))
             .where((sim >= float(threshold)) & ~F.isnan(sim))
             .select("id_a", "id_b", "cosine_sim")
         )
