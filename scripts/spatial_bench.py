@@ -14,7 +14,9 @@ Reference single-core baselines (BASELINE.md):
   sct                1e3 obs / 2.94 s  = 340 obs/s (1e3-density box)
 
 Usage: python scripts/spatial_bench.py [--sizes 100000,1000000] [--cpus 32]
-Appends a results block to BENCH_SCALING.md and prints one JSON line.
+Appends a results block to BENCH_SCALING.md and prints one JSON line; each
+op and size reports its flagged row count and an order-free (id, flags)
+digest, so two runs flagged the same rows iff both match.
 """
 
 from __future__ import annotations
@@ -114,23 +116,38 @@ def ref_stations(spark, n: int, kind: str, seed: int = 1000):
     return spark.createDataFrame(pdf).repartition(64).localCheckpoint(eager=True)
 
 
-def timed(spark, df_factory, fn) -> float:
+def flag_digest(out) -> tuple[int, str]:
+    """(flagged rows, order-free digest of their (id, flags)) in one job:
+    two runs flagged the same rows iff both match (up to a 64-bit hash
+    collision)."""
+    from pyspark.sql import functions as F
+
+    r = (
+        out.where(F.col("flags") != 0)
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.bit_xor(F.xxhash64("id", "flags")).alias("h"))
+        .first()
+    )
+    return r["n"], f"{(r['h'] or 0) & (2**64 - 1):016x}"
+
+
+def timed(spark, df_factory, fn) -> tuple[float, tuple[int, str]]:
     """Best-of-2 steady state: the first run pays one-time JVM JIT/codegen
     that a long-lived cluster amortizes (same policy as bench.py); storage
-    is cleaned between runs so measurements don't poison each other."""
+    is cleaned between runs so measurements don't poison each other.
+    Returns (best wall, the last run's `flag_digest` of fn's output)."""
     best = float("inf")
     for _ in range(2):
         df = df_factory()
         t0 = time.time()
-        fn(df)
+        flagged = flag_digest(fn(df))
         best = min(best, time.time() - t0)
         _drop_dead_blocks(df.sparkSession)
-    return best
+    return best, flagged
 
 
-def run_ops(spark, n: int, ops: list[str]) -> dict[str, float]:
-    from pyspark.sql import functions as F
-
+def run_ops(spark, n: int, ops: list[str]) -> dict[str, tuple]:
+    """op -> (best wall, (flagged rows, flag digest), rows timed)."""
     from titanlib_spark.operators.buddy_check import buddy_check
     from titanlib_spark.operators.buddy_event_check import buddy_event_check
     from titanlib_spark.operators.isolation_check import isolation_check
@@ -140,36 +157,35 @@ def run_ops(spark, n: int, ops: list[str]) -> dict[str, float]:
     res = {}
     if "isolation" in ops:
         # reference tests/benchmark.py:39
-        res["isolation_check"] = timed(
+        res["isolation_check"] = (*timed(
             spark, mk,
-            lambda df: isolation_check(df, num_min=15, radius=3000.0)
-            .where(F.col("flags") != 0).count(),
-        )
+            lambda df: isolation_check(df, num_min=15, radius=3000.0),
+        ), n)
     if "buddy" in ops:
         # reference tests/benchmark.py:33-35
-        res["buddy_check"] = timed(
+        res["buddy_check"] = (*timed(
             spark, mk,
             lambda df: buddy_check(
                 df, radius=10000.0, num_min=10, threshold=0.3,
                 max_elev_diff=100.0, elev_gradient=0.0, min_std=1.0,
                 num_iterations=1,
-            ).where(F.col("flags") != 0).count(),
-        )
+            ),
+        ), n)
     if "buddy_event" in ops:
         # reference tests/benchmark.py:36-38
-        res["buddy_event_check"] = timed(
+        res["buddy_event_check"] = (*timed(
             spark, mk,
             lambda df: buddy_event_check(
                 df, radius=10000.0, num_min=10, event_threshold=0.2,
                 threshold=0.1, max_elev_diff=100.0, num_iterations=1,
-            ).where(F.col("flags") != 0).count(),
-        )
+            ),
+        ), n)
     if "sct_resistant" in ops:
         # reference tests/sct_resistant_test.py:50+ (N=5000 config,
         # constant-density scaled; Theil-Sen background, per-row bands)
         from titanlib_spark.operators import sct_resistant
 
-        res["sct_resistant"] = timed(
+        res["sct_resistant"] = (*timed(
             spark, lambda: ref_stations(spark, n, "resistant"),
             lambda df: sct_resistant(
                 df, background_elab_type="vertical_profile_theil_sen",
@@ -180,13 +196,13 @@ def run_ops(spark, n: int, ops: list[str]) -> dict[str, float]:
                 vertical_scale=600.0, value_mina="mina", value_maxa="maxa",
                 value_minv="minv", value_maxv="maxv", eps2=0.5,
                 tpos=3.0, tneg=3.0, basic=False,
-            ).where(F.col("flags") != 0).count(),
-        )
+            ),
+        ), n)
     if "sct_dual" in ops:
         # reference tests/sct_dual_test.py:11-50 (N=100000 config)
         from titanlib_spark.operators import sct_dual
 
-        res["sct_dual"] = timed(
+        res["sct_dual"] = (*timed(
             spark, lambda: ref_stations(spark, n, "dual"),
             lambda df: sct_dual(
                 df, event_threshold=0.1, condition="Gt",
@@ -195,19 +211,19 @@ def run_ops(spark, n: int, ops: list[str]) -> dict[str, float]:
                 num_iterations=100, min_horizontal_scale=500.0,
                 max_horizontal_scale=10000.0, kth_closest=3,
                 vertical_scale=600.0,
-            ).where(F.col("flags") != 0).count(),
-        )
+            ),
+        ), n)
     if "sct" in ops:
         # reference tests/benchmark.py:40-53 (1e3-per-degree-box density)
         res["sct"] = (
-            timed(
+            *timed(
                 spark, lambda: stations(spark, n // 10, density_ref_n=1e3),
                 lambda df: sct(
                     df, num_min=10, num_max=50, inner_radius=5000.0,
                     outer_radius=50000.0, num_iterations=1, num_min_prof=50,
                     min_elev_diff=100.0, min_horizontal_scale=10000.0,
                     vertical_scale=200.0, pos=4.0, neg=4.0, eps2=0.5,
-                ).where(F.col("flags") != 0).count(),
+                ),
             ),
             n // 10,
         )
@@ -271,11 +287,13 @@ def main() -> None:
         r = run_ops(spark, n, ops)
         out = {}
         for op, v in r.items():
-            sec, rows = v if isinstance(v, tuple) else (v, n)
+            sec, (n_flagged, digest), rows = v
             ref = REF_OBS_PER_SEC[op]
             out[op] = {
                 "sec": round(sec, 2),
                 "rows": rows,
+                "flagged": n_flagged,
+                "flag_digest": digest,
                 "rows_per_sec": round(rows / sec, 1),
                 "vs_ref_1core": round((rows / sec) / ref, 2) if ref else None,
             }
@@ -297,15 +315,17 @@ def main() -> None:
             for op, d in out.items():
                 rows_md.append(
                     f"| {op} | {int(n):,} | {d['rows']:,} | {d['sec']}s "
-                    f"| {d['rows_per_sec']:,.0f} | {d['vs_ref_1core']}x |"
+                    f"| {d['rows_per_sec']:,.0f} | {d['vs_ref_1core']}x "
+                    f"| {d['flagged']:,} | `{d['flag_digest']}` |"
                 )
         block = (
             f"\n## Spatial-family scale bench ({stamp}, local[{args.cpus}])\n\n"
             "Reference configs (tests/benchmark.py), constant density. "
             "`vs ref` = our rows/s over the reference's published\n"
             "single-core rows/s (15.6k buddy / 17.5k isolation / 340 sct).\n\n"
-            "| op | n stations | rows timed | wall | rows/s | vs ref 1-core |\n"
-            "|---|---|---|---|---|---|\n" + "\n".join(rows_md) + "\n"
+            "| op | n stations | rows timed | wall | rows/s | vs ref 1-core "
+            "| flagged | flag digest |\n"
+            "|---|---|---|---|---|---|---|---|\n" + "\n".join(rows_md) + "\n"
         )
         with open(os.path.join(REPO, "BENCH_SCALING.md"), "a") as f:
             f.write(block)

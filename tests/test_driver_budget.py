@@ -4,7 +4,8 @@ A checkpoint or a fixpoint count is taken only where its result can change
 the loop's control flow (flags.iterate_flags): one iteration takes
 neither, the last permitted round stays lazy, and early stop still
 returns the flags the eager per-round loop returned. The SCT family's
-three-phase driver reads each phase-1 delta with one aggregate.
+three-phase driver reads each phase-1 delta with one aggregate. The
+perplexity outlier stage runs on the same loop.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from pyspark.sql.classic.dataframe import DataFrame
 from test_sct_resistant import _grid_df
 from titanlib_spark.flags import BAD, GOOD
 from titanlib_spark.operators import buddy_check, fgt_spatial, sct, sct_dual, sct_resistant
+from titanlib_spark.webtext.perplexity import perplexity_outlier_check
 
 # the reference's 10-station Cartesian line (tests/buddy_check_test.py)
 BUDDY_VALUES = [0, 0, 0, 0, 0, 0, 0, 0, 0.1, 1]
@@ -185,6 +187,61 @@ def test_sct_family_reads_each_phase1_delta_once(spark, op, kw, n_jobs, n_bad):
     assert len(bad) == n_bad and bad <= planted
     assert all(f == GOOD for i, f in flags.items() if i not in bad)
     assert jobs == n_jobs
+
+
+# one host, twelve ordinary scores and one far outlier: round 1 flags the
+# outlier, round 2 flags nothing new
+PPL_SCORES = [1.0 + 0.1 * k for k in range(12)] + [50.0]
+PPL_KW = dict(group_col="host", threshold=6.0, num_min=3, id_col="id")
+
+
+def ppl_frame(spark):
+    return spark.createDataFrame(
+        [(i, "a.example", s) for i, s in enumerate(PPL_SCORES)],
+        "id long, host string, ppl double",
+    )
+
+
+def test_ppl_single_iteration_takes_no_checkpoint_or_count(spark, count_calls):
+    before = _persistent_rdd_ids(spark)
+    out = perplexity_outlier_check(ppl_frame(spark), num_iterations=1, **PPL_KW)
+    assert flags_of(out) == [0] * 12 + [1]
+    assert count_calls == []
+    # no new persistent RDD; the JVM keeps that registry with weak values,
+    # so an earlier test's unreferenced checkpoint may drop out meanwhile
+    assert _persistent_rdd_ids(spark) <= before
+
+
+def test_ppl_early_stop_counts_once_per_round(spark, count_calls):
+    out = perplexity_outlier_check(ppl_frame(spark), num_iterations=5, **PPL_KW)
+    flags = flags_of(out)
+    # pre-loop total + one count after each of the two rounds run
+    assert len(count_calls) == 3
+    # the eager loop: one materialized round at a time until nothing moves
+    df = ppl_frame(spark)
+    eager = None
+    while True:
+        df = spark.createDataFrame(
+            perplexity_outlier_check(df, num_iterations=1, **PPL_KW).collect(),
+            "id long, host string, ppl double, flags int",
+        )
+        if flags_of(df) == eager:
+            break
+        eager = flags_of(df)
+    assert flags == eager == [0] * 12 + [1]
+
+
+def test_ppl_host_stats_join_broadcasts_over_a_checkpoint(spark):
+    # round 2 reads round 1's checkpoint, which has no size estimate, so
+    # the initial plan sort-merges on the host; AQE reads the host stats'
+    # real size off their shuffle and broadcasts them, so no hint is given
+    out = perplexity_outlier_check(ppl_frame(spark), num_iterations=2, **PPL_KW)
+    assert [r.flags for r in sorted(out.collect())] == [0] * 12 + [1]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
+    assert final.count("BroadcastHashJoin") == 2  # host stats + delta
 
 
 def test_session_debugging_off_and_ansi_errors_keep_their_class(spark):

@@ -74,22 +74,6 @@ def chord_dist_sq(
     return dx * dx + dy * dy + dz * dz
 
 
-def great_circle_dist(
-    lat1: Column, lon1: Column, lat2: Column, lon2: Column
-) -> Column:
-    """Great-circle distance (reference src/util.cpp:89-112, R=6.378137e6)."""
-    lat1r, lon1r = F.radians(lat1), F.radians(lon1)
-    lat2r, lon2r = F.radians(lat2), F.radians(lon2)
-    ratio = (
-        F.cos(lat1r) * F.cos(lon1r) * F.cos(lat2r) * F.cos(lon2r)
-        + F.cos(lat1r) * F.sin(lon1r) * F.cos(lat2r) * F.sin(lon2r)
-        + F.sin(lat1r) * F.sin(lat2r)
-    )
-    # clamp for float noise at ratio ~ 1.0 (identical points)
-    ratio = F.least(F.greatest(ratio, F.lit(-1.0)), F.lit(1.0))
-    return F.acos(ratio) * F.lit(6.378137e6)
-
-
 def calc_distance_fast(
     lat1: Column, lon1: Column, lat2: Column, lon2: Column,
     coord_type: str = "geodetic",
@@ -429,40 +413,6 @@ def _neighbor_key_sums(
         .drop("_q")
     )
     return df.join(sums, on=key, how="left")
-
-
-def knn_pairs(
-    df: DataFrame,
-    k: int,
-    search_radius: float,
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    payload_cols: tuple[str, ...] = (),
-    include_self: bool = False,
-    coord_type: str = "geodetic",
-) -> DataFrame:
-    """k nearest neighbors per point among those within `search_radius`.
-
-    The reference's R-tree kNN (src/kdtree.cpp:105-126) is unbounded; a
-    distributed engine needs a candidate radius to bound the join. Ties on
-    distance break deterministically by neighbor id. Returns pair rows with
-    `rank` 1..k.
-    """
-    from pyspark.sql import Window
-
-    pairs = neighbor_pairs(
-        df,
-        search_radius,
-        id_col=id_col,
-        lat_col=lat_col,
-        lon_col=lon_col,
-        payload_cols=payload_cols,
-        include_self=include_self,
-        coord_type=coord_type,
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("dist").asc(), F.col(f"n_{id_col}").asc())
-    return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def _asym_radius_pairs(

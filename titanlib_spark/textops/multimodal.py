@@ -314,11 +314,6 @@ def _jpeg_huff_table(counts: bytes, symbols: bytes) -> tuple[list, list]:
     return table
 
 
-def _jpeg_extend(v: int, s: int) -> int:
-    """DC/AC value from its s magnitude bits (T.81 RECEIVE/EXTEND)."""
-    return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
-
-
 def decode_jpeg(payload: bytes) -> np.ndarray | None:
     """Real decoder for baseline sequential JPEG (SOF0, 8-bit, Huffman):
     pure python/numpy — marker walk, canonical Huffman entropy decode,

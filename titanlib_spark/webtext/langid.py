@@ -83,12 +83,3 @@ def langid(text_col: str | Column = "text") -> Column:
     """struct(lang, score) column for a text column."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return _langid_udf(c)
-
-
-def with_langid(df, text_col: str = "text", out_prefix: str = "pred_"):
-    tmp = df.withColumn("_lid", langid(text_col))
-    return (
-        tmp.withColumn(f"{out_prefix}lang", F.col("_lid.lang"))
-        .withColumn(f"{out_prefix}lang_score", F.col("_lid.score"))
-        .drop("_lid")
-    )

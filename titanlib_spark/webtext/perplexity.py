@@ -25,10 +25,14 @@ hash + KenLM-style perplexity scorer flags outlier documents"). Two parts:
    artifact of overlapping neighborhoods; host groups are disjoint, so
    batch rejection per group converges to the same fixpoint).
 
-Plan shape per iteration: one groupBy(host) exact-percentile aggregation
-(map-side partial), one broadcast of the tiny stats table back — no
-row-explosion joins, no Python in the loop (the scorer UDF runs once,
-before the loop).
+Plan shape per round (rounds run on :func:`titanlib_spark.flags.iterate_flags`,
+which takes a lazy checkpoint and one count between rounds): one
+conditional rollup(host) of exact percentiles over the GOOD scored rows,
+which Spark runs as a per-host and a global map-side-partial aggregation;
+the host stats join back on the host (broadcast while small, a shuffle
+join beyond) and the one global row attaches by a broadcast nested-loop
+join. No row-explosion joins, no Python in the loop (the scorer UDF runs
+once, before it).
 """
 
 from __future__ import annotations
@@ -39,7 +43,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from titanlib_spark.flags import BAD, GOOD, apply_check_flags, ensure_flags
+from titanlib_spark.flags import (
+    BAD,
+    GOOD,
+    apply_check_flags,
+    ensure_flags,
+    iterate_flags,
+)
 from titanlib_spark.webtext.lexicon import CONTENT_WORDS, LANGS, STOPWORDS
 
 _ALPHABET = "abcdefghijklmnopqrstuvwxyz .\n?"  # '?' = out-of-alphabet bucket
@@ -98,177 +108,6 @@ def perplexity(text_col: str | Column = "text",
     return _ppl_udf(t, lg)
 
 
-def outlier_fixpoint(
-    slim: DataFrame,
-    group_col: str = "host",
-    threshold: float = 6.0,
-    num_min: int = 10,
-    num_iterations: int = 5,
-    ppl_col: str = "ppl",
-    flag_col: str = "flags",
-    valid_max: float | None = None,
-    delta_col: Column | None = None,
-) -> tuple[DataFrame, int | None]:
-    """Run the robust-z outlier fixpoint loop over a prepared slim frame.
-
-    `slim` must carry (group_col, ppl_col, flag_col) plus a `_flag0`
-    snapshot of the pre-loop flag (the delta join-back key) — and may
-    carry any extra narrow columns (e.g. a row id, a dup verdict), which
-    ride through untouched. It should NOT be checkpointed yet: the loop
-    coalesces and lazily checkpoints it so materialization folds into the
-    first meta job.
-
-    `delta_col` (a boolean Column over slim's columns) widens the
-    join-back delta definition beyond `flag != _flag0`; its row count is
-    carried through the rollup FOR FREE, so the caller's broadcast-vs-
-    shuffle decision needs no separate count job. Returns
-    (final_slim, n_delta) — n_delta is None only when the loop exhausted
-    `num_iterations` without reaching the fixpoint (the last verdict was
-    never rolled up; count the delta yourself on that rare path)."""
-    # slim rows are a handful of narrow columns: coalesce to a fraction of
-    # the core count so every loop pass launches few, non-trivial tasks
-    # (coalesce is narrow — no shuffle); the checkpoint is lazy so
-    # materialization folds into the first consuming job. The coalesce
-    # target is CORES-proportional, not input-proportional (slim bytes/row
-    # ~50, so even a 10^10-doc corpus fits executor memory at cores/4
-    # partitions on a real cluster); reading slim.rdd.getNumPartitions()
-    # instead would force a full analyze+optimize+physical-plan pass
-    # driver-side (rule-26 driver-latency class, visible in cProfile).
-    #
-    # localCheckpoint, NOT persist: persist was A/B'd (r05) and LOST in
-    # honest scoped-cleanup measurement (qc 4.5-5.5s vs 2.9-3.3s) — each
-    # persist() pays CacheManager canonicalization of the big UDF plan
-    # and the cache write pays columnar encode of every batch, while
-    # unscoped-warm-up runs that made persist LOOK 1.7s-fast were silently
-    # reusing the warm run's still-registered caches across trials.
-    cores = slim.sparkSession.sparkContext.defaultParallelism
-    is_delta = F.col(flag_col) != F.col("_flag0")
-    if delta_col is not None:
-        is_delta = is_delta | delta_col
-    slim = slim.coalesce(max(8, cores // 4)).localCheckpoint(eager=False)
-    num_iterations = int(num_iterations)
-
-    # ONE driver job per iteration: the per-host rollup runs over the FULL
-    # slim frame with conditional aggregates (percentile/count ignore the
-    # non-good rows via when(); they match the filtered-input values
-    # exactly) and carries the frame-wide bad-row count, so fixpoint
-    # detection needs no separate count job — convergence is decided at
-    # the TOP of the next pass from the rollup it runs anyway. Checkpoints
-    # are lazy: iteration N's meta job materializes iteration N-1's
-    # verdict frame transitively. Rule 17 bookkeeping keeps a one-pass
-    # lag: a round's blocks are freed right after the next round's meta
-    # job materializes their successor.
-    good_cond = (F.col(flag_col) == GOOD) & F.col(ppl_col).isNotNull()
-    # the rollup grand-total row is identified by grouping()==1, NOT by
-    # group_col IS NULL: a corpus with NULL hosts (host_of(url) is NULL
-    # when url is NULL) emits a *detail* group whose key is also NULL, and
-    # keying on NULL would blend its fields with the grand total's
-    g_total = F.col("_gt") == 1
-    prev_bad = None
-    n_hosts = None  # host cardinality is loop-invariant: read it once
-    n_delta: int | None = None
-    pending_free: list[DataFrame] = []
-    for _it in range(num_iterations):
-        # per-host stats AND the global background (the rollup grand-total
-        # row) — the reference's global->outer hierarchy
-        # (src/util.cpp:232-295) in a single shuffle
-        stats = (
-            slim.rollup(group_col)
-            .agg(
-                F.grouping(group_col).alias("_gt"),
-                F.percentile(F.when(good_cond, F.col(ppl_col)), F.lit(0.5)).alias(
-                    "_h_mu"
-                ),
-                (
-                    F.percentile(F.when(good_cond, F.col(ppl_col)), F.lit(0.75))
-                    - F.percentile(F.when(good_cond, F.col(ppl_col)), F.lit(0.25))
-                ).alias("_h_iqr"),
-                F.count(F.when(good_cond, F.lit(1))).alias("_h_n"),
-                F.sum((F.col(flag_col) != GOOD).cast("long")).alias("_n_bad"),
-                F.sum(is_delta.cast("long")).alias("_n_del"),
-            )
-        )
-        # NOT checkpointed: stats has two consumers (the meta agg and the
-        # host_stats join), so the rollup executes twice per iteration —
-        # but it is ONE map-side-combined shuffle over the slim
-        # checkpoint (~50ms here), far cheaper than the full driver-side
-        # analyze+optimize+toRdd pass a localCheckpoint costs per call
-        # (~0.3s, cProfile r05; six such calls were half the 20k-doc
-        # pipeline wall). It stays distributed either way: host count is
-        # unbounded at web scale.
-        meta = stats.agg(
-            F.max(F.when(g_total, F.col("_h_mu"))).alias("g_mu"),
-            F.max(F.when(g_total, F.col("_h_iqr"))).alias("g_iqr"),
-            F.max(F.when(g_total, F.col("_h_n"))).alias("g_n"),
-            F.max(F.when(g_total, F.col("_n_bad"))).alias("n_bad"),
-            F.max(F.when(g_total, F.col("_n_del"))).alias("n_del"),
-            F.count(
-                F.when(~g_total & F.col(group_col).isNotNull(), F.lit(1))
-            ).alias("n_hosts"),
-        ).first()
-        n_delta = meta["n_del"]
-        # the meta job materialized this round's stats and (transitively)
-        # the previous round's verdict frame — their ancestors are dead now
-        for fr in pending_free:
-            fr.unpersist()
-        pending_free = []
-        if meta["g_n"] is None or meta["g_n"] == 0:
-            break
-        if prev_bad is not None and meta["n_bad"] == prev_bad:
-            break  # last verdict changed nothing: fixpoint
-        prev_bad = meta["n_bad"]
-        g_mu, g_iqr, g_n = meta["g_mu"], meta["g_iqr"], meta["g_n"]
-        # detail rows only (NULL-host docs fall back to the global
-        # background: a NULL equi-join key never matches)
-        host_stats = stats.where(
-            (F.col("_gt") == 0) & F.col(group_col).isNotNull()
-        ).drop("_gt")
-
-        # checkpointed frames carry no size stats, so AQE can't see that
-        # host_stats is tiny — hint broadcast explicitly while the host
-        # cardinality is broadcastable (the common case: #hosts << #docs);
-        # beyond that fall back to a shuffle join. Cardinality is read
-        # once: hosts never appear mid-loop, the plan choice is
-        # loop-invariant
-        if n_hosts is None:
-            n_hosts = meta["n_hosts"]
-        if n_hosts <= 2_000_000:
-            host_stats = F.broadcast(host_stats)
-        joined = slim.join(host_stats, on=group_col, how="left")
-        use_host = F.col("_h_n").isNotNull() & (F.col("_h_n") >= int(num_min))
-        mu = F.when(use_host, F.col("_h_mu")).otherwise(F.lit(float(g_mu)))
-        iqr = F.when(use_host, F.col("_h_iqr")).otherwise(F.lit(float(g_iqr or 0.0)))
-        n = F.when(use_host, F.col("_h_n")).otherwise(F.lit(int(g_n)))
-        denom = iqr + iqr / F.sqrt(n.cast("double"))
-        # degenerate spread (IQR=0): fall back to a fixed floor so wild
-        # outliers are still caught (reference clamps scales the same way,
-        # e.g. min_horizontal_scale src/sct_resistant.cpp:882-912)
-        z = (F.col(ppl_col) - mu) / F.when(denom > 1e-9, denom).otherwise(F.lit(0.25))
-        verdict = F.col(ppl_col).isNotNull() & (z > float(threshold))
-        if valid_max is not None:
-            verdict = verdict & (F.col(ppl_col) > float(valid_max))
-        new_slim = apply_check_flags(
-            joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
-        ).drop("_h_mu", "_h_iqr", "_h_n", "_n_bad", "_n_del")
-        n_delta = None  # stale until the next meta job rolls the verdict up
-        last = _it == num_iterations - 1
-        new_slim = new_slim.localCheckpoint(eager=last)
-        if last:
-            # no later meta job will materialize this checkpoint: do it
-            # eagerly so the parents can be freed NOW — otherwise the
-            # final round's blocks (plus the dead stats frame) persist
-            # for the life of the JVM on every exhausted-loop call
-            slim.unpersist()
-            pending_free = []
-        else:
-            # slim still backs the lazy new_slim: free it only after
-            # the next pass's meta job materializes its successor
-            pending_free = [slim]
-        slim = new_slim
-
-    return slim, n_delta
-
-
 def perplexity_outlier_check(
     df: DataFrame,
     group_col: str = "host",
@@ -290,29 +129,71 @@ def perplexity_outlier_check(
     valid band vouches for the row — it is never a rejection candidate,
     however extreme its z against an unusually tight neighborhood).
 
-    The fixpoint loop (see :func:`outlier_fixpoint`) runs over a slim
-    (id, group, ppl, flag) projection — materialized once — so
-    per-iteration checkpoints never re-serialize the wide page payload
-    (html/text); the accumulated verdicts join back onto the full frame
-    exactly once at the end."""
+    The rounds run on the shared fixpoint loop (:func:`iterate_flags`)
+    over a slim (id, group, ppl, flag) projection, so its checkpoints
+    never re-serialize the wide page payload (html/text); the rows the
+    loop newly flagged join back onto the full frame once at the end."""
     df = ensure_flags(df, flag_col)
+    # slim rows are a handful of narrow columns: coalesce to a fraction of
+    # the core count so every round launches few, non-trivial tasks
+    # (coalesce is narrow — no shuffle). The target is CORES-proportional:
+    # reading slim.rdd.getNumPartitions() would force a full driver-side
+    # plan pass (rule 32).
+    cores = df.sparkSession.sparkContext.defaultParallelism
     slim = df.select(
         F.col(id_col).alias("_pid"),
         F.col(group_col),
         F.col(ppl_col),
         F.col(flag_col),
         F.col(flag_col).alias("_flag0"),  # pre-loop flag -> the delta
+    ).coalesce(max(8, cores // 4))
+    good = F.when(
+        (F.col(flag_col) == GOOD) & F.col(ppl_col).isNotNull(), F.col(ppl_col)
     )
-    slim, _ = outlier_fixpoint(
-        slim,
-        group_col=group_col,
-        threshold=threshold,
-        num_min=num_min,
-        num_iterations=num_iterations,
-        ppl_col=ppl_col,
-        flag_col=flag_col,
-        valid_max=valid_max,
-    )
+
+    def one_round(slim: DataFrame) -> DataFrame:
+        # per-host stats AND the global background (the rollup grand-total
+        # row, the reference's global->outer hierarchy src/util.cpp:232-295)
+        # from one rollup; percentile/count skip non-GOOD rows via when().
+        # The grand total is grouping()==1, not a NULL key: NULL-host docs
+        # form a detail group of their own.
+        stats = slim.rollup(group_col).agg(
+            F.grouping(group_col).alias("_gt"),
+            F.percentile(good, F.lit(0.5)).alias("_mu"),
+            (
+                F.percentile(good, F.lit(0.75)) - F.percentile(good, F.lit(0.25))
+            ).alias("_iqr"),
+            F.count(good).alias("_n"),
+        )
+        # no broadcast hint: host count is unbounded. Over a checkpoint the
+        # planner sees no size and plans a sort-merge join, but AQE reads
+        # the host stats' real size off their shuffle and broadcasts them
+        # while small. NULL-host docs never match: global background.
+        hosts = stats.where((F.col("_gt") == 0) & F.col(group_col).isNotNull())
+        glob = stats.where(F.col("_gt") == 1).select(
+            *[F.col(c).alias("_g" + c) for c in ("_mu", "_iqr", "_n")]
+        )
+        joined = slim.join(hosts.drop("_gt"), on=group_col, how="left").join(
+            F.broadcast(glob), how="left"
+        )
+        use_host = F.col("_n") >= int(num_min)
+        mu, iqr, n = (
+            F.when(use_host, F.col(c)).otherwise(F.col("_g" + c))
+            for c in ("_mu", "_iqr", "_n")
+        )
+        denom = iqr + iqr / F.sqrt(n.cast("double"))
+        # degenerate spread (IQR=0): fall back to a fixed floor so wild
+        # outliers are still caught (reference clamps scales the same way,
+        # e.g. min_horizontal_scale src/sct_resistant.cpp:882-912)
+        z = (F.col(ppl_col) - mu) / F.when(denom > 1e-9, denom).otherwise(F.lit(0.25))
+        verdict = F.col(ppl_col).isNotNull() & (z > float(threshold))
+        if valid_max is not None:
+            verdict = verdict & (F.col(ppl_col) > float(valid_max))
+        return apply_check_flags(
+            joined, F.when(verdict, BAD).otherwise(GOOD), flag_col
+        ).select(*slim.columns)
+
+    slim = iterate_flags(slim, one_round, num_iterations, flag_col)
     # join back only the DELTA — rows the loop newly flagged. Outliers are
     # rare by construction, so this side broadcasts at any corpus size and
     # the wide frame never reshuffles (a full verdict join would move the

@@ -17,7 +17,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,8 +55,3 @@ def _scrub_udf(text: pd.Series) -> pd.Series:
 def scrub_text(text_col: str | Column = "text") -> Column:
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return _scrub_udf(c)
-
-
-def with_scrubbed_text(df: DataFrame, text_col: str = "text",
-                       out_col: str = "scrubbed_text") -> DataFrame:
-    return df.withColumn(out_col, scrub_text(text_col))
