@@ -18,7 +18,7 @@ how they judge one circle. Each member supplies that judgment as a
   [min(mina), max(maxa)] is re-tested alone against the non-bad network:
   it can be restored, re-condemned or found isolated.
 
-**Circle sweep** (``circle_sweep``, one call per grid cell and pass). In
+**Circle sweep** (``circle_sweep``, once per grid cell and pass). In
 ascending id order, for every core observation row (``_sobs``) in the
 phase's target state:
 
@@ -51,15 +51,17 @@ score changed.
 **Spark recast.** The front end (``circle_check``) flags invalid values,
 computes the plausible range (one job, only for column-valued bands),
 projects a slim pool with ECEF coordinates once, runs the driver and
-merges flags (and, where the member reports one, the score) back. Each
-pass replicates the pool to a 27-cell ECEF halo (``halo``; cell side =
-outer_radius, so a core row's whole outer circle is in its cell's group),
-keeps only cells holding a row in the phase's target state, runs the
-sweep via ``applyInPandas`` and merges the small verdict delta with a
-broadcast join. ``localCheckpoint`` truncates lineage per pass; the
-delta is checkpointed eagerly so the kernel job runs once. Phase 1 reads
-the delta once per pass: one aggregate returns its row count and BAD
-count.
+merges flags (and, where the member reports one, the score) back. Every
+pass of every phase has one shape (``three_phase_driver``'s ``one_pass``):
+replicate the pool to a 27-cell ECEF halo (``halo``; cell side =
+outer_radius, so a core row's whole outer circle is in its cell), keep
+only cells holding a row in the phase's target state, ``repartition`` by
+cell key and make one ``mapInPandas`` call per partition, which splits
+the rows by cell (``split_cells``, shared with ``sct``) and sweeps each
+cell; left-join a broadcast of the small verdict delta onto the slim
+frame and end in a lazy ``localCheckpoint``. Phase 1 takes one count of
+the BAD rows per pass, which also materializes that checkpoint; phases 2
+and 3 take none, and phase 3's frame is read by the caller's own job.
 
 Deviation: the sequential centroid sweep is per cell rather than global,
 so live flag propagation never crosses cells within one pass. The
@@ -315,6 +317,21 @@ def _cell_key(cell_side: float):
     return [F.floor(F.col(f"_s{a}") / cs).cast("int").alias(f"_c{a}") for a in "xyz"]
 
 
+def split_cells(pdf: pd.DataFrame) -> list[np.ndarray]:
+    """Row positions of each cell (key ``_cx``/``_cy``/``_cz``) in one
+    partition of ``halo`` rows, in arrival order within a cell, leaving out
+    cells with no core row (a guaranteed kernel no-op)."""
+    keys = np.stack([pdf[c].to_numpy() for c in ("_cx", "_cy", "_cz")], axis=1)
+    order = np.lexsort(keys.T[::-1])  # stable: arrival order within a cell
+    keys = keys[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (keys[1:] != keys[:-1]).any(axis=1)
+    core = pdf["_score"].to_numpy(dtype=bool)
+    return [
+        rows for rows in np.split(order, np.flatnonzero(first)[1:]) if core[rows].any()
+    ]
+
+
 def three_phase_driver(
     pool: DataFrame,
     kernel,
@@ -326,14 +343,21 @@ def three_phase_driver(
     """Run the three-phase sweep. ``pool`` must carry
     _sid,_slat,_slon,_selev,_svalue,_sobs,_sbg,_sx,_sy,_sz plus the band
     columns; ``kernel(pdf, phase, set_flag0)`` returns (_sid,_state,score)
-    for changed core rows. Returns (id_col, _state, score) per pool row."""
+    for the changed core rows of one cell. Returns (id_col, _state, score)
+    per pool row, lazily.
+
+    Every pass (each phase-1 round, phase 2, phase 3) is ``one_pass``: one
+    Python call per partition of halo rows, a broadcast join of the
+    verdict delta and a lazy checkpoint. Phase 1 counts the BAD rows once
+    per pass, which materializes that pass's checkpoint. Phases 2 and 3
+    take no count: the next job that reads each one materializes it."""
     slim = pool.select(
         "*",
         F.lit(NA_STATE).cast("int").alias("_sstate"),
         F.lit(None).cast("double").alias("_sscore"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
 
-    def run_phase(frame: DataFrame, phase: int, set_flag0: bool) -> DataFrame:
+    def one_pass(frame: DataFrame, phase: int, set_flag0: bool) -> DataFrame:
         # ACTIVE-CELL pruning: a phase only emits verdicts for centroids in
         # its target state (phases 1/2 sweep NA rows, phase 3 re-tests BAD
         # rows; non-obs rows are never centroids) — a cell with no such
@@ -352,49 +376,43 @@ def three_phase_driver(
             F.broadcast(active), on=["_cx", "_cy", "_cz"], how="leftsemi"
         )
 
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(pdf, phase=phase, set_flag0=set_flag0)
+        def run(batches):
+            frames = list(batches)  # an empty partition still makes the call
+            if not frames:
+                return
+            pdf = pd.concat(frames, ignore_index=True)
+            cells = split_cells(pdf)
+            if cells:
+                yield pd.concat(
+                    [kernel(pdf.iloc[rows], phase=phase, set_flag0=set_flag0)
+                     for rows in cells],
+                    ignore_index=True,
+                )
 
-        return replicated.groupBy("_cx", "_cy", "_cz").applyInPandas(
+        delta = replicated.repartition("_cx", "_cy", "_cz").mapInPandas(
             run, schema="_sid long, _state int, score double"
-        ).localCheckpoint(eager=True)  # small delta; force the big job once
-
-    def merge_delta(frame: DataFrame, delta: DataFrame, empty: bool) -> DataFrame:
-        if empty:
-            # nothing changed: re-checkpointing the full frame would be a
-            # pure copy — keep the current blocks
-            delta.unpersist()
-            return frame
-        upd = delta.select(
-            F.col("_sid"),
-            F.col("_state").alias("_new_state"),
-            F.col("score").alias("_new_score"),
+        ).withColumnsRenamed({"_state": "_new_state", "score": "_new_score"})
+        return (
+            frame.join(F.broadcast(delta), on="_sid", how="left")
+            .withColumn("_sstate", F.coalesce("_new_state", "_sstate"))
+            .withColumn("_sscore", F.coalesce("_new_score", "_sscore"))
+            .drop("_new_state", "_new_score")
+            .localCheckpoint(eager=False)
         )
-        out = frame.join(F.broadcast(upd), on="_sid", how="left")
-        out = out.withColumn(
-            "_sstate", F.coalesce(F.col("_new_state"), F.col("_sstate"))
-        ).withColumn(
-            "_sscore", F.coalesce(F.col("_new_score"), F.col("_sscore"))
-        ).drop("_new_state", "_new_score")
-        out = out.localCheckpoint(eager=True)
-        # rule 17: the previous pass's blocks are dead once the merged
-        # frame is materialized — free them before the next big kernel job
-        frame.unpersist()
-        delta.unpersist()
-        return out
 
-    set_all_good = False
-    for it in range(int(num_iterations)):
-        delta = run_phase(slim, phase=1, set_flag0=(it > 0))
-        n_rows, thrown_out = delta.agg(
-            F.count(F.lit(1)), F.count(F.when(F.col("_state") == BAD, 1))
-        ).first()
-        slim = merge_delta(slim, delta, empty=n_rows == 0)
-        if thrown_out == 0:
-            set_all_good = it == 0
+    n_bad = 0
+    for it in range(num_iterations):
+        out = one_pass(slim, phase=1, set_flag0=it > 0)
+        # BAD rows stay BAD in phase 1, so an unchanged count means the
+        # pass threw nothing out
+        prev_bad, n_bad = n_bad, out.where(F.col("_sstate") == BAD).count()
+        slim.unpersist()  # rule 17: dead checkpoint blocks squeeze exec memory
+        slim = out
+        if n_bad == prev_bad:
             break
 
-    if set_all_good:
+    if num_iterations > 0 and n_bad == 0:
+        # the first pass threw nothing out: every NA row is good
         slim = slim.withColumn(
             "_sstate",
             F.when(
@@ -403,8 +421,7 @@ def three_phase_driver(
         )
     else:
         for phase in (2, 3):
-            delta = run_phase(slim, phase=phase, set_flag0=True)
-            slim = merge_delta(slim, delta, empty=delta.isEmpty())
+            slim = one_pass(slim, phase=phase, set_flag0=True)
 
     return slim.select(
         F.col("_sid").alias(id_col),

@@ -12,7 +12,8 @@ radius-overlapping points, so the distributed recast is:
 2. find connected components of the neighbor graph via iterative min-id
    label propagation (O(log diameter) shuffles),
 3. run the exact greedy sweep per component inside applyInPandas
-   (components are tiny in practice; a per-component size cap guards skew).
+   (components are tiny in practice; there is no size cap, so one huge
+   component runs in one task).
 
 `duplicate_check_exact` is the degenerate-radius case used by the webtext
 pipeline: partition by a dedup key (e.g. content hash) and keep the first
@@ -114,7 +115,6 @@ def duplicate_check_spatial(
     elev_col: str = "elev",
     order_col: str | None = None,
     flag_col: str = "flags",
-    max_component_rows: int = 100_000,
     coord_type: str = "geodetic",
 ) -> DataFrame:
     """Reference-parity greedy spatial dedup (first-wins by `order_col`,

@@ -15,8 +15,9 @@ when nothing new is flagged — src/sct.cpp:294-299):
    point within ``outer_radius`` of any core point of a cell is then
    present in that cell's group (chord distance <= arc distance);
    ``repartition`` by cell key is the one exchange;
-3. per partition (one Python call): split the rows by cell key, drop
-   cells with no core row (a guaranteed no-op), and run the reference's
+3. per partition (one Python call): split the rows by cell key and drop
+   cells with no core row, a guaranteed no-op (``_sct_phases.split_cells``,
+   shared with the SCT family's passes), and run the reference's
    per-centroid loop (src/sct.cpp:108-123) as three passes:
 
    a. per cell, a geometry sweep over its core points in id order: the
@@ -75,7 +76,7 @@ from titanlib_spark.flags import (
 )
 from titanlib_spark.functions.geo import with_ecef
 from titanlib_spark.operators._neighbors import CellNeighborhood
-from titanlib_spark.operators._sct_phases import band, halo
+from titanlib_spark.operators._sct_phases import band, halo, split_cells
 from titanlib_spark.operators.background import exact_quantile_rows, vertical_profile_batch
 from titanlib_spark.operators.range_check import is_invalid_value
 
@@ -296,19 +297,9 @@ def _sct_kernel(pdf: pd.DataFrame, *args, **kwargs) -> pd.DataFrame:
 
 
 def _sct_partition(pdf: pd.DataFrame, p: _Params) -> pd.DataFrame:
-    """One partition of halo rows: split by cell key ``_cx``/``_cy``/
-    ``_cz`` (rows keep their arrival order within a cell), drop cells with
-    no core row, and run every remaining cell through one kernel call."""
-    keys = np.stack([pdf[c].to_numpy() for c in ("_cx", "_cy", "_cz")], axis=1)
-    order = np.lexsort(keys.T[::-1])  # stable: arrival order within a cell
-    keys = keys[order]
-    first = np.ones(len(order), dtype=bool)
-    first[1:] = (keys[1:] != keys[:-1]).any(axis=1)
-    core = pdf["_score"].to_numpy(dtype=bool)
-    cells = [
-        rows for rows in np.split(order, np.flatnonzero(first)[1:]) if core[rows].any()
-    ]
-    return _sct_cells(pdf, cells, p)
+    """One partition of halo rows: run every cell that holds a core row
+    (``_sct_phases.split_cells``) through one kernel call."""
+    return _sct_cells(pdf, split_cells(pdf), p)
 
 
 def sct(

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from titanlib_spark.flags import BAD
+from titanlib_spark.webtext.checkpoint import with_salted_partition
 from titanlib_spark.webtext.pipeline import QualityFilterConfig, run_quality_pipeline
 from titanlib_spark.webtext.schema import PAGES_SCHEMA
 
@@ -202,10 +203,9 @@ def stream_quality_pipeline(
                 .withColumn("keep", F.col("keep") & ~is_xdup)
                 .drop("_xb_dup")
             )
-        out = result.withColumn(
-            "part_id",
-            F.pmod(F.xxhash64(F.col(cfg.url_col)), F.lit(int(n_parts))).cast("int"),
-        ).withColumn("batch_id", F.lit(batch_id))
+        out = with_salted_partition(result, int(n_parts), cfg.url_col).withColumn(
+            "batch_id", F.lit(batch_id)
+        )
         (
             out.select(*OUT_COLS)
             .write.mode("overwrite")

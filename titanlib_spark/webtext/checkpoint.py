@@ -81,11 +81,6 @@ def run_partitioned(
     pending = salted.where(~F.col(PART_COL).isin(*done) if done else F.lit(True))
 
     result = run_quality_pipeline(pending, cfg)
-    if "scrub_changed" not in result.columns:
-        result = result.withColumn(
-            "scrub_changed",
-            F.coalesce(F.col("scrubbed_text") != F.col(cfg.text_col), F.lit(False)),
-        )
     result = result.withColumn(
         "scrub_changed", F.coalesce(F.col("scrub_changed"), F.lit(False))
     )

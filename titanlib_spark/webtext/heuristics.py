@@ -66,23 +66,6 @@ def symbol_word_ratio(text: str | Column = "text") -> Column:
     return F.when(nw > 0, (hashes + ellipses).cast("double") / nw)
 
 
-def stops_for_lang(lang: str | Column = "pred_lang") -> Column:
-    """Per-row stopword array for the row's language (English for unknown
-    languages — conservative). IMPORTANT: when used inside a per-token
-    lambda this whole when-chain would be re-evaluated per token (HOF
-    lambdas see no subexpression elimination); always hoist it to a
-    per-row column first, as with_quality_features does."""
-    lc = _col(lang)
-    stops = F.array().cast("array<string>")
-    for lg in LANGS:
-        stops = F.when(lc == lg, F.array(*[F.lit(w) for w in STOPWORDS[lg]])).otherwise(
-            stops
-        )
-    return F.when(
-        lc.isin(*LANGS), stops
-    ).otherwise(F.array(*[F.lit(w) for w in STOPWORDS["en"]]))
-
-
 def _lit_stops(lg: str) -> Column:
     return F.array(*[F.lit(w) for w in STOPWORDS[lg]])
 
@@ -149,11 +132,11 @@ def with_quality_features(df: DataFrame, text_col: str = "text",
                           lang_col: str = "pred_lang") -> DataFrame:
     """Attach the full feature set.
 
-    Token arrays and the per-language stopword array are hoisted into a
-    first projection so each is computed once per row; the feature
-    projection then derives everything from those columns (HOF lambdas get
-    no common-subexpression elimination, so the hoist is what keeps the
-    regex/tokenize work O(tokens), not O(tokens × features))."""
+    Token arrays are hoisted into a first projection so each is computed
+    once per row; the feature projection then derives everything from
+    those columns (HOF lambdas get no common-subexpression elimination, so
+    the hoist is what keeps the regex/tokenize work O(tokens), not
+    O(tokens × features))."""
     hoisted = df.withColumns(
         {
             "_toks": tokens(text_col),
@@ -178,4 +161,4 @@ def with_quality_features(df: DataFrame, text_col: str = "text",
             "dup_line_frac": dup_line_frac(text_col),
             "dup_para_frac": dup_para_frac(text_col),
         }
-    ).drop("_toks", "_ct", "_stops")
+    ).drop("_toks", "_ct")

@@ -26,9 +26,9 @@ hash + KenLM-style perplexity scorer flags outlier documents"). Two parts:
    batch rejection per group converges to the same fixpoint).
 
 Plan shape per round (rounds run on :func:`titanlib_spark.flags.iterate_flags`,
-which takes a lazy checkpoint and one count between rounds): one
-conditional rollup(host) of exact percentiles over the GOOD scored rows,
-which Spark runs as a per-host and a global map-side-partial aggregation;
+which takes a lazy checkpoint and one count between rounds): exact
+percentiles over the GOOD scored rows, from one groupBy(host) over the
+non-NULL hosts and one keyless global aggregate (map-side partial both);
 the host stats join back on the host (broadcast while small, a shuffle
 join beyond) and the one global row attaches by a broadcast nested-loop
 join. No row-explosion joins, no Python in the loop (the scorer UDF runs
@@ -151,29 +151,31 @@ def perplexity_outlier_check(
         (F.col(flag_col) == GOOD) & F.col(ppl_col).isNotNull(), F.col(ppl_col)
     )
 
-    def one_round(slim: DataFrame) -> DataFrame:
-        # per-host stats AND the global background (the rollup grand-total
-        # row, the reference's global->outer hierarchy src/util.cpp:232-295)
-        # from one rollup; percentile/count skip non-GOOD rows via when().
-        # The grand total is grouping()==1, not a NULL key: NULL-host docs
-        # form a detail group of their own.
-        stats = slim.rollup(group_col).agg(
-            F.grouping(group_col).alias("_gt"),
-            F.percentile(good, F.lit(0.5)).alias("_mu"),
+    def robust_stats(prefix: str) -> list[Column]:
+        # percentile/count skip non-GOOD rows via when()
+        return [
+            F.percentile(good, F.lit(0.5)).alias(prefix + "_mu"),
             (
                 F.percentile(good, F.lit(0.75)) - F.percentile(good, F.lit(0.25))
-            ).alias("_iqr"),
-            F.count(good).alias("_n"),
+            ).alias(prefix + "_iqr"),
+            F.count(good).alias(prefix + "_n"),
+        ]
+
+    def one_round(slim: DataFrame) -> DataFrame:
+        # per-host stats, and the global background over every row (the
+        # reference's global->outer hierarchy src/util.cpp:232-295).
+        # No broadcast hint on the host stats: host count is unbounded.
+        # Over a checkpoint the planner sees no size and plans a sort-merge
+        # join, but AQE reads the host stats' real size off their shuffle
+        # and broadcasts them while small. NULL-host docs never match:
+        # global background.
+        hosts = (
+            slim.where(F.col(group_col).isNotNull())
+            .groupBy(group_col)
+            .agg(*robust_stats(""))
         )
-        # no broadcast hint: host count is unbounded. Over a checkpoint the
-        # planner sees no size and plans a sort-merge join, but AQE reads
-        # the host stats' real size off their shuffle and broadcasts them
-        # while small. NULL-host docs never match: global background.
-        hosts = stats.where((F.col("_gt") == 0) & F.col(group_col).isNotNull())
-        glob = stats.where(F.col("_gt") == 1).select(
-            *[F.col(c).alias("_g" + c) for c in ("_mu", "_iqr", "_n")]
-        )
-        joined = slim.join(hosts.drop("_gt"), on=group_col, how="left").join(
+        glob = slim.agg(*robust_stats("_g"))
+        joined = slim.join(hosts, on=group_col, how="left").join(
             F.broadcast(glob), how="left"
         )
         use_host = F.col("_n") >= int(num_min)
